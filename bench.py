@@ -20,7 +20,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from finance_etl_pipeline_monthly_close_dataset_spark import contract
-from finance_etl_pipeline_monthly_close_dataset_spark.session import get_spark
+from finance_etl_pipeline_monthly_close_dataset_spark.session import get_spark, graft_cpus
 
 HEADLINE = [
     "flagship_revenue_by_month",
@@ -222,7 +222,7 @@ PY_SEAM_GRACE_S = 0.8
 # 32-core base.  At 8 cores the r15 partition fix is config-identical
 # to the old shape (defaultParallelism == the old 8), so there is no
 # old-shape regression for a tighter low-core budget to catch.
-_BENCH_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 32))
+_BENCH_CPUS = graft_cpus() or os.cpu_count() or 32
 STREAM_STATE_BUDGET_S = 45.0 * max(1.0, 32.0 / max(_BENCH_CPUS, 1))
 STREAM_STATE_EXPECT_ROWS = 50_000
 # Close budgets (r14, judge r13 ask #3): t_close is the median of

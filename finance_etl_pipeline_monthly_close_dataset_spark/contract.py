@@ -3066,11 +3066,7 @@ def q_dq_exceptions_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         not_null=["o_custkey", "o_orderdate"],
         checks=[
             _isin_check("o_orderstatus", ["O", "F"]),
-            ColumnCheck(
-                "o_totalprice",
-                "less_than_or_equal_to(350000)",
-                F.col("o_totalprice") > 350000,
-            ),
+            ColumnCheck("o_totalprice", "less_than_or_equal_to(350000)", "o_totalprice > 350000"),
         ],
         unique_keys=[("o_custkey",)],
     )
@@ -3121,7 +3117,7 @@ def _sales_shaped_spec():
         not_null=["date", "invoice_id", "currency", "amount"],
         checks=[
             _isin_check("currency", ["N", "R"]),
-            ColumnCheck("amount", "less_than(0.05)", F.col("amount") >= 0.05),
+            ColumnCheck("amount", "less_than(0.05)", "amount >= 0.05D"),
         ],
     )
 
@@ -3166,15 +3162,16 @@ FROM ex GROUP BY 1, 2, 3, 4
 
 def q_dq_summary_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zero-filled per-dataset DQ summary with gate status (Q15/Q16):
-    the real dq_summary_table -- five-dataset scaffold, ERROR/WARN
-    pivot, FAIL iff errors under fail_on=ERROR -- fed from testdata
-    exceptions."""
-    from .plans.quality import add_severity, collect_exceptions, dq_summary_table
+    the real dq_count_metrics + dq_summary_table -- per-(dataset,
+    severity) counts, five-dataset scaffold, FAIL iff errors under
+    fail_on=ERROR -- fed from testdata exceptions."""
+    from .plans.quality import add_severity, collect_exceptions, dq_count_metrics, dq_summary_table
 
     ex = add_severity(
         collect_exceptions(_sales_shaped_lineitem(spark, sf_dir), _sales_shaped_spec())
     )
-    return dq_summary_table(ex, fail_on="ERROR")
+    counts = ex.agg(*dq_count_metrics()).first().asDict()
+    return dq_summary_table(spark, counts, fail_on="ERROR")
 
 
 SQL_DQ_SUMMARY_STATUS = (

@@ -86,7 +86,14 @@ class _UserSessionStats:
         reordering the TABLE-argument SELECT must not silently swap
         user and time (r15 verdict hardening).  The user column is
         ``user_id`` (fallback: first column); the time column is
-        ``us``/``ts`` when present, else the first non-user column."""
+        ``us``/``ts`` when present, else the first non-user column.  A
+        TABLE argument with fewer than two columns has no time column:
+        ValueError."""
+        if len(names) < 2:
+            raise ValueError(
+                "user session stats need a TABLE argument with a user column (user_id) "
+                f"and a time column (us or ts); got columns {list(names)}"
+            )
         user_ix = names.index("user_id") if "user_id" in names else 0
         for cand in ("us", "ts"):
             if cand in names and names.index(cand) != user_ix:

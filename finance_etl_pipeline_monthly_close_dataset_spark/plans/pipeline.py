@@ -1,30 +1,34 @@
 """End-to-end monthly-close orchestration (SURVEY.md §3.1).
 
-Mirrors ``run_month`` at
-``/root/reference/src/finance_etl/pipeline.py:50-191``:
+Mirrors ``run_month`` in the reference's
+``src/finance_etl/pipeline.py:50-191``:
 
 read typed CSVs -> collect ALL DQ exceptions -> severity -> write
 audit CSVs (ALWAYS, even when about to fail) -> gate -> month-window
 filter -> FX prep -> fact build -> KPI pivot -> Parquet sinks.
 
-Lazy-engine adaptation (SURVEY.md §7.4 item 7): the exceptions
-DataFrame is the one forced materialization point mid-pipeline -- it
-is cached before the gate decision, reused for the audit files, and
-the pipeline then proceeds from the ORIGINAL typed inputs (validation
-is a side-channel, not a transform -- Q17; since r12 the big inputs
-flow through the persisted slice projections of those same typed
-frames, so the one DQ parse also feeds the fact).  The fact write is
-single-pass (r12): the missing-FX hard error rides the write's
-Observation with scratch-dir + rename promotion instead of an eager
-pre-pass.  Stages 6-9 stay one lazy plan until the writes.
+Lazy-engine adaptation (SURVEY.md §7.4 item 7): the DQ sweep's one
+action is the write of ``dq_exceptions.csv``.  An Observation on that
+write counts the exceptions per (dataset, severity); the gate and the
+five-row summary are decided from those counts on the driver, the
+summary is written, and only then can the gate raise.  Nothing is
+cached for the gate or re-read from the audit file.  The close then
+proceeds from the ORIGINAL typed inputs (validation is a side-channel,
+not a transform -- Q17; since r12 the big inputs flow through the
+persisted slice projections of those same typed frames, so the one DQ
+parse also feeds the fact).  The fact write is single-pass (r12): the
+missing-FX hard error rides the write's Observation with scratch-dir +
+rename promotion instead of an eager pre-pass.  The KPI is one
+collected pre-aggregate of the written fact, pivoted on the driver.
 """
 
 from __future__ import annotations
 
 import os
+from functools import reduce
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import Settings
@@ -38,15 +42,16 @@ from ..schemas import (
     PAYROLL_SCHEMA,
     SALES_SCHEMA,
 )
-from ..sources.readers import ROW_ID_COL, read_csv, read_csv_typed
+from ..sources.readers import ROW_ID_COL, local_frame, read_csv, read_csv_typed
 from ..sources.writers import write_csv_single_file, write_parquet
 from .quality import (
     add_severity,
     build_dataset_specs,
     collect_exceptions,
-    dq_overall_status,
+    dq_count_metrics,
+    dq_gate_status,
     dq_summary_table,
-    schema_shape_exceptions,
+    schema_shape_rows,
 )
 from .transforms import (
     MissingFxRatesError,
@@ -79,6 +84,20 @@ def plan_has_month_partition_filter(plan: str) -> bool:
 # unexpectedly large chart can't bloat codegen or OOM the driver.
 # Module-level so tests can monkeypatch it to force the fallback path.
 COA_FUSION_CAP = 10_000
+
+
+def _observed(obs: Observation, metrics: list[Column], read_back) -> dict:
+    """``obs``'s metrics, taken on the write that just ran.  Spark can
+    drop an observation from a plan it collapsed (empty-relation
+    propagation on a zero-row month), so when no metrics row came back
+    the same ``metrics`` are aggregated over the written output,
+    ``read_back()`` -- by definition a tiny table in that case."""
+    try:
+        got = obs.get
+    except Exception:  # noqa: BLE001 - the JVM raises when no metrics row exists
+        got = {}
+    return dict(got) if got else read_back().agg(*metrics).first().asDict()
+
 
 def run_month(
     spark: SparkSession,
@@ -236,9 +255,11 @@ def run_month(
     }
     if not lake_mode:
         slices = {name: df.persist() for name, df in slices.items()}
-    exceptions = spark.createDataFrame([], DQ_EXCEPTIONS_SCHEMA)
+    # driver-side shape checks: one local relation, and none at all on
+    # a well-formed month
+    shape_rows = [r for name, df in frames.items() for r in schema_shape_rows(df, specs[name])]
+    parts = [local_frame(spark, shape_rows, DQ_EXCEPTIONS_SCHEMA)] if shape_rows else []
     for name, df in frames.items():
-        exceptions = exceptions.unionByName(schema_shape_exceptions(spark, df, specs[name]))
         checked = slices.get(name, df)
         # lake mode reads the ingest-materialized uniqueness exceptions
         # (r14): the month partition is immutable, so its duplicate-key
@@ -251,7 +272,7 @@ def run_month(
             from ..sources.raw_lake import read_lake_unique_exceptions
 
             pre_unique = read_lake_unique_exceptions(spark, raw_lake_dir, name, month)
-        exceptions = exceptions.unionByName(
+        parts.append(
             collect_exceptions(
                 checked,
                 specs[name],
@@ -262,36 +283,33 @@ def run_month(
         if not coa_fused and name in ("sales", "expenses"):
             # over-cap chart of accounts: Q12 via the retained broadcast
             # anti-join (reads the persisted slice, so no extra CSV scan)
-            exceptions = exceptions.unionByName(
-                account_in_coa_exceptions(checked, name, dim_accounts)
-            )
+            parts.append(account_in_coa_exceptions(checked, name, dim_accounts))
+    exceptions = reduce(DataFrame.unionByName, parts)
 
-    dq_exceptions = add_severity(exceptions).cache()  # forced: the gate must decide
-    # Materialize the cache with FULL parallelism before the
-    # single-file (coalesce(1)) audit sinks and the gate's limit(1)
-    # probes consume it: afterwards every serial section's cost tracks
-    # the EXCEPTION count, not the input row count, and the count
-    # doubles as the close-run dq_exception_rows metric. Measured at
-    # the 10M-row stress month (PLANS.md): parallel count 10.6s + warm
-    # single-file write 0.5s, vs 13.8s for a cold single-task write --
-    # and a single-partition AGGREGATE over the cold plan (the shape a
-    # future gate refactor could easily introduce) costs 118s vs 31s,
-    # so the eager parallel materialization is the load-bearing habit.
-    n_exceptions = dq_exceptions.count()
-    _mark("dq_sweep")
-
+    # The sweep's one action is the audit write itself: the
+    # exceptions stream once into dq_exceptions.csv while an
+    # Observation counts them per (dataset, severity) -- all the gate
+    # and the summary need.  repartition(1), not coalesce(1): the
+    # shuffle keeps the scan and the checks parallel and only the
+    # (exception-sized) file write runs as one task; coalesce(1) would
+    # pull the whole sweep into a single task.
     dq_exceptions_path = curated_dir / "dq_exceptions.csv"
     dq_summary_path = curated_dir / "dq_summary.csv"
-
-    summary = dq_summary_table(dq_exceptions, fail_on=fail_on)
-    overall = dq_overall_status(dq_exceptions, fail_on=fail_on)
+    dq_obs, dq_metrics = Observation("dq_counts"), dq_count_metrics()
+    write_csv_single_file(
+        add_severity(exceptions).observe(dq_obs, *dq_metrics).repartition(1), str(dq_exceptions_path)
+    )
+    dq_counts = _observed(
+        dq_obs, dq_metrics, lambda: read_csv(spark, str(dq_exceptions_path), DQ_EXCEPTIONS_SCHEMA)
+    )
+    _mark("dq_sweep")
 
     # audit trail is written BEFORE the gate can raise (pipeline.py:141-146)
-    write_csv_single_file(dq_exceptions, str(dq_exceptions_path))
+    summary = dq_summary_table(spark, dq_counts, fail_on=fail_on)
     write_csv_single_file(summary, str(dq_summary_path))
     _mark("dq_audit_write")
 
-    if overall == "FAIL" and fail_on != "NEVER":
+    if dq_gate_status(dq_counts, fail_on=fail_on) == "FAIL":
         for s in slices.values():
             s.unpersist()
         raise DataQualityGateError(
@@ -338,16 +356,14 @@ def run_month(
     # close-run metrics ride the write action itself (Observation API):
     # row count, base-amount total, source breadth and the missing-FX
     # count cost no extra scan
-    from pyspark.sql import Observation
-
-    obs = Observation("fact_stats")
-    fact = fact.observe(
-        obs,
+    fact_stats = [
         F.count(F.lit(1)).alias("fact_rows"),
         F.sum(F.col("amount_base").cast("decimal(28,2)")).cast("double").alias("total_amount_base"),
         F.approx_count_distinct("source").alias("n_sources"),
         F.sum(F.col("rate").isNull().cast("long")).alias("_missing_fx_rows"),
-    )
+    ]
+    obs = Observation("fact_stats")
+    fact = fact.observe(obs, *fact_stats)
     out_fact = curated_dir / "fact_transactions.parquet"
     out_dim = curated_dir / "dim_accounts.parquet"
     out_kpi = curated_dir / "kpi_monthly.parquet"
@@ -358,27 +374,7 @@ def run_month(
     promoted = False
     try:
         write_parquet(fact, tmp_fact)
-        try:
-            fact_metrics = dict(obs.get)
-        except Exception:  # noqa: BLE001
-            # zero-row month: with the fact build a pure map pipeline (no
-            # exchange), empty-relation propagation can collapse the write
-            # plan and leave the observation with no metrics row (obs.get
-            # raises from the JVM).  Recompute from the written parquet --
-            # by definition a tiny (usually empty) table here.
-            fact_metrics = (
-                spark.read.parquet(tmp_fact)
-                .agg(
-                    F.count(F.lit(1)).alias("fact_rows"),
-                    F.sum(F.col("amount_base").cast("decimal(28,2)"))
-                    .cast("double")
-                    .alias("total_amount_base"),
-                    F.approx_count_distinct("source").alias("n_sources"),
-                    F.sum(F.col("rate").isNull().cast("long")).alias("_missing_fx_rows"),
-                )
-                .first()
-                .asDict()
-            )
+        fact_metrics = _observed(obs, fact_stats, lambda: spark.read.parquet(tmp_fact))
         if fact_metrics.pop("_missing_fx_rows", 0):
             pairs = [
                 (str(r["date_key"]), r["currency"])
@@ -406,29 +402,23 @@ def run_month(
 
     # the slice caches have no consumers past this point (KPI and the
     # lake copy read the WRITTEN fact, the DQ exceptions are already
-    # cached + counted) -- release them now, before the cheap tail
-    # stages, so the 100M close doesn't hold the cache and the written
-    # fact at once
+    # written) -- release them now, before the cheap tail stages, so
+    # the 100M close doesn't hold the cache and the written fact at once
     for s in slices.values():
         s.unpersist()
 
     # Build the KPI (and the lake partition copy) from the fact we
-    # just WROTE, not from the fact's logical plan (r10): kpi_monthly
-    # executes its input three more times (observed-types collect,
-    # pivot aggregate, null-only-groups aggregate), and each execution
-    # of the plan form would re-parse every raw CSV and redo the FX
-    # join.  The written fact is columnar and already enriched, so
-    # those passes become column-pruned parquet scans of exactly the 4
-    # KPI columns.  Row-set identical by construction (parquet
+    # just WROTE, not from the fact's logical plan (r10): re-executing
+    # the plan form would re-parse every raw CSV and redo the FX join,
+    # while the written fact is columnar and already enriched, so the
+    # KPI pre-aggregate is a column-pruned parquet scan of exactly the
+    # 4 KPI columns.  Row-set identical by construction (parquet
     # round-trips doubles exactly); measured 41.8 s -> 35.2 s on the
     # 10M close, on top of the sort removal's 64.2 -> 41.8.
     fact_r = fact.sparkSession.read.parquet(str(out_fact))
-    # kpi_monthly is eager up to its dimension-bounded pre-aggregate
-    # (one column-pruned scan of the written fact; r11 -- previously
-    # the types-collect, pivot and null-group passes each rescanned
-    # it, which is what made this stage super-linear at 100M).  The
-    # scan lands in "kpi_agg"; "kpi_dim_write" is then pivot-on-tiny
-    # plus the two parquet sinks.
+    # kpi_monthly runs one query: the dimension-bounded pre-aggregate,
+    # collected; the pivot happens on the driver.  That scan lands in
+    # "kpi_agg"; "kpi_dim_write" is the two parquet sinks.
     kpi = kpi_monthly(fact_r, dim_accounts)
     _mark("kpi_agg")
 
@@ -445,8 +435,6 @@ def run_month(
         )
         _mark("lake_write")
 
-    dq_exceptions.unpersist()
-
     outputs = {
         "dq_exceptions": dq_exceptions_path,
         "dq_summary": dq_summary_path,
@@ -454,7 +442,7 @@ def run_month(
         "dim_accounts": out_dim,
         "kpi": out_kpi,
     }
-    outputs["metrics"] = {"dq_exception_rows": n_exceptions, **fact_metrics}
+    outputs["metrics"] = {"dq_exception_rows": dq_counts["dq_exception_rows"], **fact_metrics}
     outputs["stage_seconds"] = _stages
     return outputs
 

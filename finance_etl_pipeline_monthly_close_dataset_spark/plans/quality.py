@@ -9,10 +9,13 @@ shape: ``(dataset, index, column, check, failure_case, schema_context,
 check_number, severity)``.
 
 Scale design: all row-level checks for a dataset evaluate in ONE scan.
-Each check becomes a ``when(fail, struct(...))`` element of an array
-that is filtered and exploded -- no per-check re-scan, no driver-side
-row iteration. Key-uniqueness checks are a groupBy (one shuffle on a
-small projection); COA membership is a broadcast left-anti join.
+Each check is a SQL predicate; it becomes an ``IF(fail, named_struct(...),
+NULL)`` slot of an array that is filtered and exploded -- no per-check
+re-scan, no driver-side row iteration. Key-uniqueness checks are a
+groupBy (one shuffle on a small projection); COA membership is a
+literal-set check (broadcast left-anti join over the cap).  The gate
+and the summary need only per-(dataset, severity) counts, which an
+Observation collects on the audit write itself (``dq_count_metrics``).
 """
 
 from __future__ import annotations
@@ -22,21 +25,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import DQ_EXCEPTIONS_SCHEMA
-from ..sources.readers import RAW_PREFIX, ROW_ID_COL
+from ..schemas import DQ_EXCEPTIONS_SCHEMA, DQ_SUMMARY_SCHEMA
+from ..sources.readers import RAW_PREFIX, ROW_ID_COL, local_frame
 
 DATASETS = ["sales", "expenses", "payroll", "inventory_movements", "fx_rates"]
-
-EXCEPTION_COLUMNS = [
-    "dataset",
-    "index",
-    "column",
-    "check",
-    "failure_case",
-    "schema_context",
-    "check_number",
-    "severity",
-]
+SEVERITIES = ["ERROR", "WARN"]
 
 # Columns whose failures are critical (reference quality.py:153-164).
 ERROR_COLUMNS = {
@@ -55,11 +48,12 @@ ERROR_COLUMNS = {
 
 @dataclass(frozen=True)
 class ColumnCheck:
-    """A row-level check: rows where ``fail`` holds become exceptions."""
+    """A row-level check: rows where the SQL predicate ``fail`` holds
+    become exceptions."""
 
     column: str
     name: str
-    fail: Column
+    fail: str
 
 
 @dataclass(frozen=True)
@@ -73,11 +67,15 @@ class DatasetSpec:
     unique_keys: list[tuple[str, ...]] = field(default_factory=list)
 
 
+def _sql_str(value: str) -> str:
+    """``value`` as a Spark SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _isin_check(column: str, allowed: list[str]) -> ColumnCheck:
+    values = ", ".join(_sql_str(v) for v in allowed)
     return ColumnCheck(
-        column,
-        f"isin({allowed})",
-        F.col(column).isNotNull() & ~F.col(column).isin(allowed),
+        column, f"isin({allowed})", f"`{column}` IS NOT NULL AND `{column}` NOT IN ({values})"
     )
 
 
@@ -91,11 +89,10 @@ def coa_membership_check(account_codes: list[str]) -> ColumnCheck:
     literal -- the 100 TB story is unchanged (an isin literal is
     cheaper to ship than a broadcast table).  Emits rows identical to
     ``account_in_coa_exceptions``: NULL codes fail too (a left-anti
-    join keeps null keys), hence the explicit isNull() arm."""
+    join keeps null keys), hence the explicit IS NULL arm."""
+    codes = ", ".join(_sql_str(c) for c in account_codes)
     return ColumnCheck(
-        "account_code",
-        "account_in_coa",
-        F.col("account_code").isNull() | ~F.col("account_code").isin(account_codes),
+        "account_code", "account_in_coa", f"account_code IS NULL OR account_code NOT IN ({codes})"
     )
 
 
@@ -112,7 +109,7 @@ def build_dataset_specs(
             not_null=["date", "entity", "invoice_id", "account_code", "currency", "amount"],
             checks=[
                 _isin_check("currency", ccy),
-                ColumnCheck("amount", "greater_than(0)", F.col("amount") <= 0),
+                ColumnCheck("amount", "greater_than(0)", "amount <= 0"),
             ],
             unique_keys=[("entity", "invoice_id")],
         ),
@@ -122,7 +119,7 @@ def build_dataset_specs(
             not_null=["date", "entity", "bill_id", "account_code", "currency", "amount"],
             checks=[
                 _isin_check("currency", ccy),
-                ColumnCheck("amount", "greater_than(0)", F.col("amount") <= 0),
+                ColumnCheck("amount", "greater_than(0)", "amount <= 0"),
             ],
             unique_keys=[("entity", "bill_id")],
         ),
@@ -132,16 +129,16 @@ def build_dataset_specs(
             not_null=["month", "entity", "employee_id", "currency", "gross", "deductions", "net"],
             checks=[
                 _isin_check("currency", ccy),
-                ColumnCheck("gross", "greater_than_or_equal_to(0)", F.col("gross") < 0),
-                ColumnCheck("deductions", "greater_than_or_equal_to(0)", F.col("deductions") < 0),
-                ColumnCheck("net", "greater_than_or_equal_to(0)", F.col("net") < 0),
+                ColumnCheck("gross", "greater_than_or_equal_to(0)", "gross < 0"),
+                ColumnCheck("deductions", "greater_than_or_equal_to(0)", "deductions < 0"),
+                ColumnCheck("net", "greater_than_or_equal_to(0)", "net < 0"),
                 # payroll identity |gross - deductions - net| < 0.01
                 # (reference quality.py:59-65, dataset-level there;
                 # row-level here gives a better audit trail)
                 ColumnCheck(
                     "net",
                     "payroll_identity(gross-deductions=net)",
-                    F.abs(F.col("gross") - F.col("deductions") - F.col("net")) >= 0.01,
+                    "abs(gross - deductions - net) >= 0.01D",
                 ),
             ],
         ),
@@ -152,8 +149,8 @@ def build_dataset_specs(
             checks=[
                 _isin_check("currency", ccy),
                 _isin_check("movement_type", ["receipt", "issue", "adjustment"]),
-                ColumnCheck("qty", "not_equal_to(0)", F.col("qty") == 0),
-                ColumnCheck("unit_cost", "greater_than_or_equal_to(0)", F.col("unit_cost") < 0),
+                ColumnCheck("qty", "not_equal_to(0)", "qty = 0"),
+                ColumnCheck("unit_cost", "greater_than_or_equal_to(0)", "unit_cost < 0"),
             ],
         ),
         "fx_rates": DatasetSpec(
@@ -163,7 +160,7 @@ def build_dataset_specs(
             checks=[
                 _isin_check("from_currency", ccy),
                 _isin_check("to_currency", [base_currency]),
-                ColumnCheck("rate", "greater_than(0)", F.col("rate") <= 0),
+                ColumnCheck("rate", "greater_than(0)", "rate <= 0"),
             ],
             unique_keys=[("date", "from_currency", "to_currency")],
         ),
@@ -186,14 +183,6 @@ def checked_slice(df: DataFrame, spec: DatasetSpec) -> DataFrame:
         or (c.startswith(RAW_PREFIX) and c[len(RAW_PREFIX):] in declared)
     ]
     return df.select(*proj)
-
-
-def _exception_struct(column: str, check: str, failure_case: Column) -> Column:
-    return F.struct(
-        F.lit(column).alias("column"),
-        F.lit(check).alias("check"),
-        failure_case.cast("string").alias("failure_case"),
-    )
 
 
 def unique_key_exceptions(
@@ -252,9 +241,10 @@ def collect_exceptions(
     df = checked_slice(df, spec)
     if persist_intermediates and n_consumers > 1:
         df = df.persist()
-    idx = F.col(ROW_ID_COL) if ROW_ID_COL in df.columns else F.lit(None).cast("long")
+    idx = f"`{ROW_ID_COL}`" if ROW_ID_COL in df.columns else "CAST(NULL AS BIGINT)"
 
-    structs: list[Column] = []
+    # One IF(fail, named_struct(...), NULL) slot per check, as SQL text.
+    slots: list[str] = []
     # r16 (guide SS1.2 per-task work): the explode below generates
     # n_checks struct slots for EVERY row, but on a clean corpus only
     # a handful of rows fail anything -- measured at the 10M close,
@@ -269,7 +259,14 @@ def collect_exceptions(
     # explode.  Not the r11 "compact first" trap: the filter references
     # the raw COLUMNS, not the computed struct array, so nothing is
     # evaluated twice (the array builds only above the filter).
-    fail_conds: list[Column] = []
+    fail_conds: list[str] = []
+
+    def slot(fail: str, column: str, check: str, failure_case: str = "NULL") -> None:
+        slots.append(
+            f"IF({fail}, named_struct('column', {_sql_str(column)}, 'check', {_sql_str(check)}, "
+            f"'failure_case', CAST({failure_case} AS STRING)), NULL)"
+        )
+
     for c in spec.not_null:
         if c in df.columns:
             raw = f"{RAW_PREFIX}{c}"
@@ -277,41 +274,26 @@ def collect_exceptions(
                 # coercion-aware scan: raw text present but typed null
                 # = dtype failure (pandera coerce semantics, Q3); only
                 # a truly absent value is a not_nullable failure
-                structs.append(
-                    F.when(
-                        F.col(raw).isNotNull() & F.col(c).isNull(),
-                        _exception_struct(c, f"coerce_dtype({df.schema[c].dataType.simpleString()})", F.col(raw)),
-                    )
-                )
+                dtype = df.schema[c].dataType.simpleString()
+                slot(f"`{raw}` IS NOT NULL AND `{c}` IS NULL", c, f"coerce_dtype({dtype})", f"`{raw}`")
                 # typed-null conjunct: with DENSE shadows raw IS NULL
                 # already implies typed null (the text was absent); the
                 # r12 parse-once stage stores SPARSE shadows (raw text
                 # kept only where the typed value is null), where raw
                 # NULL alone is also true for every clean row -- the
                 # conjunct makes the check correct for both layouts.
-                structs.append(
-                    F.when(
-                        F.col(c).isNull() & F.col(raw).isNull(),
-                        _exception_struct(c, "not_nullable", F.lit(None)),
-                    )
-                )
-                # typed NULL covers both shadow-layout slots above
-                fail_conds.append(F.col(c).isNull())
-                continue
-            structs.append(
-                F.when(
-                    F.col(c).isNull(),
-                    _exception_struct(c, "not_nullable", F.lit(None)),
-                )
-            )
-            fail_conds.append(F.col(c).isNull())
+                slot(f"`{c}` IS NULL AND `{raw}` IS NULL", c, "not_nullable")
+            else:
+                slot(f"`{c}` IS NULL", c, "not_nullable")
+            # typed NULL covers both shadow-layout slots above
+            fail_conds.append(f"`{c}` IS NULL")
     for chk in spec.checks:
         if chk.column in df.columns:
-            structs.append(F.when(chk.fail, _exception_struct(chk.column, chk.name, F.col(chk.column))))
-            fail_conds.append(chk.fail)
+            slot(f"({chk.fail})", chk.column, chk.name, f"`{chk.column}`")
+            fail_conds.append(f"({chk.fail})")
 
     parts: list[DataFrame] = []
-    if structs:
+    if slots:
         # Shape note (r11, measured at the 50M/100M close): explode the
         # FIXED-WIDTH array and drop the per-element nulls AFTER the
         # generate.  The tempting "compact first" rewrite
@@ -320,31 +302,25 @@ def collect_exceptions(
         # lambda filter, and InferFiltersFromGenerate pushes a
         # size(...)>0 predicate below the projection that re-evaluates
         # the whole check array a second time per row.  This shape has
-        # neither cost -- size(array(<n literals>)) constant-folds, so
-        # no filter is inferred, the array is evaluated exactly once,
-        # and the n_checks-per-row generate blowup is codegen'd and
-        # filtered in the same stage.
-        from functools import reduce as _reduce
-
-        fail_any = _reduce(lambda a, b: a | b, fail_conds)
-        exploded = (
-            df.filter(fail_any)
-            .select(idx.alias("index"), F.array(*structs).alias("_checks"))
-            .select("index", F.explode("_checks").alias("_e"))
+        # neither cost -- the generator's input is the array
+        # expression itself, so no filter is inferred, the array is
+        # evaluated exactly once, and the n_checks-per-row generate
+        # blowup is codegen'd and filtered in the same stage.
+        parts.append(
+            df.filter(" OR ".join(fail_conds))
+            .selectExpr(f"{idx} AS `index`", f"explode(array({', '.join(slots)})) AS _e")
             # nulls (passing checks) are dropped by explode only for
             # empty arrays; filter the per-element nulls explicitly
-            .filter(F.col("_e").isNotNull())
-        )
-        parts.append(
-            exploded.select(
-                F.lit(spec.dataset).alias("dataset"),
-                F.col("index").cast("long").alias("index"),
-                F.col("_e.column").alias("column"),
-                F.col("_e.check").alias("check"),
-                F.col("_e.failure_case").alias("failure_case"),
-                F.lit("Column").alias("schema_context"),
-                F.lit(None).cast("int").alias("check_number"),
-                F.lit(None).cast("string").alias("severity"),
+            .filter("_e IS NOT NULL")
+            .selectExpr(
+                f"{_sql_str(spec.dataset)} AS dataset",
+                "CAST(`index` AS BIGINT) AS `index`",
+                "_e.`column` AS `column`",
+                "_e.`check` AS `check`",
+                "_e.failure_case AS failure_case",
+                "'Column' AS schema_context",
+                "CAST(NULL AS INT) AS check_number",
+                "CAST(NULL AS STRING) AS severity",
             )
         )
 
@@ -368,11 +344,10 @@ def collect_exceptions(
     return out
 
 
-def schema_shape_exceptions(
-    spark: SparkSession, df: DataFrame, spec: DatasetSpec
-) -> DataFrame:
-    """strict=True column-shape check (Q1): missing required columns
-    and unexpected extras, evaluated driver-side against df.columns."""
+def schema_shape_rows(df: DataFrame, spec: DatasetSpec) -> list[tuple]:
+    """strict=True column-shape check (Q1): exception rows for missing
+    required columns and unexpected extras, evaluated driver-side
+    against df.columns."""
     declared = set(spec.columns)
     actual = [c for c in df.columns if c != ROW_ID_COL and not c.startswith(RAW_PREFIX)]
     rows = []
@@ -382,7 +357,7 @@ def schema_shape_exceptions(
     for c in actual:
         if c not in declared:
             rows.append((spec.dataset, None, c, "column_not_in_schema", c, "DataFrameSchema", None, None))
-    return spark.createDataFrame(rows, DQ_EXCEPTIONS_SCHEMA)
+    return rows
 
 
 def account_in_coa_exceptions(df: DataFrame, dataset: str, dim_accounts: DataFrame) -> DataFrame:
@@ -425,53 +400,42 @@ def add_severity(dq_exceptions: DataFrame) -> DataFrame:
     return dq_exceptions.withColumn("severity", severity)
 
 
-def dq_overall_status(dq_exceptions: DataFrame, fail_on: str = "ERROR") -> str:
-    """PASS/FAIL gate (Q15, reference quality.py:186-202)."""
+def dq_count_metrics() -> list[Column]:
+    """Aggregates over severity-tagged exceptions that the gate and the
+    summary need: the row count (``dq_exception_rows``) and one count
+    per ``"<dataset>.<severity>"``.  The close observes them on the
+    audit write (an Observation), so deciding the gate costs no query
+    of its own."""
+    return [F.count(F.lit(1)).alias("dq_exception_rows")] + [
+        F.count_if((F.col("dataset") == d) & (F.col("severity") == sev)).alias(f"{d}.{sev}")
+        for d in DATASETS
+        for sev in SEVERITIES
+    ]
+
+
+def _summary_rows(counts: dict[str, int], fail_on: str) -> list[tuple]:
     fail_on = (fail_on or "ERROR").upper()
-    if fail_on == "NEVER":
-        return "PASS"
-    has_any = dq_exceptions.limit(1).count() > 0
-    if not has_any:
-        return "PASS"
-    if fail_on == "WARN":
-        return "FAIL"
-    has_error = dq_exceptions.filter(F.col("severity") == "ERROR").limit(1).count() > 0
-    return "FAIL" if has_error else "PASS"
+    rows = []
+    for d in DATASETS:
+        errors, warns = counts.get(f"{d}.ERROR", 0), counts.get(f"{d}.WARN", 0)
+        failing = errors + warns if fail_on == "WARN" else errors
+        status = "FAIL" if failing and fail_on != "NEVER" else "PASS"
+        rows.append((d, errors, warns, errors + warns, status))
+    return rows
 
 
-def dq_summary_table(dq_exceptions: DataFrame, fail_on: str = "ERROR") -> DataFrame:
+def dq_gate_status(counts: dict[str, int], fail_on: str = "ERROR") -> str:
+    """PASS/FAIL gate (Q15, reference quality.py:186-202) from
+    ``dq_count_metrics`` counts: FAIL iff some dataset's summary row
+    fails -- an ERROR under ``ERROR``, any exception under ``WARN``,
+    never under ``NEVER``."""
+    return "FAIL" if any(r[-1] == "FAIL" for r in _summary_rows(counts, fail_on)) else "PASS"
+
+
+def dq_summary_table(spark: SparkSession, counts: dict[str, int], fail_on: str = "ERROR") -> DataFrame:
     """Per-dataset summary with a zero-filled scaffold of all five
-    datasets and a status column (Q16, reference quality.py:205-249)."""
-    fail_on = (fail_on or "ERROR").upper()
-    spark = dq_exceptions.sparkSession
-    # scaffold preserves the reference's DATASETS ordering (sales first;
-    # the reference smoke test asserts on row 0)
-    base = spark.createDataFrame(
-        [(d, i) for i, d in enumerate(DATASETS)], "dataset string, _ord int"
-    )
-
-    counts = (
-        dq_exceptions.withColumn("severity", F.coalesce(F.col("severity"), F.lit("ERROR")))
-        .groupBy("dataset")
-        .pivot("severity", ["ERROR", "WARN"])
-        .count()
-        .withColumnRenamed("ERROR", "error_count")
-        .withColumnRenamed("WARN", "warn_count")
-    )
-
-    out = (
-        base.join(counts, on="dataset", how="left")
-        .na.fill(0, ["error_count", "warn_count"])
-        .withColumn("issue_count", F.col("error_count") + F.col("warn_count"))
-    )
-    if fail_on == "NEVER":
-        status = F.lit("PASS")
-    elif fail_on == "WARN":
-        status = F.when(F.col("issue_count") > 0, "FAIL").otherwise("PASS")
-    else:
-        status = F.when(F.col("error_count") > 0, "FAIL").otherwise("PASS")
-    return (
-        out.withColumn("status", status)
-        .orderBy("_ord")
-        .select("dataset", "error_count", "warn_count", "issue_count", "status")
-    )
+    datasets, in the reference's DATASETS order (sales first; the
+    reference smoke test asserts on row 0), and a status column (Q16,
+    reference quality.py:205-249), built from ``dq_count_metrics``
+    counts held on the driver."""
+    return local_frame(spark, _summary_rows(counts, fail_on), DQ_SUMMARY_SCHEMA)

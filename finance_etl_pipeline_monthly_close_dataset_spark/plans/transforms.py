@@ -20,18 +20,21 @@ Scale notes (100 TB design):
 * The missing-rate guard is one count aggregate over a filter --
   Catalyst pushes the ``rate IS NULL AND currency != base`` predicate
   below the projection; no collect of fact data.
-* The KPI pivot uses an explicit, small pivot-value list (account
-  types), avoiding Spark's two-pass implicit pivot-value discovery.
+* The KPI pivot runs on the driver over the collected, dimension-
+  bounded (entity, month, account_type) pre-aggregate.
 """
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+from pyspark.sql import types as T
 
 from ..functions.datetime_fns import month_end_date, month_str
 from ..functions.money import money_round
+from ..sources.readers import local_frame
 
 FACT_COLUMNS = [
     "txn_id",
@@ -263,84 +266,43 @@ def kpi_monthly(fact: DataFrame, dim_accounts: DataFrame) -> DataFrame:
 
     Pivot values are the observed non-null account types (pandas
     ``pivot_table`` drops the NaN column produced by codes outside the
-    chart of accounts -- SURVEY.md §7.4 item 4). Account types are a
-    bounded tiny domain (6 values), so discovering them is a cheap
-    aggregate, and passing them explicitly keeps the pivot single-pass.
+    chart of accounts -- SURVEY.md §7.4 item 4); an (entity, month)
+    group whose every row has a null account type still appears, with
+    all-zero KPIs, and Revenue/COGS/Expense are always present.
 
-    Scale shape (r11): the fact input is scanned ONCE.  A pre-aggregate
+    Scale shape: the fact input is scanned ONCE, into a pre-aggregate
     to (entity, month, account_type) -- exact decimal partial sums with
     map-side combine, so the shuffle carries ~groups-per-partition
-    partial rows, not fact rows -- is locally checkpointed (it is
-    dimension-bounded: entities x months x <=6 account types), and the
-    observed-type discovery, the pivot, and the null-only-group
-    recovery all read that tiny table.  Previously each of the three
-    ran its own full pass over the fact input, which made the KPI stage
-    super-linear at the 10/50/100M close stress (5.0 -> 17.0 -> 42.0 s
-    -- three competing full scans; judge r10 ask #2).
+    partial rows, not fact rows.  That table is dimension-bounded
+    (entities x months x <=6 account types), so it is collected, and
+    the observed-type discovery, the pivot, the zero-fill and the
+    (entity, month) ordering run on the driver: one Spark query instead
+    of a persist, a count, a distinct collect, a pivot, a null-group
+    union and a sort (each a separate job with its own fixed planning
+    cost).  Each cell is one exact decimal sum, turned into a double
+    once; only the two rounded profit columns are computed in Spark.
     """
     dim = F.broadcast(dim_accounts.select("account_code", "account_type"))
-    joined = (
+    pre = (
         fact.join(dim, on="account_code", how="left")
-        .withColumn("month", month_str(F.col("date")))
-        .select("entity", "month", "account_type", "amount_base")
+        .groupBy("entity", month_str(F.col("date")).alias("month"), "account_type")
+        .agg(F.sum(F.col("amount_base").cast("decimal(28,2)")).alias("_sum_base"))
     )
-
-    # amount_base is 2-dp money: accumulate as exact decimal so the sum
-    # is order-independent (identical on any partitioning/merge order,
-    # and bit-equal to a serial pandas/DuckDB sum); the double cast
-    # happens once, after ALL decimal adds (pre-aggregate + pivot).
-    # persist + count (NOT localCheckpoint): both give the same
-    # eager single-scan behavior, but checkpoint blocks live only on
-    # executors -- on a real cluster an executor loss (spot nodes,
-    # dynamic allocation) makes them unrecoverable and fails the job,
-    # while a persisted DF recomputes the lost partitions from lineage
-    # (ADVICE r11).  MEMORY_AND_DISK: the pre-aggregate is
-    # dimension-bounded (entities x months x <=6 types) so it stays in
-    # memory; disk is the degrade path, not the plan.
-    pre = joined.groupBy("entity", "month", "account_type").agg(
-        F.sum(F.col("amount_base").cast("decimal(28,2)")).alias("_sum_base")
+    groups: dict[tuple, dict[str, Decimal]] = {}
+    for entity, month, account_type, sum_base in pre.collect():
+        cells = groups.setdefault((entity, month), {})
+        if account_type is not None:
+            cells[account_type] = sum_base or Decimal(0)
+    types = sorted({t for cells in groups.values() for t in cells})
+    types += [t for t in ("Revenue", "COGS", "Expense") if t not in types]
+    # Spark's ascending order: nulls first, then by value
+    order = sorted(groups, key=lambda k: [(v is not None, v) for v in k])
+    schema = T.StructType(
+        [pre.schema["entity"], pre.schema["month"]] + [T.StructField(t, T.DoubleType()) for t in types]
     )
-    pre = pre.persist(StorageLevel.MEMORY_AND_DISK)
-    pre.count()
-
-    observed_types = sorted(
-        r[0]
-        for r in pre.select("account_type")
-        .filter(F.col("account_type").isNotNull())
-        .distinct()
-        .collect()
-    )
-
-    wide = (
-        pre.filter(F.col("account_type").isNotNull())
-        .groupBy("entity", "month")
-        .pivot("account_type", observed_types)
-        .agg(F.sum("_sum_base").cast("double"))
-        .na.fill(0.0, observed_types)
-    )
-
-    # entity/month groups whose every row has a null account_type still
-    # appear in the pandas pivot index with all-zero KPIs; recover them.
-    null_only_groups = (
-        pre.groupBy("entity", "month")
-        .agg(F.max(F.col("account_type").isNotNull().cast("int")).alias("_has_typed"))
-        .filter(F.col("_has_typed") == 0)
-        .select("entity", "month")
-    )
-    if observed_types:
-        zero_wide = null_only_groups.select(
-            "entity", "month", *[F.lit(0.0).alias(t) for t in observed_types]
-        )
-        wide = wide.unionByName(zero_wide)
-    else:
-        wide = null_only_groups
-
-    for required in ("Revenue", "COGS", "Expense"):
-        if required not in wide.columns:
-            wide = wide.withColumn(required, F.lit(0.0))
-
-    return (
-        wide.withColumn("gross_profit", money_round(F.col("Revenue") + F.col("COGS")))
-        .withColumn("operating_profit", money_round(F.col("gross_profit") + F.col("Expense")))
-        .orderBy("entity", "month")
-    )
+    wide = local_frame(
+        fact.sparkSession, [(*k, *(float(groups[k].get(t, 0)) for t in types)) for k in order], schema
+    ).coalesce(1)  # a few rows: one partition, one output file
+    return wide.withColumn(
+        "gross_profit", money_round(F.col("Revenue") + F.col("COGS"))
+    ).withColumn("operating_profit", money_round(F.col("gross_profit") + F.col("Expense")))

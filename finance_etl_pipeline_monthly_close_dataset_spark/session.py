@@ -20,6 +20,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def graft_cpus() -> int | None:
+    """The core count in ``SPARK_GRAFT_CPUS``, or None when it is unset,
+    empty or not a positive integer (the caller then uses its default)."""
+    value = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
+    return int(value) if value.isdigit() and int(value) > 0 else None
+
+
 def get_spark(
     app_name: str = "finance-etl-spark",
     master: str | None = None,
@@ -32,12 +39,11 @@ def get_spark(
     cluster you would size it to ~2-3x total executor cores, or simply
     rely on AQE coalescing from a higher initial number.
     """
+    cpus = graft_cpus()
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
         master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = cpus or 32
 
     builder = (
         SparkSession.builder.appName(app_name)

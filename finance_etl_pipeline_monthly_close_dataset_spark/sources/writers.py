@@ -46,18 +46,20 @@ def write_csv_single_file(df: DataFrame, path: str) -> None:
 
     Implemented as a coalesce(1) Spark write to a temp dir + rename of
     the part file, so data never routes through the Python driver.
-    Reserved for small BI exports (dims, monthly KPI, DQ audits).
+    The rename is one ``os.replace``: a reader (or a crash) sees either
+    the previous file or the new one, never no file.  Reserved for
+    small BI exports (dims, monthly KPI, DQ audits).
     """
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     tmp = path + "._spark_tmp"
-    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)
-    part_files = glob.glob(os.path.join(tmp, "part-*.csv"))
-    if not part_files:
-        raise RuntimeError(f"No part file produced for {path}")
-    if os.path.exists(path):
-        os.remove(path)
-    shutil.move(part_files[0], path)
-    shutil.rmtree(tmp, ignore_errors=True)
+    try:
+        df.coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)
+        part_files = glob.glob(os.path.join(tmp, "part-*.csv"))
+        if not part_files:
+            raise RuntimeError(f"No part file produced for {path}")
+        os.replace(part_files[0], path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def write_bucketed_table(

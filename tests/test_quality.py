@@ -11,9 +11,10 @@ from finance_etl_pipeline_monthly_close_dataset_spark.plans.quality import (
     add_severity,
     build_dataset_specs,
     collect_exceptions,
-    dq_overall_status,
+    dq_count_metrics,
+    dq_gate_status,
     dq_summary_table,
-    schema_shape_exceptions,
+    schema_shape_rows,
 )
 
 TS = dt.datetime(2025, 12, 10)
@@ -81,8 +82,8 @@ def test_payroll_identity(spark, specs):
 
 def test_schema_shape_strict(spark, specs):
     df = spark.createDataFrame([("x",)], "extra_col string")
-    exc = schema_shape_exceptions(spark, df, specs["fx_rates"]).collect()
-    kinds = {r["check"] for r in exc}
+    exc = schema_shape_rows(df, specs["fx_rates"])
+    kinds = {r[3] for r in exc}
     assert "required_column_missing" in kinds and "column_not_in_schema" in kinds
     assert len(exc) == 5  # 4 missing + 1 extra
 
@@ -125,15 +126,26 @@ def _exc(spark, rows):
     )
 
 
+def _counts(df):
+    return df.agg(*dq_count_metrics()).first().asDict()
+
+
 def test_gate_modes(spark):
-    warn_only = _exc(spark, [("sales", None, "amount", "gt", "-1", "Column", None, "WARN")])
-    with_error = _exc(spark, [("sales", None, "currency", "isin", "XXX", "Column", None, "ERROR")])
-    empty = _exc(spark, [])
-    assert dq_overall_status(empty, "ERROR") == "PASS"
-    assert dq_overall_status(warn_only, "ERROR") == "PASS"
-    assert dq_overall_status(warn_only, "WARN") == "FAIL"
-    assert dq_overall_status(with_error, "ERROR") == "FAIL"
-    assert dq_overall_status(with_error, "NEVER") == "PASS"
+    warn_only = _counts(_exc(spark, [("sales", None, "amount", "gt", "-1", "Column", None, "WARN")]))
+    with_error = _counts(_exc(spark, [("sales", None, "currency", "isin", "XXX", "Column", None, "ERROR")]))
+    empty = _counts(_exc(spark, []))
+    assert empty["dq_exception_rows"] == 0
+    assert all(v == 0 for v in empty.values())
+    for fail_on in ("ERROR", "WARN", "NEVER"):
+        assert dq_gate_status(empty, fail_on) == "PASS"
+        # an observation Spark dropped from a collapsed plan: no counts at all
+        assert dq_gate_status({}, fail_on) == "PASS"
+    assert dq_gate_status(warn_only, "ERROR") == "PASS"
+    assert dq_gate_status(warn_only, "WARN") == "FAIL"
+    assert dq_gate_status(warn_only, "NEVER") == "PASS"
+    assert dq_gate_status(with_error, "ERROR") == "FAIL"
+    assert dq_gate_status(with_error, "WARN") == "FAIL"
+    assert dq_gate_status(with_error, "NEVER") == "PASS"
 
 
 def test_summary_zero_filled_scaffold(spark):
@@ -144,7 +156,7 @@ def test_summary_zero_filled_scaffold(spark):
             ("fx_rates", None, "rate", "gt", "-1", "Column", None, "ERROR"),
         ],
     )
-    rows = dq_summary_table(exc, fail_on="ERROR").collect()
+    rows = dq_summary_table(spark, _counts(exc), fail_on="ERROR").collect()
     assert [r["dataset"] for r in rows] == [
         "sales", "expenses", "payroll", "inventory_movements", "fx_rates",
     ]
@@ -152,6 +164,29 @@ def test_summary_zero_filled_scaffold(spark):
     assert by["sales"]["warn_count"] == 1 and by["sales"]["status"] == "PASS"
     assert by["fx_rates"]["error_count"] == 1 and by["fx_rates"]["status"] == "FAIL"
     assert by["payroll"]["issue_count"] == 0 and by["payroll"]["status"] == "PASS"
+    warn_gate = {r["dataset"]: r["status"] for r in dq_summary_table(spark, _counts(exc), "WARN").collect()}
+    assert warn_gate["sales"] == "FAIL" and warn_gate["payroll"] == "PASS"
+
+
+def test_check_names_with_quotes_survive_sql_text(spark, specs):
+    """Checks are SQL text: a check name or an allowed value holding
+    quotes or a backslash must reach the exception row verbatim and
+    still match as a literal."""
+    from finance_etl_pipeline_monthly_close_dataset_spark.plans.quality import _isin_check
+
+    allowed = ["USD", "O'Brien", 'say "hi"', "back\\slash"]
+    spec = specs["sales"]
+    quoted = type(spec)(
+        dataset=spec.dataset, columns=spec.columns, not_null=[],
+        checks=[_isin_check("currency", allowed)],
+    )
+    df = _sales(
+        spark,
+        [(TS, "TLM", f"I{i}", "40000001", ccy, 1.0, "") for i, ccy in enumerate(allowed + ["XXX"])],
+    )
+    exc = collect_exceptions(df, quoted).collect()
+    assert [(r["failure_case"], r["check"]) for r in exc] == [("XXX", f"isin({allowed})")]
+    assert specs["sales"].checks[0].name == "isin(['USD', 'TZS', 'EUR'])"
 
 
 def test_dtype_coercion_check(spark, specs, tmp_path):

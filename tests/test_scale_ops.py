@@ -888,6 +888,29 @@ def test_user_session_stats_udtf_reordered_table_columns(spark):
         assert got == expect, select
 
 
+def test_user_session_stats_udtf_single_column_table_is_named_error(spark):
+    """A TABLE argument without a time column fails with a ValueError
+    naming the expected columns, not an opaque StopIteration."""
+    import pytest
+
+    from finance_etl_pipeline_monthly_close_dataset_spark.functions.udtfs import (
+        _UserSessionStats,
+        register_udtfs,
+    )
+
+    for names in (["user_id"], ["ts"], []):
+        with pytest.raises(ValueError, match=r"user_id.*\(us or ts\)"):
+            _UserSessionStats._column_indexes(names)
+
+    register_udtfs(spark)
+    spark.createDataFrame([(1,), (2,)], "user_id long").createOrReplaceTempView("_udtf_one_col")
+    with pytest.raises(Exception, match="time column"):
+        spark.sql(
+            "SELECT * FROM user_session_stats(TABLE(SELECT user_id FROM _udtf_one_col) "
+            "PARTITION BY user_id)"
+        ).collect()
+
+
 def test_broadcast_hot_keys_join_caps_dense_hot_set(spark):
     # dense-not-skewed: EVERY key exceeds the threshold; the guard must
     # refuse to build a giant literal isin and fall back to the plain

@@ -188,6 +188,11 @@ def test_kpi_missing_types_forced_to_zero(spark):
     assert row["COGS"] == 0.0 and row["Expense"] == 0.0
     assert row["gross_profit"] == 100.0
     assert row["operating_profit"] == 100.0
+    cogs_only = _fact(
+        spark, [("t1", TS, "TLM", "inventory", "d1", "50000001", "USD", -30.0, 1.0, -30.0, "")]
+    )
+    row = kpi_monthly(cogs_only, _coa(spark)).collect()[0]
+    assert (row["Revenue"], row["COGS"], row["Expense"], row["operating_profit"]) == (0.0, -30.0, 0.0, -30.0)
 
 
 def test_kpi_unknown_account_group_survives_with_zeros(spark):
@@ -203,6 +208,28 @@ def test_kpi_unknown_account_group_survives_with_zeros(spark):
     rows = {r["entity"]: r for r in kpi_monthly(fact, _coa(spark)).collect()}
     assert rows["UPE"]["Revenue"] == 0.0
     assert rows["UPE"]["gross_profit"] == 0.0
+    # no typed row at all: a zero row with just the required columns
+    kpi = kpi_monthly(fact.filter(F.col("entity") == "UPE"), _coa(spark))
+    assert kpi.columns == ["entity", "month", "Revenue", "COGS", "Expense", "gross_profit", "operating_profit"]
+    assert [tuple(r) for r in kpi.collect()] == [("UPE", "2025-12", 0.0, 0.0, 0.0, 0.0, 0.0)]
+
+
+def test_kpi_ordered_by_entity_month_with_exact_sums(spark):
+    """Rows come back in Spark's (entity, month) order -- a null
+    entity first -- and each cell is an exact decimal sum: ten 0.1s
+    are 1.0, where a running double sum is 0.9999999999999999."""
+    nov = dt.datetime(2025, 11, 10)
+    rows = [
+        ("t1", TS, "UPE", "sales", "d1", "40000001", "USD", 5.0, 1.0, 5.0, ""),
+        ("t2", nov, "UPE", "sales", "d2", "40000001", "USD", 4.0, 1.0, 4.0, ""),
+        ("t3", TS, None, "sales", "d3", "40000001", "USD", 3.0, 1.0, 3.0, ""),
+        ("t4", nov, "TLM", "sales", "d4", "40000001", "USD", 2.0, 1.0, 2.0, ""),
+    ] + [(f"p{i}", TS, "TLM", "sales", f"e{i}", "40000001", "USD", 0.1, 1.0, 0.1, "") for i in range(10)]
+    kpi = kpi_monthly(_fact(spark, rows), _coa(spark))
+    got = [(r["entity"], r["month"]) for r in kpi.collect()]
+    assert got == [tuple(r) for r in kpi.orderBy("entity", "month").select("entity", "month").collect()]
+    assert got == [(None, "2025-12"), ("TLM", "2025-11"), ("TLM", "2025-12"), ("UPE", "2025-11"), ("UPE", "2025-12")]
+    assert kpi.collect()[2]["Revenue"] == 1.0
 
 
 def test_fx_to_base_filters_quote_currency(spark):
