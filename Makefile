@@ -1,7 +1,7 @@
 # Developer entry points (PYTHONPATH=repo root is assumed; all targets
 # run on local[32] Spark).
 
-.PHONY: test check check-all checkall bench smoke e2e preflight lint
+.PHONY: test check check-all checkall bench smoke e2e preflight lint loc
 
 ROUND ?= 08
 
@@ -42,3 +42,6 @@ smoke:            ## driver entry smoke (sf0.001 flagship)
 e2e:              ## seed-42 monthly close end-to-end into ./data
 	python -m finance_etl_pipeline_monthly_close_dataset_spark.cli generate --out-dir data/raw --reference-dir data/reference --month 2025-12
 	python -m finance_etl_pipeline_monthly_close_dataset_spark.cli run --month 2025-12 --raw-dir data/raw --curated-dir data/curated --reference-dir data/reference --fail-on ERROR
+
+loc:              ## Python line count tracked by ROADMAP
+	@git ls-files '*.py' | xargs cat | wc -l

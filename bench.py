@@ -134,7 +134,7 @@ R11_HEADLINE_MEDIANS = {
 # common-total drift precisely because the HEAVY tier had no budgets.
 # Heavy baselines are the committed r12 medians (BENCH_LOCAL_r12.json),
 # the last steady-state capture: the r13 drift was reproduced exclusively
-# (tools/repro_drift.py, quiet machine, zero foreign JVMs, zero code
+# (PLANS.md round 14: quiet machine, zero foreign JVMs, zero code
 # change) as fresh-JVM warm-up -- pass 0 at sf0.1 ran
 # docs_ngram_jaccard_recall at 4.43 s median decaying to 1.70/1.27/1.55
 # over passes 1-3 in the same JVM, because the old sf0.001-only warmup
@@ -869,51 +869,6 @@ def _stream_state_bench(
                     row[mk] = mv
             res[label] = row
             shutil.rmtree(ckpt, ignore_errors=True)
-        # r16 (judge r15 ask #1): the transformWithStateInPandas twin,
-        # replaying the SAME staged slices -- measurable since
-        # tools/install_protobuf_shim.py gave this container a protobuf
-        # runtime.  ADDITIVE JSON row (tws_rocksdb), informational /
-        # unbudgeted: measured 38.8 s vs applyInPandasWithState's
-        # 26.6 s at this shape (per-key state-server RPCs + pure-Python
-        # protobuf cost more than inline state columns at 50k groups),
-        # so it is regression-tracked but not the production default.
-        # Skipped silently where protobuf is absent (the pre-r16 gate).
-        try:
-            from finance_etl_pipeline_monthly_close_dataset_spark.streaming import (
-                stateful_tws as _tws,
-            )
-
-            spark.conf.set(
-                key,
-                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-            )
-            ckpt = tempfile.mkdtemp(prefix="ck_tws_")
-            start = time.perf_counter()
-            q = (
-                _tws.streaming_sessionize_tws(
-                    spark, sdir + "/ev", stream_schema, gap_minutes=30,
-                    source_options={"maxFilesPerTrigger": "1"},
-                )
-                .writeStream.format("noop").outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-                t = time.perf_counter() - start
-                progs = [p for p in q.recentProgress if p.get("stateOperators")]
-                prog = progs[-1] if progs else (q.lastProgress or {})
-            finally:
-                q.stop()
-            so = (prog.get("stateOperators") or [{}])[0]
-            res["tws_rocksdb"] = {
-                "t_replay": round(t, 3),
-                "state_rows": so.get("numRowsTotal"),
-                "state_memory_bytes": so.get("memoryUsedBytes"),
-            }
-            shutil.rmtree(ckpt, ignore_errors=True)
-        except NotImplementedError:
-            pass  # no protobuf runtime: the documented pre-r16 state
     finally:
         if prev is None:
             try:
@@ -1377,7 +1332,7 @@ def main() -> None:
     # sf0.001, which does NOT warm the sf0.1 code paths: AQE picks
     # different physical plans at different SFs, so the generated
     # codegen classes differ and the first sf0.1 pass pays the JIT cost.
-    # Reproduced exclusively (tools/repro_drift.py, quiet machine, no
+    # Reproduced exclusively (PLANS.md round 14: quiet machine, no
     # foreign JVMs, no code change): fresh-JVM pass 0 ran
     # docs_ngram_jaccard_recall at 4.43 s median, decaying to
     # 1.70/1.27/1.55 across passes 1-3 in the same JVM -- exactly the

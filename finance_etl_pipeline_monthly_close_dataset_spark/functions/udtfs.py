@@ -82,24 +82,19 @@ class _UserSessionStats:
 
     @staticmethod
     def _column_indexes(names) -> tuple[int, int]:
-        """(user_ix, time_ix) by FIELD NAME, not position: a caller
-        reordering the TABLE-argument SELECT must not silently swap
-        user and time (r15 verdict hardening).  The user column is
-        ``user_id`` (fallback: first column); the time column is
-        ``us``/``ts`` when present, else the first non-user column.  A
-        TABLE argument with fewer than two columns has no time column:
-        ValueError."""
-        if len(names) < 2:
+        """(user_ix, time_ix) by FIELD NAME, never by position: a
+        caller reordering the TABLE-argument SELECT must not silently
+        swap user and time (r15 verdict hardening).  The user column
+        is ``user_id``; the time column is ``us``, else ``ts``.  Any
+        other schema is a ValueError naming the expected columns."""
+        names = list(names)
+        time_col = next((c for c in ("us", "ts") if c in names), None)
+        if "user_id" not in names or time_col is None:
             raise ValueError(
                 "user session stats need a TABLE argument with a user column (user_id) "
-                f"and a time column (us or ts); got columns {list(names)}"
+                f"and a time column (us or ts); got columns {names}"
             )
-        user_ix = names.index("user_id") if "user_id" in names else 0
-        for cand in ("us", "ts"):
-            if cand in names and names.index(cand) != user_ix:
-                return user_ix, names.index(cand)
-        time_ix = next(i for i in range(len(names)) if i != user_ix)
-        return user_ix, time_ix
+        return names.index("user_id"), names.index(time_col)
 
     def eval(self, batch: pa.RecordBatch):  # noqa: ANN201
         import numpy as np

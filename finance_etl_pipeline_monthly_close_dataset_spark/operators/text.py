@@ -60,29 +60,3 @@ def ngrams_of(toks: Column, k: int = 2) -> Column:
         F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1))),
         lambda i: F.array_join(F.slice(toks, i, k), " "),
     )
-
-
-def ngrams(text: Column, k: int = 2) -> Column:
-    """Convenience form over raw text -- O(n^2) per document like
-    ``shingles``; stage tokens and use ``ngrams_of`` in operators."""
-    return ngrams_of(tokens(text), k)
-
-
-def char_ngrams_of(s: Column, k: int = 5) -> Column:
-    """Distinct character k-grams over an already-projected normalized
-    string column (same staging contract as ``shingles_of`` -- an
-    inline lower/trim here re-normalizes the string per position)."""
-    n = F.length(s)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1))),
-            lambda i: s.substr(i, F.lit(k)),
-        )
-    )
-
-
-def char_ngrams(text: Column, k: int = 5) -> Column:
-    """Convenience form: distinct character k-grams of the lower-cased
-    text. Stage ``lower(trim(text))`` and use ``char_ngrams_of`` in
-    hot paths."""
-    return char_ngrams_of(F.lower(F.trim(text)), k)

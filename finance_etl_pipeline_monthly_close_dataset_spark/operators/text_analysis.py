@@ -37,7 +37,7 @@ def lang_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     Scope note: tokenization is whitespace-based, so unsegmented
     scripts (zh/ja/th) only score when the text is pre-segmented; the
     zh seed list exists for segmented input. A production language ID
-    would add char-n-gram profiles (see ``text.char_ngrams``) -- the
+    would add char-n-gram profiles -- the
     operator contract here is deterministic scoring."""
     out = df
     for lang in STOPWORDS:

@@ -43,7 +43,7 @@ from ..schemas import (
     SALES_SCHEMA,
 )
 from ..sources.readers import ROW_ID_COL, local_frame, read_csv, read_csv_typed
-from ..sources.writers import write_csv_single_file, write_parquet
+from ..sources.writers import promote_dir, recover_dir, write_csv_single_file, write_parquet
 from .quality import (
     add_severity,
     build_dataset_specs,
@@ -157,6 +157,13 @@ def run_month(
     raw_dir = Path(raw_dir) if raw_dir is not None else None
     curated_dir, reference_dir = Path(curated_dir), Path(reference_dir)
     os.makedirs(curated_dir, exist_ok=True)
+    out_fact = curated_dir / "fact_transactions.parquet"
+    out_dim = curated_dir / "dim_accounts.parquet"
+    out_kpi = curated_dir / "kpi_monthly.parquet"
+    tmp_fact = str(out_fact) + "._building"
+    # repair a crash inside an earlier close's fact promotion first, so
+    # even a close that stops at the gate leaves the previous fact whole
+    recover_dir(str(out_fact), tmp_fact)
 
     # -- reference + raw scans (typed, no inference) -------------------------
     coa = read_csv(spark, str(reference_dir / "chart_of_accounts.csv"), COA_SCHEMA)
@@ -213,8 +220,10 @@ def run_month(
     # literal-set predicate -- the uniqueness group-by, and since r12
     # the fact build), so their declared-column slices persist once
     # here and all consumers read the cache -- one CSV scan each.  The
-    # other datasets go straight to collect_exceptions, which persists
-    # internally only when more than one family consumes the scan.
+    # close owns every cache it makes, so the other datasets go to
+    # collect_exceptions with persist_intermediates=False: fx_rates, the
+    # one with two consumers (row checks + uniqueness), is days x
+    # currencies rows, cheaper to scan twice than to cache and release.
     specs = build_dataset_specs(settings.allowed_currencies, settings.base_currency)
     from .quality import account_in_coa_exceptions, checked_slice, coa_membership_check
 
@@ -276,7 +285,7 @@ def run_month(
             collect_exceptions(
                 checked,
                 specs[name],
-                persist_intermediates=(name not in slices) and not lake_mode,
+                persist_intermediates=False,
                 precomputed_unique=pre_unique,
             )
         )
@@ -364,13 +373,9 @@ def run_month(
     ]
     obs = Observation("fact_stats")
     fact = fact.observe(obs, *fact_stats)
-    out_fact = curated_dir / "fact_transactions.parquet"
-    out_dim = curated_dir / "dim_accounts.parquet"
-    out_kpi = curated_dir / "kpi_monthly.parquet"
 
     import shutil
 
-    tmp_fact = str(out_fact) + "._building"
     promoted = False
     try:
         write_parquet(fact, tmp_fact)
@@ -386,9 +391,7 @@ def run_month(
                 .collect()
             ]
             raise MissingFxRatesError(f"Missing FX rates for: {pairs}")
-        if os.path.exists(out_fact):
-            shutil.rmtree(out_fact)
-        os.rename(tmp_fact, out_fact)
+        promote_dir(tmp_fact, str(out_fact))
         promoted = True
     finally:
         # any non-promotion exit (missing FX, write failure, obs

@@ -41,6 +41,47 @@ def write_parquet(
     writer.parquet(path)
 
 
+def recover_dir(path: str, scratch: str | None = None) -> None:
+    """Repair a crash inside ``promote_dir(..., path)``.
+
+    Promotion is: build in scratch -> rename ``path`` aside to
+    ``path__old`` -> rename the build into place -> delete the aside
+    copy.  Every interruption point leaves one of these states:
+
+    * ``__old`` and ``path`` present: crashed after promotion -- drop
+      ``__old``.
+    * ``__old`` present, no ``path``: crashed between the two renames
+      -- restore ``__old`` as ``path``.
+    * ``scratch`` present: a possibly half-written build -- drop it.
+    """
+    old = path.rstrip("/") + "__old"
+    if os.path.exists(old):
+        if os.path.exists(path):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, path)
+    if scratch is not None and os.path.exists(scratch):
+        shutil.rmtree(scratch)
+
+
+def promote_dir(built: str, path: str) -> None:
+    """Move the finished directory ``built`` into place at ``path``.
+
+    Rename-aside: the previous ``path`` is moved to ``path__old``, not
+    deleted, before the new one lands, so at no instant is the previous
+    copy gone without the new one in place; ``recover_dir`` repairs any
+    crash point.  A leftover ``__old`` from an earlier crash is
+    recovered first.
+    """
+    recover_dir(path)
+    old = path.rstrip("/") + "__old"
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(built, path)
+    if os.path.exists(old):
+        shutil.rmtree(old)
+
+
 def write_csv_single_file(df: DataFrame, path: str) -> None:
     """Write ``df`` as a single CSV file at ``path`` (with header).
 
@@ -126,12 +167,15 @@ def compact_parquet(
     (``col=value`` subdirectories) are rewritten with the SAME
     ``partitionBy`` layout, hash-colocating each partition value so
     every leaf directory collapses to ~1 file. Promotion is
-    rename-aside (old dir moved, new dir renamed in, old dir deleted)
-    so no crash point leaves the table missing or half-written.
+    ``promote_dir`` (rename-aside), and a crash left by an earlier
+    compaction is recovered first, so no crash point leaves the table
+    missing or half-written.
     Returns the new data-file count.
     """
     import math
 
+    tmp = path.rstrip("/") + "__compacting"
+    recover_dir(path, tmp)
     data_files: list[str] = []
     for root, _dirs, files in os.walk(path):
         for f in files:
@@ -158,8 +202,6 @@ def compact_parquet(
         probe = subdirs[0]
 
     df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "__compacting"
-    old = path.rstrip("/") + "__precompact"
     if part_cols:
         # repartition on the partition columns hash-routes all rows of
         # one partition value to one task -> one output file per leaf
@@ -172,11 +214,7 @@ def compact_parquet(
         )
     else:
         df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    promote_dir(tmp, path)
     return len(
         [
             os.path.join(root, f)

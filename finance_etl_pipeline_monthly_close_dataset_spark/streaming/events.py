@@ -254,8 +254,9 @@ def streamed_upsert_sink(
 
     Each micro-batch is merged with the current lake contents and the
     latest row per key wins (by event time, batch beating lake on
-    ties); the result is rewritten through a temp directory + atomic
-    rename so a crashed batch never leaves a half-written lake, and
+    ties); the result is rewritten through a temp directory and promoted
+    with ``promote_dir`` (rename-aside, recovered at the next batch) so
+    a crashed batch never leaves a half-written or missing lake, and
     re-processing the same batch is idempotent (last-writer-wins is
     insensitive to replay). At 100 TB the same ``foreachBatch`` body
     targets a transactional MERGE (Delta/Iceberg) instead of the
@@ -265,33 +266,15 @@ def streamed_upsert_sink(
     Returns the started ``StreamingQuery`` (caller awaits/stops it).
     """
     import os
-    import shutil
 
-    from pyspark.sql.window import Window
+    from ..sources.writers import promote_dir, recover_dir
 
     tmp = lake_dir.rstrip("/") + "__merging"
-    old = lake_dir.rstrip("/") + "__old"
-
-    def recover() -> None:
-        # Crash-window recovery. Promotion is: write tmp -> rename
-        # lake aside to old -> rename tmp into place -> delete old.
-        # Every interruption point leaves exactly one of these states:
-        #   old + lake present  -> crashed after promotion: drop old.
-        #   old present, no lake -> crashed between the two renames:
-        #       restore old as the lake (the replayed batch re-merges
-        #       idempotently -- last-writer-wins is replay-insensitive).
-        #   tmp present -> possibly half-written merge output: drop it;
-        #       the replayed batch rewrites it from scratch.
-        if os.path.exists(old):
-            if os.path.exists(lake_dir):
-                shutil.rmtree(old)
-            else:
-                os.rename(old, lake_dir)
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        recover()
+        # a replayed batch after a crash inside promote_dir re-merges
+        # idempotently: last-writer-wins is replay-insensitive
+        recover_dir(lake_dir, tmp)
         target = batch.sparkSession
         if os.path.exists(lake_dir):
             current = target.read.parquet(lake_dir).withColumn(
@@ -309,15 +292,7 @@ def streamed_upsert_sink(
             .drop("__rn", "__is_new")
         )
         latest.write.mode("overwrite").parquet(tmp)
-        # Rename-aside promotion: the previous lake is moved, not
-        # deleted, before the new one lands -- at no instant is the
-        # lake path the only copy missing, so a crash anywhere in this
-        # sequence is repaired by recover() above.
-        if os.path.exists(lake_dir):
-            os.rename(lake_dir, old)
-        os.rename(tmp, lake_dir)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        promote_dir(tmp, lake_dir)
 
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:

@@ -402,60 +402,63 @@ def test_continuous_rollup_matches_batch_recompute(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "rollup_c")).filter("key = 'click'").count() == 1
 
 
-def test_tws_sessionize_processor_logic():
-    """The transformWithState sessionizer's PROCESSOR logic, driven
-    directly against a fake value-state handle (the state transport
-    needs protobuf, absent here -- module docstring): two deliveries
-    must stitch sessions across the batch boundary exactly like the
-    applyInPandasWithState path -- same-gap continuation keeps the
-    session id, a wide gap increments it, state carries (last_ts,
-    counter) between calls."""
+def test_sessionize_group_stitches_batches_and_sorts_chunks():
+    """The applyInPandasWithState per-group function, driven directly
+    against a fake ``GroupState``: a continuation inside the gap keeps
+    the session across the batch boundary, the (last_ts, counter)
+    state carries between calls, and a micro-batch delivered as
+    interleaved Arrow chunks is sorted once before numbering."""
     import pandas as pd
 
-    from finance_etl_pipeline_monthly_close_dataset_spark.streaming.stateful_tws import (
-        SessionizeProcessor,
+    from finance_etl_pipeline_monthly_close_dataset_spark.streaming.stateful import (
+        _sessionize_group,
     )
 
-    class FakeValueState:
+    class FakeGroupState:
+        hasTimedOut = False
+
         def __init__(self):
             self.v = None
 
+        @property
         def exists(self):
             return self.v is not None
 
+        @property
         def get(self):
             return self.v
 
         def update(self, v):
             self.v = v
 
-    proc = SessionizeProcessor(gap_seconds=1800)
-    proc.state = FakeValueState()
+    fn = _sessionize_group(gap_seconds=1800, use_timeout=False)
+    state = FakeGroupState()
     t0 = pd.Timestamp("2025-01-01 10:00:00")
 
     # batch 1: two events 10 min apart (one session), then a 2 h gap
     pdf1 = pd.DataFrame({"ts": [t0, t0 + pd.Timedelta(minutes=10), t0 + pd.Timedelta(hours=2)]})
-    out1 = pd.concat(list(proc.handleInputRows((1,), iter([pdf1]), None)))
+    out1 = pd.concat(list(fn((1,), iter([pdf1]), state)))
     assert list(out1["session_id"]) == [1, 1, 2]
+    assert list(out1["user_id"]) == [1, 1, 1]
 
     # batch 2: first event only 5 min after batch 1's last -> SAME
     # session (the cross-batch stitch); then a wide gap -> session 3
     pdf2 = pd.DataFrame({"ts": [t0 + pd.Timedelta(hours=2, minutes=5), t0 + pd.Timedelta(hours=5)]})
-    out2 = pd.concat(list(proc.handleInputRows((1,), iter([pdf2]), None)))
+    out2 = pd.concat(list(fn((1,), iter([pdf2]), state)))
     assert list(out2["session_id"]) == [2, 3]
-    assert proc.state.v[1] == 3  # counter persisted for the next batch
+    assert state.v[1] == 3  # counter persisted for the next batch
+    assert state.v[0] == (t0 + pd.Timedelta(hours=5)).value // 1000
 
     # a micro-batch split across Arrow chunks with INTERLEAVED times
     # must sort the whole batch once: chunk A holds t+6h and t+9h,
     # chunk B holds t+6h05 (inside A's gap) -- per-chunk sorting would
     # process t+9h before t+6h05 and mis-number the sessions
-    proc2 = SessionizeProcessor(gap_seconds=1800)
-    proc2.state = FakeValueState()
+    state2 = FakeGroupState()
     ca = pd.DataFrame({"ts": [t0 + pd.Timedelta(hours=6), t0 + pd.Timedelta(hours=9)]})
     cb = pd.DataFrame({"ts": [t0 + pd.Timedelta(hours=6, minutes=5)]})
-    out3 = pd.concat(list(proc2.handleInputRows((1,), iter([ca, cb]), None)))
-    by_ts = out3.sort_values("ts")["session_id"].tolist()
-    assert by_ts == [1, 1, 2]  # 6h00 and 6h05 share a session; 9h starts one
+    out3 = pd.concat(list(fn((1,), iter([ca, cb]), state2)))
+    assert out3["ts"].is_monotonic_increasing
+    assert list(out3["session_id"]) == [1, 1, 2]  # 6h00 and 6h05 share one
 
 
 def test_rocksdb_state_store_sessionize_and_dedup(spark, tmp_path):
@@ -556,103 +559,6 @@ def test_rocksdb_state_store_sessionize_and_dedup(spark, tmp_path):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
-
-
-def test_tws_sessionize_end_to_end_matches_batch(spark, tmp_path):
-    """The REAL transformWithStateInPandas path, end to end (judge r8
-    ask #6): stream the events through ``streaming_sessionize_tws``
-    into a memory sink and compare against the batch sessionizer --
-    the same contract the applyInPandasWithState test pins.  SKIPS
-    (visibly, not silently green) where google.protobuf is absent:
-    the state transport cannot start without it in this container;
-    install the ``tws`` extra (``pip install .[tws]``) to run it."""
-    import pytest as _pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        _pytest.skip("google.protobuf absent: transformWithState state "
-                     "transport unavailable (install the 'tws' extra)")
-
-    from finance_etl_pipeline_monthly_close_dataset_spark.streaming import events as ev
-    from finance_etl_pipeline_monthly_close_dataset_spark.streaming.stateful_tws import (
-        streaming_sessionize_tws,
-    )
-
-    events = _events(spark)
-    pq = str(tmp_path / "events_tws_pq")
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    ev_long = events.withColumn(
-        "user_id", F.regexp_replace("user_id", "u", "").cast("long")
-    )
-    ev_long.write.mode("overwrite").parquet(pq)
-
-    # transformWithState keeps its states in named column families,
-    # which the HDFS-backed provider does not support -- RocksDB is a
-    # hard requirement of the operator (r16, first run of this test:
-    # the container gained a protobuf runtime this round)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    out = streaming_sessionize_tws(spark, pq, schema, gap_minutes=30)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("t_tws_sessions")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r["user_id"], r["ts"]): r["session_id"]
-            for r in spark.sql("select * from t_tws_sessions").collect()
-        }
-    finally:
-        q.stop()
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-    batch = {
-        (int(r["user_id"].replace("u", "")), r["ts"]): r["session_id"]
-        for r in ev.sessionize(events, gap_minutes=30).collect()
-    }
-    assert got == batch
-
-
-def test_tws_sessionize_gates_on_protobuf(spark, tmp_path):
-    """Without google.protobuf the transformWithState runtime cannot
-    start its state transport; the operator must fail FAST with an
-    actionable NotImplementedError instead of a mid-stream crash --
-    and activate unchanged where protobuf exists."""
-    import pytest as _pytest
-
-    from finance_etl_pipeline_monthly_close_dataset_spark.streaming.stateful_tws import (
-        streaming_sessionize_tws,
-    )
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        _pytest.skip("protobuf installed: the gate is open by design")
-    except ImportError:
-        pass
-    schema = T.StructType(
-        [T.StructField("user_id", T.LongType()), T.StructField("ts", T.TimestampType())]
-    )
-    with _pytest.raises(NotImplementedError, match="protobuf"):
-        streaming_sessionize_tws(spark, str(tmp_path), schema)
 
 
 def test_rollup_max_files_per_trigger_batches(spark, tmp_path):

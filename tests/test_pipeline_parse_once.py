@@ -174,3 +174,80 @@ def test_gate_failure_still_writes_audit(spark, tmp_path, reference_month):
         )
     assert (curated / "dq_exceptions.csv").exists()
     assert not (curated / "fact_transactions.parquet").exists()
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _copy_raw(src, dest, extra_sales_row=None):
+    dest.mkdir()
+    for f in src.iterdir():
+        (dest / f.name).write_text(f.read_text())
+    if extra_sales_row is not None:
+        with (dest / "sales.csv").open("a") as fh:
+            fh.write(extra_sales_row + "\n")
+    return dest
+
+
+def test_close_leaves_no_cached_plan(spark, tmp_path, reference_month):
+    """run_month owns its caches: neither a PASS close nor a gate-FAIL
+    close leaves a plan in the session's cache manager (the fx_rates
+    check slice, with two DQ consumers, used to stay cached)."""
+    from finance_etl_pipeline_monthly_close_dataset_spark.plans.pipeline import (
+        DataQualityGateError,
+        run_month,
+    )
+
+    root = reference_month
+    spark.catalog.clearCache()
+    run_month(
+        spark, Settings(), month="2025-12", raw_dir=root / "raw",
+        curated_dir=tmp_path / "curated_pass", reference_dir=root / "ref",
+    )
+    assert _cache_is_empty(spark)
+
+    bad = _copy_raw(root / "raw", tmp_path / "raw_bad",
+                    "2025-12-10,TLM,INV-X,40000001,XXX,-5.0,bad")
+    with pytest.raises(DataQualityGateError):
+        run_month(
+            spark, Settings(), month="2025-12", raw_dir=bad,
+            curated_dir=tmp_path / "curated_fail", reference_dir=root / "ref",
+        )
+    assert _cache_is_empty(spark)
+
+
+def test_close_recovers_fact_left_aside_by_a_crash(spark, tmp_path, reference_month):
+    """A crash between the two renames of the fact promotion leaves
+    only ``fact_transactions.parquet__old``.  The next close restores
+    it before anything else -- so even a close stopped by the gate
+    leaves the previous fact whole -- and a passing close then
+    replaces it and removes the aside copy."""
+    from finance_etl_pipeline_monthly_close_dataset_spark.plans.pipeline import (
+        DataQualityGateError,
+        run_month,
+    )
+
+    root = reference_month
+    curated = tmp_path / "curated"
+    fact = curated / "fact_transactions.parquet"
+    aside = curated / "fact_transactions.parquet__old"
+    run_month(spark, Settings(), month="2025-12", raw_dir=root / "raw",
+              curated_dir=curated, reference_dir=root / "ref")
+    (fact / "previous-close.marker").write_text("")
+    fact.rename(aside)
+
+    bad = _copy_raw(root / "raw", tmp_path / "raw_bad",
+                    "2025-12-10,TLM,INV-X,40000001,XXX,-5.0,bad")
+    with pytest.raises(DataQualityGateError):
+        run_month(spark, Settings(), month="2025-12", raw_dir=bad,
+                  curated_dir=curated, reference_dir=root / "ref")
+    assert (fact / "previous-close.marker").exists()
+    assert not aside.exists()
+
+    fact.rename(aside)
+    out = run_month(spark, Settings(), month="2025-12", raw_dir=root / "raw",
+                    curated_dir=curated, reference_dir=root / "ref")
+    assert not aside.exists()
+    assert not (fact / "previous-close.marker").exists()
+    assert spark.read.parquet(str(fact)).count() == out["metrics"]["fact_rows"] == 236

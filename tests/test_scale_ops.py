@@ -889,8 +889,9 @@ def test_user_session_stats_udtf_reordered_table_columns(spark):
 
 
 def test_user_session_stats_udtf_single_column_table_is_named_error(spark):
-    """A TABLE argument without a time column fails with a ValueError
-    naming the expected columns, not an opaque StopIteration."""
+    """A TABLE argument without a time column, or whose columns carry
+    neither expected name, fails with a ValueError naming the expected
+    columns -- no positional guess, no opaque StopIteration."""
     import pytest
 
     from finance_etl_pipeline_monthly_close_dataset_spark.functions.udtfs import (
@@ -898,7 +899,7 @@ def test_user_session_stats_udtf_single_column_table_is_named_error(spark):
         register_udtfs,
     )
 
-    for names in (["user_id"], ["ts"], []):
+    for names in (["user_id"], ["ts"], [], ["uid", "t"]):
         with pytest.raises(ValueError, match=r"user_id.*\(us or ts\)"):
             _UserSessionStats._column_indexes(names)
 

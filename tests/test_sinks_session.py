@@ -1,5 +1,5 @@
-"""The single-file CSV sink's atomic swap and the one parser of
-``SPARK_GRAFT_CPUS``."""
+"""The single-file CSV sink's atomic swap, the rename-aside directory
+promotion and the one parser of ``SPARK_GRAFT_CPUS``."""
 
 from __future__ import annotations
 
@@ -9,7 +9,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from finance_etl_pipeline_monthly_close_dataset_spark.session import graft_cpus
-from finance_etl_pipeline_monthly_close_dataset_spark.sources.writers import write_csv_single_file
+from finance_etl_pipeline_monthly_close_dataset_spark.sources.writers import (
+    promote_dir,
+    recover_dir,
+    write_csv_single_file,
+)
 
 
 def test_csv_single_file_replaces_the_previous_file(spark, tmp_path):
@@ -32,6 +36,38 @@ def test_csv_single_file_failed_write_keeps_the_previous_file(spark, tmp_path):
     with open(path) as fh:
         assert fh.read() == "v\nold\n"
     assert os.listdir(tmp_path) == ["dq_exceptions.csv"]  # no temp dir left behind
+
+
+def _mkdir(path, marker):
+    os.makedirs(path)
+    open(os.path.join(path, marker), "w").close()
+    return str(path)
+
+
+def test_promote_dir_recovers_every_crash_point(tmp_path):
+    path = str(tmp_path / "t")
+    old, scratch = path + "__old", path + "__building"
+
+    # first promotion: no previous directory
+    promote_dir(_mkdir(scratch, "v1"), path)
+    assert os.listdir(tmp_path) == ["t"] and os.listdir(path) == ["v1"]
+
+    # crash between the renames: only __old is left -> restored
+    os.rename(path, old)
+    recover_dir(path)
+    assert os.listdir(path) == ["v1"] and not os.path.exists(old)
+
+    # crash after the second rename: both present -> __old dropped;
+    # a half-written scratch build is dropped too
+    _mkdir(old, "v0")
+    _mkdir(scratch, "half")
+    recover_dir(path, scratch)
+    assert os.listdir(tmp_path) == ["t"] and os.listdir(path) == ["v1"]
+
+    # a promotion that finds a stale __old next to the current copy
+    _mkdir(old, "v0")
+    promote_dir(_mkdir(scratch, "v2"), path)
+    assert os.listdir(tmp_path) == ["t"] and os.listdir(path) == ["v2"]
 
 
 @pytest.mark.parametrize(
