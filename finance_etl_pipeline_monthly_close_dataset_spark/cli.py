@@ -13,7 +13,7 @@ import sys
 
 from . import __version__
 from .config import Settings
-from .plans.pipeline import run_month
+from .plans.pipeline import DataQualityGateError, run_month
 from .sample_data import generate_synthetic_raw, write_chart_of_accounts
 from .session import get_spark
 
@@ -326,17 +326,23 @@ def main(argv: list[str] | None = None) -> int:
         raw_dir = "data/raw"
     settings = Settings(base_currency=args.base_currency)
     spark = get_spark()
-    outputs = run_month(
-        spark,
-        settings,
-        month=args.month,
-        raw_dir=raw_dir,
-        curated_dir=args.curated_dir,
-        reference_dir=args.reference_dir,
-        fail_on=args.fail_on,
-        lake_dir=args.lake_dir,
-        raw_lake_dir=args.raw_lake_dir,
-    )
+    try:
+        outputs = run_month(
+            spark,
+            settings,
+            month=args.month,
+            raw_dir=raw_dir,
+            curated_dir=args.curated_dir,
+            reference_dir=args.reference_dir,
+            fail_on=args.fail_on,
+            lake_dir=args.lake_dir,
+            raw_lake_dir=args.raw_lake_dir,
+        )
+    except DataQualityGateError as exc:
+        # a gate decision, not a crash: exit 2 (any other error stays 1)
+        # with the one-line message that names both audit files
+        print(f"run: {exc}", file=sys.stderr)
+        return 2
     for name, path in outputs.items():
         print(f"{name}: {path}")
     return 0

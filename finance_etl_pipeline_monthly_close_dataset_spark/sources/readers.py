@@ -66,33 +66,6 @@ def read_parquet_or_empty(
     return spark.createDataFrame([], schema or T.StructType([]))
 
 
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan -- same columnar pushdown/pruning contract as parquet
-    (Spark's native vectorized ORC reader), for lakes standardized on
-    ORC rather than parquet."""
-    return spark.read.orc(path)
-
-
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    with_row_id: bool = False,
-) -> DataFrame:
-    """Schema-pinned JSON-lines scan (the interchange format of LLM
-    document corpora). Explicit schema for the same reason as CSV: a
-    schema-inference pass over 100 TB of JSONL is a full extra read.
-    Corrupt lines land in ``_corrupt_record`` when the schema declares
-    it (PERMISSIVE mode) instead of failing the scan.
-    """
-    if not os.path.exists(path):
-        raise FileNotFoundError(f"Missing input file: {path}")
-    df = spark.read.schema(schema).json(path)
-    if with_row_id:
-        df = df.withColumn(ROW_ID_COL, F.monotonically_increasing_id())
-    return df
-
-
 RAW_PREFIX = "_raw_"
 
 
@@ -164,14 +137,3 @@ def read_csv_typed(
     reference them (i.e. everything downstream of DQ).
     """
     return typed_view(read_csv_raw(spark, path, schema, with_row_id=with_row_id), schema)
-
-
-def read_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan across schema versions (``mergeSchema``): a lake
-    table written over months gains columns; files written before a
-    column existed surface it as null. Spark merges all footer schemas
-    instead of trusting the first file, so old and new batches stay
-    readable in one scan -- the append-only schema-evolution contract
-    (add-only; renames/retypes are a rewrite, not an evolution).
-    Pushdown and pruning still apply per-file."""
-    return spark.read.option("mergeSchema", "true").parquet(path)

@@ -101,125 +101,3 @@ def write_csv_single_file(df: DataFrame, path: str) -> None:
         os.replace(part_files[0], path)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_by: list[str],
-    n_buckets: int = 32,
-    sort_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a bucketed (and optionally sorted) managed
-    parquet table.
-
-    Bucketing pre-shuffles the data ON WRITE: two tables bucketed the
-    same way on the join key join with ZERO exchanges at read time --
-    the physical plan shows SortMergeJoin with no Exchange on either
-    side. At 100 TB this converts every recurring fact-fact join on
-    the bucket key from a full shuffle into a local merge; the price
-    is one shuffle at write time, amortized over all downstream reads.
-
-    Only ``saveAsTable`` supports bucketing metadata (the Hive-style
-    bucket spec lives in the catalog, not in the parquet files).
-    """
-    writer = df.write.mode(mode).format("parquet").bucketBy(n_buckets, *bucket_by)
-    if sort_by:
-        writer = writer.sortBy(*sort_by)
-    writer.saveAsTable(table)
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """ORC sink with the same partitionBy contract as the parquet sink."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Multi-file JSON-lines sink (one file per partition -- the
-    distributed counterpart of the single-file CSV sink; JSONL
-    consumers glob directories natively)."""
-    df.write.mode(mode).json(path)
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Rewrite a parquet directory into ~``target_file_bytes`` files --
-    the small-files compaction chore every streaming / incremental
-    ingest lake needs (a 100 TB table fed by micro-batches degrades
-    into millions of KB-size files whose open cost dominates scans).
-
-    Sizing comes from the directory's actual on-disk bytes (walked
-    recursively, so Hive-partitioned layouts size correctly), not a
-    row guess, so compression ratio is accounted for. Flat tables
-    compact via a shuffle-free coalesce; Hive-partitioned tables
-    (``col=value`` subdirectories) are rewritten with the SAME
-    ``partitionBy`` layout, hash-colocating each partition value so
-    every leaf directory collapses to ~1 file. Promotion is
-    ``promote_dir`` (rename-aside), and a crash left by an earlier
-    compaction is recovered first, so no crash point leaves the table
-    missing or half-written.
-    Returns the new data-file count.
-    """
-    import math
-
-    tmp = path.rstrip("/") + "__compacting"
-    recover_dir(path, tmp)
-    data_files: list[str] = []
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                data_files.append(os.path.join(root, f))
-    total = sum(os.path.getsize(f) for f in data_files)
-    n_files = max(1, math.ceil(total / target_file_bytes))
-
-    # Hive-style partition dirs (key=value) mean the table's layout is
-    # part of its contract -- a flat coalesce(1) rewrite would silently
-    # drop it. Detect the partition columns from the first level of
-    # directory names; Spark re-infers the same columns on read.
-    part_cols: list[str] = []
-    probe = path
-    while True:
-        subdirs = [
-            d
-            for d in glob.glob(os.path.join(probe, "*"))
-            if os.path.isdir(d) and "=" in os.path.basename(d)
-        ]
-        if not subdirs:
-            break
-        part_cols.append(os.path.basename(subdirs[0]).split("=", 1)[0])
-        probe = subdirs[0]
-
-    df = spark.read.parquet(path)
-    if part_cols:
-        # repartition on the partition columns hash-routes all rows of
-        # one partition value to one task -> one output file per leaf
-        # (modulo hash collisions), preserving the directory layout.
-        (
-            df.repartition(n_files, *part_cols)
-            .write.mode("overwrite")
-            .partitionBy(*part_cols)
-            .parquet(tmp)
-        )
-    else:
-        df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-    promote_dir(tmp, path)
-    return len(
-        [
-            os.path.join(root, f)
-            for root, _dirs, files in os.walk(path)
-            for f in files
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
-    )

@@ -1,35 +1,61 @@
-"""The bench regression budgets are machine-checked (r12, judge r11
-ask #3): ``bench.check_budgets`` must trip on each violation class the
-PLANS.md prose used to track by hand, and stay silent on a clean
-artifact shaped like the committed r11 median pass."""
+"""The bench regression budgets are machine-checked: ``bench.check_budgets``
+gates every lane against one committed reference capture with one rule,
+must trip on each violation class, stay silent on a clean artifact, and
+give the committed captures exactly the flags PLANS.md "One budget
+rule" records."""
 
 from __future__ import annotations
+
+import pytest
 
 import bench
 
 
+def _ref(*path):
+    node = bench.reference()
+    for k in path:
+        node = node[k]
+    return node
+
+
+def _budget(lane: str, *path) -> float:
+    """The timing budget of one reference leaf at the reference's 32 cores."""
+    factor = bench.core_factor(lane, 32)
+    return _ref(lane, *path) * bench.BUDGET_RATIO * factor + bench.BUDGET_GRACE_S
+
+
+def _capture(name: str, cpus: int = 32) -> dict:
+    """A committed capture at the core count it ran at: ``BENCH_r*.json``
+    records it, the local ones ran at 32 unless the caller says."""
+    result, recorded = bench._capture(name)
+    return {**result, "cpus": recorded or cpus}
+
+
 def _clean_result() -> dict:
     return {
-        "queries": dict(bench.BUDGET_MEDIANS),
+        # the reference's own 32-core box: every core factor is 1
+        "cpus": 32,
+        "queries": dict(_ref("queries")),
         "stream_state": {
-            # r15 steady state (core-sized partitions): 22-27 s/provider
-            "hdfs": {"t_replay": 26.2, "state_rows": 50_000},
-            "rocksdb": {"t_replay": 24.5, "state_rows": 50_000},
+            # r16 steady state (core-sized partitions): 20-22 s/provider
+            "hdfs": {"t_replay": 21.2, "state_rows": 50_000},
+            "rocksdb": {"t_replay": 20.5, "state_rows": 50_000},
         },
         "close_10m": {
-            "uniform": {"t_close": 30.0, "verify": {"ok": True, "kpi_cells_match": True}},
-            "skew": {"t_close": 31.0, "verify": {"ok": True, "kpi_cells_match": True}},
-            "lakefed": {"t_close": 25.0, "verify": {"ok": True, "kpi_cells_match": True}},
-            "skew_ratio": 1.03,
+            "uniform": {"t_close": 24.0, "verify": {"ok": True, "kpi_cells_match": True}},
+            "skew": {"t_close": 26.0, "verify": {"ok": True, "kpi_cells_match": True}},
+            "lakefed": {"t_close": 18.0, "verify": {"ok": True, "kpi_cells_match": True}},
+            "skew_ratio": 1.083,
         },
         # r16 steady state (single-transform argmin): hof 3.5-3.7
         "kmeans_k64": {"hof": 3.6, "arrow": 1.1, "max_centroid_delta": 0.0},
+        # r16 steady state at 32 cores
         "ann_1m": {
             "ann_1m_ivf": {
                 "t_build_lloyd_k64": 2.5, "t_probe_nprobe8": 1.24, "recall_at_10": 0.9812,
             },
             "ann_1m_lsh": {
-                "t_probe_12planes": 8.6, "recall_at_10": 1.0,
+                "t_probe_12planes": 5.9, "recall_at_10": 1.0,
                 "t_probe_12planes_arrow": 0.72, "recall_at_10_arrow": 0.9938,
             },
             # r15 lanes (probe/rerank budgeted; encode deliberately not)
@@ -38,8 +64,8 @@ def _clean_result() -> dict:
                 "t_probe_rerank2000": 4.08, "recall_at_10_rerank": 1.0,
             },
             "ann_1m_ivfpq": {
-                "t_encode": 4.4, "t_probe_adc": 1.51, "recall_at_10_adc": 0.1,
-                "t_probe_rerank2000": 4.7, "recall_at_10_rerank": 1.0,
+                "t_encode": 4.4, "t_probe_adc": 0.8, "recall_at_10_adc": 0.1,
+                "t_probe_rerank2000": 2.7, "recall_at_10_rerank": 1.0,
             },
         },
     }
@@ -51,9 +77,8 @@ def test_clean_result_has_no_violations():
 
 def test_headline_regression_trips():
     r = _clean_result()
-    base = bench.R11_HEADLINE_MEDIANS["flagship_revenue_by_month"]
     r["queries"]["flagship_revenue_by_month"] = (
-        base * bench.HEADLINE_REGRESSION_RATIO + bench.HEADLINE_REGRESSION_GRACE_S + 0.01
+        _budget("queries", "flagship_revenue_by_month") + 0.01
     )
     v = bench.check_budgets(r)
     assert len(v) == 1 and "flagship_revenue_by_month" in v[0] and "budget" in v[0]
@@ -61,10 +86,11 @@ def test_headline_regression_trips():
 
 def test_headline_within_grace_does_not_trip():
     r = _clean_result()
-    base = bench.R11_HEADLINE_MEDIANS["docs_fingerprint"]
-    # 1.25x alone would flag this sub-second query; the absolute grace
-    # absorbs it (scheduler noise on a 0.24 s query is not a regression)
-    r["queries"]["docs_fingerprint"] = base * 1.3
+    base = _ref("queries", "docs_fingerprint")
+    # the ratio alone would flag this sub-second query; the absolute
+    # grace absorbs it (scheduler noise on a 0.25 s query is not a
+    # regression)
+    r["queries"]["docs_fingerprint"] = base * 1.5
     assert bench.check_budgets(r) == []
 
 
@@ -77,7 +103,7 @@ def test_missing_headline_row_trips():
 
 def test_stream_state_budget_trips():
     r = _clean_result()
-    r["stream_state"]["rocksdb"]["t_replay"] = bench.STREAM_STATE_BUDGET_S + 1
+    r["stream_state"]["rocksdb"]["t_replay"] = _budget("stream_state", "rocksdb", "t_replay") + 1
     v = bench.check_budgets(r)
     assert len(v) == 1 and "rocksdb" in v[0] and "t_replay" in v[0]
 
@@ -99,22 +125,22 @@ def test_close_verify_failure_trips():
 def test_absent_tiers_do_not_trip():
     # SPARK_GRAFT_SKIP_VOLUME / SKIP_CLOSE runs omit whole tiers; the
     # budgets only judge what the pass actually measured
-    r = {"queries": dict(bench.BUDGET_MEDIANS)}
+    r = {"cpus": 32, "queries": dict(_ref("queries"))}
     assert bench.check_budgets(r) == []
 
 
 # --- full-coverage budgets (r14, judge r13 ask #1) -------------------------
 # The r13 drift (docs_ngram_jaccard_recall 1.42 -> 3.09 s) sailed through
 # because only the 13 headline queries had budgets; every timed query now
-# has one, baselined on the steady-state r12 medians.
+# has one, read from the reference capture.
 
 
 def test_heavy_tier_regression_trips():
     r = _clean_result()
-    base = bench.R12_HEAVY_MEDIANS["docs_ngram_jaccard_recall"]
-    # the exact r13 drift value: 3.087 s against the 1.421 s r12 median
+    # the exact r13 drift value: 3.087 s; this query name ends in
+    # "recall" but sits in the queries lane, so it is gated as a timing
     r["queries"]["docs_ngram_jaccard_recall"] = 3.087
-    assert base * bench.HEADLINE_REGRESSION_RATIO + bench.HEADLINE_REGRESSION_GRACE_S < 3.087
+    assert _budget("queries", "docs_ngram_jaccard_recall") < 3.087
     v = bench.check_budgets(r)
     assert len(v) == 1 and v[0].startswith("heavy:docs_ngram_jaccard_recall")
 
@@ -127,24 +153,38 @@ def test_missing_heavy_row_trips():
 
 
 def test_every_timed_query_has_a_budget():
-    assert set(bench.BUDGET_MEDIANS) == set(bench.HEADLINE) | set(bench.HEAVY)
+    assert set(bench.HEADLINE) | set(bench.HEAVY) <= set(_ref("queries"))
 
 
-def test_py_seam_queries_get_wider_grace():
-    # audio_features at 1.88 s (a real r14 exclusive capture value) is
-    # inside the seam budget (1.176 x 1.25 + 0.8 = 2.27) but would trip
-    # the pure-JVM grace; a genuine 2x regression still trips
+PY_SEAM_QUERIES = (
+    "media_features", "audio_features", "video_features",
+    "image_formats_features", "events_user_sessions_udtf",
+)
+
+
+def test_py_seam_queries_fit_the_one_rule():
+    # The Python-worker queries used to get their own 0.8 s grace for
+    # cross-session seam noise.  The single grace covers every clean
+    # r16 value of the family (the worst is the 8-core capture's), and
+    # a return to the pre-r16 media shape (~1.0-1.1 s) still trips.
+    for name in PY_SEAM_QUERIES:
+        worst = max(
+            bench.effective_budget_view(cap)["queries"][name]
+            for cap in (_capture("BENCH_LOCAL_r16.json"), _capture("BENCH_r16.json"),
+                        _capture("BENCH_r16_c8.json", 8))
+        )
+        r = _clean_result()
+        r["queries"][name] = worst
+        assert bench.check_budgets(r) == [], name
     r = _clean_result()
-    r["queries"]["audio_features"] = 1.88
-    assert bench.check_budgets(r) == []
-    r["queries"]["audio_features"] = 2.4
+    r["queries"]["audio_features"] = 1.009  # the r16-open capture's value
     v = bench.check_budgets(r)
-    assert len(v) == 1 and "audio_features" in v[0] and "0.8s grace" in v[0]
+    assert len(v) == 1 and "audio_features" in v[0] and "0.3s grace" in v[0]
 
 
 def test_close_t_close_budget_trips():
     r = _clean_result()
-    r["close_10m"]["lakefed"]["t_close"] = bench.CLOSE_BUDGET_S["lakefed"] + 1
+    r["close_10m"]["lakefed"]["t_close"] = _budget("close_10m", "lakefed", "t_close") + 1
     v = bench.check_budgets(r)
     assert len(v) == 1 and "close_10m:lakefed" in v[0] and "t_close" in v[0]
 
@@ -158,7 +198,7 @@ def test_close_skew_ratio_budget_trips():
 
 def test_kmeans_k64_budget_trips():
     r = _clean_result()
-    r["kmeans_k64"]["arrow"] = bench.KMEANS_K64_BUDGET_S["arrow"] + 0.5
+    r["kmeans_k64"]["arrow"] = _budget("kmeans_k64", "arrow") + 0.5
     v = bench.check_budgets(r)
     assert len(v) == 1 and "kmeans_k64:arrow" in v[0]
 
@@ -254,7 +294,7 @@ def test_multi_pass_skew_ratio_from_effective_closes():
             "skew_ratio": round(s / u, 3),
         }
     v = bench.check_budgets(bench.effective_budget_view(r))
-    # effective: uniform 30.0, skew 75.0 -> ratio 2.5 trips; skew 75 > 45 budget also trips
+    # effective: uniform 30.0, skew 75.0 -> ratio 2.5 trips; skew 75 > its budget also trips
     assert any("skew_ratio" in x for x in v)
 
 
@@ -294,6 +334,13 @@ def test_recall_floor_checks_worst_pass():
     }
     v = bench.check_budgets(bench.effective_budget_view(r))
     assert len(v) == 1 and "ivf recall_at_10" in v[0]
+
+
+def test_centroid_delta_checks_worst_pass():
+    r = _three_pass_result()
+    r["runs"][1]["kmeans_k64"] = {"hof": 3.6, "arrow": 1.1, "max_centroid_delta": 0.01}
+    v = bench.check_budgets(bench.effective_budget_view(r))
+    assert len(v) == 1 and "max_centroid_delta" in v[0]
 
 
 def test_close_timing_takes_best_pass():
@@ -437,9 +484,9 @@ def test_cold_lane_silent_on_single_pass():
 
 
 def test_cold_first_run_gates_when_baselined(monkeypatch):
-    monkeypatch.setattr(
-        bench, "COLD_FIRST_BASELINE_S", {"headline": 20.0, "heavy": 75.0}
-    )
+    ref = dict(bench.reference())
+    ref["cold_first_run"] = {"headline_total_s": 20.0, "heavy_total_s": 75.0}
+    monkeypatch.setattr(bench, "reference", lambda: ref)
     r = _clean_result()
     r["cold_first_run"] = {"headline_total_s": 20.0 * bench.COLD_FIRST_RATIO + 1, "heavy_total_s": 70.0}
     v = bench.check_cold_budgets(r)
@@ -449,9 +496,9 @@ def test_cold_first_run_gates_when_baselined(monkeypatch):
 
 
 def test_cold_first_unbaselined_records_without_gating(monkeypatch):
-    monkeypatch.setattr(
-        bench, "COLD_FIRST_BASELINE_S", {"headline": None, "heavy": None}
-    )
+    # a reference without a cold_first_run record gates nothing cold
+    ref = {k: v for k, v in bench.reference().items() if k != "cold_first_run"}
+    monkeypatch.setattr(bench, "reference", lambda: ref)
     r = _clean_result()
     r["cold_first_run"] = {"headline_total_s": 9999.0, "heavy_total_s": 9999.0}
     assert bench.check_cold_budgets(r) == []
@@ -476,3 +523,70 @@ def test_bimodal_regression_trips_min_of_medians():
         run["spread"] = {"docs_quality": [0.6, 2.6]}
     v = bench.check_budgets(bench.effective_budget_view(r))
     assert len(v) == 1 and "docs_quality" in v[0]
+
+
+# --- the one rule on the committed captures --------------------------------
+# The flags each committed capture raises (PLANS.md "One budget rule").
+CAPTURE_FLAGS = {
+    ("BENCH_LOCAL_r16.json", 32): set(),
+    ("BENCH_r16.json", 32): set(),
+    # its lsh t_probe_12planes of 13.921 s flagged under the old fixed
+    # ANN budget (13.6 s); the ANN lane's core factor clears it
+    ("BENCH_r16_c8.json", 8): set(),
+    # round-16 open and round-15 final: only the lanes OPTIMIZATION_r16
+    # attributes to code changes (the media family's 2.2-3.1x, the
+    # single-transform argmin); stream_state's drift stays inside
+    ("BENCH_LOCAL_r16base.json", 32): {
+        "heavy:media_features", "heavy:audio_features", "heavy:video_features",
+        "heavy:image_formats_features", "kmeans_k64:hof",
+    },
+    ("BENCH_LOCAL_r15.json", 32): {
+        "heavy:audio_features", "heavy:video_features", "heavy:image_formats_features",
+        "kmeans_k64:hof",
+    },
+}
+
+
+@pytest.mark.parametrize("name,cpus", list(CAPTURE_FLAGS))
+def test_committed_capture_flags(name, cpus):
+    r = _capture(name, cpus)
+    flags = {v.split(": ")[0] for v in bench.check_budgets(bench.effective_budget_view(r))}
+    assert flags == CAPTURE_FLAGS[name, cpus]
+    assert bench.check_cold_budgets(r) == []
+
+
+def test_documented_regression_signatures_still_trip():
+    # the unrolled k-fold k64 HOF shape, as the r16-open capture ran it
+    v = bench.check_budgets(bench.effective_budget_view(_capture("BENCH_LOCAL_r16base.json")))
+    assert any(x.startswith("kmeans_k64:hof: 8.323s") for x in v)
+    # the per-row UDTF seam (8 s+) and pre-r15 stream partitioning
+    # (69 s at 32 cores)
+    r = _clean_result()
+    r["queries"]["events_user_sessions_udtf"] = 8.0
+    r["stream_state"]["hdfs"]["t_replay"] = 69.0
+    v = bench.check_budgets(r)
+    assert {x.split(": ")[0] for x in v} == {
+        "heavy:events_user_sessions_udtf", "stream_state:hdfs t_replay",
+    }
+
+
+def test_core_factor_is_one_at_reference_cores_and_never_below():
+    high, low, factors = bench.lane_core_factors()
+    assert (high, low) == (32, 8)
+    for lane in bench.LANES:
+        assert bench.core_factor(lane, high) == 1.0
+        assert bench.core_factor(lane, low) == pytest.approx(factors[lane])
+        assert all(bench.core_factor(lane, c) >= 1.0 for c in range(1, 129))
+    # the partition-parallel stateful tier is the most core-sensitive
+    assert bench.core_factor("stream_state", 8) > bench.core_factor("ann_1m", 8) > 1.0
+    # a result's own core count wins over the environment
+    r = _clean_result()
+    r["cpus"] = 8
+    r["stream_state"]["hdfs"]["t_replay"] = 64.5  # the 8-core capture's value
+    assert bench.check_budgets(r) == []
+
+
+def test_artifact_path_refuses_the_reference():
+    with pytest.raises(SystemExit, match="budget reference"):
+        bench._artifact_path("16")
+    assert bench._artifact_path("17").endswith("BENCH_LOCAL_r17.json")

@@ -325,30 +325,6 @@ def test_ivf_topk_recall_against_exact(spark):
     assert hits / total >= 0.6
 
 
-def test_jsonl_roundtrip_with_corrupt_records(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from finance_etl_pipeline_monthly_close_dataset_spark.sources.readers import read_jsonl
-    from finance_etl_pipeline_monthly_close_dataset_spark.sources.writers import write_jsonl
-
-    docs = _docs(spark)
-    out = str(tmp_path / "docs_jsonl")
-    write_jsonl(docs, out)
-    schema = T.StructType(
-        [T.StructField("doc_id", T.StringType()), T.StructField("text", T.StringType())]
-    )
-    back = read_jsonl(spark, out, schema)
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, docs.collect()))
-
-    # corrupt line routed to _corrupt_record, not a scan failure
-    bad = tmp_path / "bad.jsonl"
-    bad.write_text('{"doc_id": "ok", "text": "fine"}\n{not json at all\n')
-    schema_c = schema.add("_corrupt_record", T.StringType())
-    rows = read_jsonl(spark, str(bad), schema_c).collect()
-    assert len(rows) == 2
-    assert sum(1 for r in rows if r["_corrupt_record"] is not None) == 1
-
-
 def test_approx_count_distinct_error_bound(spark):
     orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     row = orders.agg(
@@ -936,36 +912,6 @@ def test_weighted_sample_by_hash_probability_semantics(spark):
     assert lo <= w
 
 
-def test_orc_roundtrip_partitioned_with_pushdown(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from finance_etl_pipeline_monthly_close_dataset_spark.sources.readers import read_orc
-    from finance_etl_pipeline_monthly_close_dataset_spark.sources.writers import write_orc
-
-    df = spark.range(100).select(
-        F.col("id"),
-        (F.col("id") % 4).alias("bucket"),
-        F.concat(F.lit("v"), F.col("id")).alias("val"),
-    )
-    out = str(tmp_path / "orc_lake")
-    write_orc(df, out, partition_by=["bucket"])
-
-    back = read_orc(spark, out)
-    assert back.count() == 100
-    assert sorted(back.columns) == ["bucket", "id", "val"]
-
-    # partition pruning: a bucket filter must reach the scan as a
-    # PartitionFilter, not a post-scan Filter over all 4 directories
-    pruned = back.filter(F.col("bucket") == 2)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(bucket" in plan or "bucket#" in plan
-    assert pruned.count() == 25
-
-    # predicate pushdown on a data column reaches the ORC scan
-    plan2 = back.filter(F.col("id") > 90)._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [IsNotNull(id), GreaterThan(id,90)" in plan2
-
-
 def test_corpus_cli_chunk(spark, tmp_path):
     from finance_etl_pipeline_monthly_close_dataset_spark import cli
 
@@ -1341,62 +1287,6 @@ def test_unigram_logprob_hand_computed(spark):
     assert abs(got[1]["avg_neg_logprob"] - round(lp_ab, 6)) < 1e-9
     assert got[2]["n_tokens"] == 2
     assert abs(got[2]["avg_neg_logprob"] - round((lp_ab + lp_c) / 2, 6)) < 1e-9
-
-
-def test_compact_parquet_shrinks_file_count(spark, tmp_path):
-    from finance_etl_pipeline_monthly_close_dataset_spark.sources.writers import (
-        compact_parquet,
-    )
-
-    p = str(tmp_path / "fragmented")
-    spark.range(10_000).repartition(64).write.parquet(p)
-    import glob as g
-    assert len(g.glob(p + "/*.parquet")) == 64
-    n_files = compact_parquet(spark, p, target_file_bytes=1 << 30)
-    assert n_files == 1
-    assert spark.read.parquet(p).count() == 10_000
-
-
-def test_compact_parquet_preserves_partition_layout(spark, tmp_path):
-    """A Hive-partitioned table must keep its col=value directory
-    layout through compaction (and collapse each leaf to ~1 file),
-    not silently flatten into one unpartitioned file."""
-    import glob as g
-    import os
-
-    from finance_etl_pipeline_monthly_close_dataset_spark.sources.writers import (
-        compact_parquet,
-    )
-
-    p = str(tmp_path / "partitioned")
-    df = spark.range(9_000).withColumn("bucket", (F.col("id") % 3).cast("int"))
-    df.repartition(8).write.partitionBy("bucket").parquet(p)
-    assert len(g.glob(p + "/bucket=*/*.parquet")) > 3
-    compact_parquet(spark, p, target_file_bytes=1 << 30)
-    leaves = sorted(os.path.basename(d) for d in g.glob(p + "/bucket=*"))
-    assert leaves == ["bucket=0", "bucket=1", "bucket=2"]
-    for d in g.glob(p + "/bucket=*"):
-        assert len(g.glob(d + "/*.parquet")) == 1
-    back = spark.read.parquet(p)
-    assert back.count() == 9_000
-    assert back.filter(F.col("bucket") == 1).count() == 3_000
-    assert not os.path.exists(p + "__precompact")
-    assert not os.path.exists(p + "__compacting")
-
-
-def test_read_parquet_evolved_merges_schemas(spark, tmp_path):
-    from finance_etl_pipeline_monthly_close_dataset_spark.sources.readers import (
-        read_parquet_evolved,
-    )
-
-    p = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, "a")], "id long, text string").write.parquet(p)
-    spark.createDataFrame(
-        [(2, "b", "en")], "id long, text string, lang string"
-    ).write.mode("append").parquet(p)
-    got = {r["id"]: r for r in read_parquet_evolved(spark, p).collect()}
-    assert set(got[1].asDict()) == {"id", "text", "lang"}
-    assert got[1]["lang"] is None and got[2]["lang"] == "en"
 
 
 def test_incremental_ingest_dedups_within_and_across_batches(spark, tmp_path):

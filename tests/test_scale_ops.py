@@ -1,6 +1,6 @@
-"""Scale-engineering utilities: salted joins, hot-key routing, and
-bucketed co-located joins. Tests assert both result correctness AND
-the physical-plan property each utility exists to deliver."""
+"""Scale-engineering utilities: salted joins and hot-key routing. Tests
+assert both result correctness AND the physical-plan property each
+utility exists to deliver."""
 
 from __future__ import annotations
 
@@ -9,9 +9,6 @@ from pyspark.sql import functions as F
 from finance_etl_pipeline_monthly_close_dataset_spark.operators.skew import (
     broadcast_hot_keys_join,
     salted_join,
-)
-from finance_etl_pipeline_monthly_close_dataset_spark.sources.writers import (
-    write_bucketed_table,
 )
 
 
@@ -62,27 +59,6 @@ def test_broadcast_hot_keys_join_routes_and_matches(spark):
     # the hot slice must actually take the broadcast path
     plan = hybrid._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
-
-
-def test_bucketed_join_has_no_exchange(spark):
-    a = spark.range(10_000).select(F.col("id").alias("k"), (F.col("id") * 3).alias("a"))
-    b = spark.range(5_000).select(F.col("id").alias("k"), (F.col("id") * 7).alias("b"))
-    write_bucketed_table(a, "t_bucketed_a", ["k"], n_buckets=8, sort_by=["k"])
-    write_bucketed_table(b, "t_bucketed_b", ["k"], n_buckets=8, sort_by=["k"])
-    try:
-        ta, tb = spark.table("t_bucketed_a"), spark.table("t_bucketed_b")
-        # bucketed joins must not be pre-empted by broadcast to show the
-        # co-location property
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = ta.join(tb, on="k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # co-located: zero shuffles
-        assert joined.count() == 5_000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        spark.sql("DROP TABLE IF EXISTS t_bucketed_a")
-        spark.sql("DROP TABLE IF EXISTS t_bucketed_b")
 
 
 def test_month_partitioned_lake_prunes_and_upserts(spark, tmp_path):
