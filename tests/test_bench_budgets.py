@@ -24,11 +24,11 @@ def _budget(lane: str, *path) -> float:
     return _ref(lane, *path) * bench.BUDGET_RATIO * factor + bench.BUDGET_GRACE_S
 
 
-def _capture(name: str, cpus: int = 32) -> dict:
+def _capture(name: str) -> dict:
     """A committed capture at the core count it ran at: ``BENCH_r*.json``
-    records it, the local ones ran at 32 unless the caller says."""
-    result, recorded = bench._capture(name)
-    return {**result, "cpus": recorded or cpus}
+    records it, the local ones pinned here ran at 32."""
+    result, cpus = bench._capture(name)
+    return {**result, "cpus": cpus or 32}
 
 
 def _clean_result() -> dict:
@@ -37,25 +37,24 @@ def _clean_result() -> dict:
         "cpus": 32,
         "queries": dict(_ref("queries")),
         "stream_state": {
-            # r16 steady state (core-sized partitions): 20-22 s/provider
-            "hdfs": {"t_replay": 21.2, "state_rows": 50_000},
-            "rocksdb": {"t_replay": 20.5, "state_rows": 50_000},
+            # r15 steady state (core-sized partitions): 22-27 s/provider
+            "hdfs": {"t_replay": 26.2, "state_rows": 50_000},
+            "rocksdb": {"t_replay": 24.5, "state_rows": 50_000},
         },
         "close_10m": {
-            "uniform": {"t_close": 24.0, "verify": {"ok": True, "kpi_cells_match": True}},
-            "skew": {"t_close": 26.0, "verify": {"ok": True, "kpi_cells_match": True}},
-            "lakefed": {"t_close": 18.0, "verify": {"ok": True, "kpi_cells_match": True}},
-            "skew_ratio": 1.083,
+            "uniform": {"t_close": 30.0, "verify": {"ok": True, "kpi_cells_match": True}},
+            "skew": {"t_close": 31.0, "verify": {"ok": True, "kpi_cells_match": True}},
+            "lakefed": {"t_close": 25.0, "verify": {"ok": True, "kpi_cells_match": True}},
+            "skew_ratio": 1.03,
         },
         # r16 steady state (single-transform argmin): hof 3.5-3.7
         "kmeans_k64": {"hof": 3.6, "arrow": 1.1, "max_centroid_delta": 0.0},
-        # r16 steady state at 32 cores
         "ann_1m": {
             "ann_1m_ivf": {
                 "t_build_lloyd_k64": 2.5, "t_probe_nprobe8": 1.24, "recall_at_10": 0.9812,
             },
             "ann_1m_lsh": {
-                "t_probe_12planes": 5.9, "recall_at_10": 1.0,
+                "t_probe_12planes": 8.6, "recall_at_10": 1.0,
                 "t_probe_12planes_arrow": 0.72, "recall_at_10_arrow": 0.9938,
             },
             # r15 lanes (probe/rerank budgeted; encode deliberately not)
@@ -63,9 +62,11 @@ def _clean_result() -> dict:
                 "t_encode": 7.7, "t_probe_adc": 0.88, "recall_at_10_adc": 0.1,
                 "t_probe_rerank2000": 4.08, "recall_at_10_rerank": 1.0,
             },
+            # rerank as the r16-open capture's pass 0 ran it: r15's
+            # pass 0 (4.7 s) flags, see test_ivfpq_rerank_budget_tightened
             "ann_1m_ivfpq": {
-                "t_encode": 4.4, "t_probe_adc": 0.8, "recall_at_10_adc": 0.1,
-                "t_probe_rerank2000": 2.7, "recall_at_10_rerank": 1.0,
+                "t_encode": 4.4, "t_probe_adc": 1.51, "recall_at_10_adc": 0.1,
+                "t_probe_rerank2000": 3.73, "recall_at_10_rerank": 1.0,
             },
         },
     }
@@ -152,8 +153,19 @@ def test_missing_heavy_row_trips():
     assert len(v) == 1 and "events_user_sessions_udtf" in v[0] and "no timing row" in v[0]
 
 
+# Queries added since the reference capture: each runs ungated until
+# REFERENCE_CAPTURE is re-pointed at a capture that ran it -- PLANS.md
+# "One budget rule", new queries.
+AWAITING_REFERENCE: set[str] = set()
+
+
 def test_every_timed_query_has_a_budget():
-    assert set(bench.HEADLINE) | set(bench.HEAVY) <= set(_ref("queries"))
+    unreferenced = (set(bench.HEADLINE) | set(bench.HEAVY)) - set(_ref("queries"))
+    assert unreferenced == AWAITING_REFERENCE, (
+        f"{sorted(unreferenced ^ AWAITING_REFERENCE)}: a query without a leaf in "
+        f"{bench.REFERENCE_CAPTURE} has no budget and waits in AWAITING_REFERENCE "
+        "for the next 32-core capture to be made the reference"
+    )
 
 
 PY_SEAM_QUERIES = (
@@ -171,7 +183,7 @@ def test_py_seam_queries_fit_the_one_rule():
         worst = max(
             bench.effective_budget_view(cap)["queries"][name]
             for cap in (_capture("BENCH_LOCAL_r16.json"), _capture("BENCH_r16.json"),
-                        _capture("BENCH_r16_c8.json", 8))
+                        _capture("BENCH_r16_c8.json"))
         )
         r = _clean_result()
         r["queries"][name] = worst
@@ -222,6 +234,17 @@ def test_ann_probe_time_budget_trips():
     r["ann_1m"]["ann_1m_lsh"]["t_probe_12planes_arrow"] = 9.0
     v = bench.check_budgets(r)
     assert len(v) == 1 and "t_probe_12planes_arrow" in v[0]
+
+
+def test_ivfpq_rerank_budget_tightened():
+    # The one rule gates IVF-PQ rerank at 1.3x the reference's slowest
+    # pass where the hand-tuned table allowed 6.5 s: the r15 capture's
+    # cold pass 0 (4.701 s, same IVF-PQ code) now flags when read as a
+    # single-pass capture.  PLANS.md "One budget rule" records it.
+    r = _clean_result()
+    r["ann_1m"]["ann_1m_ivfpq"]["t_probe_rerank2000"] = 4.701
+    v = bench.check_budgets(r)
+    assert len(v) == 1 and "ivfpq t_probe_rerank2000" in v[0]
 
 
 def test_pq_lane_budgets_trip_and_encode_is_unbudgeted():
@@ -528,31 +551,36 @@ def test_bimodal_regression_trips_min_of_medians():
 # --- the one rule on the committed captures --------------------------------
 # The flags each committed capture raises (PLANS.md "One budget rule").
 CAPTURE_FLAGS = {
-    ("BENCH_LOCAL_r16.json", 32): set(),
-    ("BENCH_r16.json", 32): set(),
+    "BENCH_LOCAL_r16.json": set(),
+    "BENCH_r16.json": set(),
     # its lsh t_probe_12planes of 13.921 s flagged under the old fixed
     # ANN budget (13.6 s); the ANN lane's core factor clears it
-    ("BENCH_r16_c8.json", 8): set(),
+    "BENCH_r16_c8.json": set(),
     # round-16 open and round-15 final: only the lanes OPTIMIZATION_r16
     # attributes to code changes (the media family's 2.2-3.1x, the
     # single-transform argmin); stream_state's drift stays inside
-    ("BENCH_LOCAL_r16base.json", 32): {
+    "BENCH_LOCAL_r16base.json": {
         "heavy:media_features", "heavy:audio_features", "heavy:video_features",
         "heavy:image_formats_features", "kmeans_k64:hof",
     },
-    ("BENCH_LOCAL_r15.json", 32): {
-        "heavy:audio_features", "heavy:video_features", "heavy:image_formats_features",
-        "kmeans_k64:hof",
-    },
+    "BENCH_LOCAL_r15.json": {"heavy:audio_features", "heavy:video_features", "kmeans_k64:hof"},
 }
 
 
-@pytest.mark.parametrize("name,cpus", list(CAPTURE_FLAGS))
-def test_committed_capture_flags(name, cpus):
-    r = _capture(name, cpus)
-    flags = {v.split(": ")[0] for v in bench.check_budgets(bench.effective_budget_view(r))}
-    assert flags == CAPTURE_FLAGS[name, cpus]
+def _flags(result: dict) -> set[str]:
+    return {v.split(": ")[0] for v in bench.check_budgets(bench.effective_budget_view(result))}
+
+
+@pytest.mark.parametrize("name", list(CAPTURE_FLAGS))
+def test_committed_capture_flags(name):
+    r = _capture(name)
+    assert _flags(r) == CAPTURE_FLAGS[name]
     assert bench.check_cold_budgets(r) == []
+    if not CAPTURE_FLAGS[name]:
+        # a clean capture stays clean pass by pass, each pass read as
+        # the driver's single-pass capture is
+        for run in r.get("runs") or []:
+            assert _flags({**run, "cpus": r["cpus"]}) == set()
 
 
 def test_documented_regression_signatures_still_trip():
@@ -586,7 +614,29 @@ def test_core_factor_is_one_at_reference_cores_and_never_below():
     assert bench.check_budgets(r) == []
 
 
-def test_artifact_path_refuses_the_reference():
-    with pytest.raises(SystemExit, match="budget reference"):
-        bench._artifact_path("16")
+def test_reference_is_each_timings_slowest_single_pass():
+    # each pass read as the driver's single-pass capture is gated
+    # (queries on their fastest run), then the slowest pass per leaf
+    passes = [
+        dict(bench._lane_leaves(bench.effective_budget_view(run)))
+        for run in _capture(bench.REFERENCE_CAPTURE)["runs"]
+    ]
+    for path, ref in bench._lane_leaves(bench.reference()):
+        if bench._kind(path) == "timing":
+            assert ref == max(p[path] for p in passes if p.get(path) is not None), path
+
+
+def test_reference_must_match_the_core_factors_cores(monkeypatch):
+    # the core factors are 1 at the high-core capture's count; a
+    # reference taken at another count would scale every budget wrong
+    monkeypatch.setattr(bench, "REFERENCE_CAPTURE", "BENCH_r16_c8.json")
+    with pytest.raises(ValueError, match="ran at 8 cores"):
+        bench.reference.__wrapped__()
+
+
+def test_artifact_path_refuses_the_pinned_captures():
+    assert set(CAPTURE_FLAGS) | {bench.REFERENCE_CAPTURE} <= set(bench.PINNED_CAPTURES)
+    for tag in ("16", "16base", "15"):
+        with pytest.raises(SystemExit, match="pinned capture"):
+            bench._artifact_path(tag)
     assert bench._artifact_path("17").endswith("BENCH_LOCAL_r17.json")

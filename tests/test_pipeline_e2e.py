@@ -125,30 +125,11 @@ def test_warn_only_month_gates_by_fail_on(outputs, tmp_path, fail_on, raises):
     assert (curated / "fact_transactions.parquet").exists() is not raises
 
 
-def test_cli_run_exits_2_on_gate_failure(outputs, tmp_path, capsys):
+def test_gate_blocks_bad_rows_but_writes_audit(outputs, tmp_path, capsys):
+    """``cli run`` on a month with one bad-currency row exits 2 (a gate
+    failure, not a crash) and names both audit files on stderr."""
     from finance_etl_pipeline_monthly_close_dataset_spark import cli
 
-    _, _, root = outputs
-    bad = tmp_path / "raw_bad"
-    bad.mkdir()
-    for f in (root / "raw").iterdir():
-        bad.joinpath(f.name).write_text(f.read_text())
-    with bad.joinpath("sales.csv").open("a") as fh:
-        fh.write("2025-12-10,TLM,INV-XC,40000001,XXX,5.0,bad currency\n")
-    curated = tmp_path / "curated_bad"
-    rc = cli.main([
-        "run", "--month", "2025-12", "--raw-dir", str(bad), "--curated-dir", str(curated),
-        "--reference-dir", str(root / "ref"), "--fail-on", "ERROR",
-    ])
-    assert rc == 2
-    err = capsys.readouterr().err
-    assert "dq_exceptions.csv" in err and "dq_summary.csv" in err
-    assert (curated / "dq_exceptions.csv").exists()
-    assert (curated / "dq_summary.csv").exists()
-    assert not (curated / "fact_transactions.parquet").exists()
-
-
-def test_gate_blocks_bad_rows_but_writes_audit(outputs, tmp_path):
     spark, _, root = outputs
     raw = root / "raw"
     bad = tmp_path / "raw_bad"
@@ -158,11 +139,13 @@ def test_gate_blocks_bad_rows_but_writes_audit(outputs, tmp_path):
     with bad.joinpath("sales.csv").open("a") as fh:
         fh.write("2025-12-10,TLM,INV-XX,40000001,XXX,-5.0,bad row\n")
     curated = tmp_path / "curated_bad"
-    with pytest.raises(DataQualityGateError):
-        run_month(
-            spark, Settings(), month="2025-12", raw_dir=bad, curated_dir=curated,
-            reference_dir=root / "ref", fail_on="ERROR",
-        )
+    rc = cli.main([
+        "run", "--month", "2025-12", "--raw-dir", str(bad), "--curated-dir", str(curated),
+        "--reference-dir", str(root / "ref"), "--fail-on", "ERROR",
+    ])
+    assert rc == 2
+    err = capsys.readouterr().err
+    assert "dq_exceptions.csv" in err and "dq_summary.csv" in err
     # audit trail written before the raise, and no fact promoted
     assert (curated / "dq_exceptions.csv").exists()
     assert not (curated / "fact_transactions.parquet").exists()
