@@ -131,6 +131,7 @@ CORE_CAPTURES = ("BENCH_r16.json", "BENCH_r16_c8.json")
 # may not overwrite any of them
 PINNED_CAPTURES = (
     REFERENCE_CAPTURE, *CORE_CAPTURES, "BENCH_LOCAL_r16base.json", "BENCH_LOCAL_r15.json",
+    "BENCH_LOCAL_r16c8.json",  # the local artifact of the 8-core r16 capture
 )
 BUDGET_RATIO = 1.3
 BUDGET_GRACE_S = 0.3
@@ -1144,8 +1145,9 @@ def main() -> None:
     # Lossless local artifact: a capture of stdout can be tail-truncated
     # on long runs, so the full result is also written to
     # BENCH_LOCAL_r{N}.json (round from $SPARK_GRAFT_ROUND, default
-    # "local") next to this script -- committed per round so every
-    # tier's medians+spreads stay machine-readable.  Resolved first, so
+    # "local") next to this script.  A round's capture is committed under
+    # its round tag so every tier's medians+spreads stay machine-readable;
+    # the default BENCH_LOCAL_rlocal.json is a scratch file git ignores.  Resolved first, so
     # a tag that would overwrite the budget reference fails before an
     # hour of measuring.
     local_path = _artifact_path(os.environ.get("SPARK_GRAFT_ROUND", "local"))

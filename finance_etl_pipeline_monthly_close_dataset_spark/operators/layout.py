@@ -40,12 +40,6 @@ def z_value_n(cols: list[Column], bits: int = 16) -> Column:
     return out
 
 
-def z_value(a: Column, b: Column, bits: int = 16) -> Column:
-    """Two-column Morton interleave (bit 2i from ``a``, bit 2i+1 from
-    ``b``) -- the N=2 case of ``z_value_n``."""
-    return z_value_n([a, b], bits=bits)
-
-
 def write_zordered(
     df: DataFrame,
     path: str,

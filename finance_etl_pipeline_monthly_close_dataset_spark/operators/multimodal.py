@@ -75,22 +75,6 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def synthetic_media(spark, n: int = 64) -> DataFrame:
-    """Deterministic fake media table for plumbing tests: payload is a
-    seeded byte pattern derived from media_id (no media libs needed)."""
-    base = spark.range(n).select(
-        F.col("id").alias("media_id"),
-        F.lit("image").alias("kind"),
-        # payload: repeatable bytes from the id (cast of a hex digest)
-        F.unhex(F.md5(F.col("id").cast("string"))).alias("payload"),
-        F.lit("image/png").alias("mime"),
-        (F.pmod(F.col("id"), F.lit(64)) + 32).cast("int").alias("width"),
-        (F.pmod(F.col("id"), F.lit(48)) + 32).cast("int").alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    return base
-
-
 def deterministic_ppm_media(spark, n: int = 48) -> DataFrame:
     """Deterministic REAL-format media corpus: media_id -> a valid P6
     PPM whose every pixel is the closed-form function
@@ -1088,26 +1072,4 @@ def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
         F.explode(
             F.sequence(F.lit(0), F.coalesce(F.col("duration_ms"), F.lit(0)), F.lit(every_ms))
         ).alias("frame_ts_ms"),
-    )
-
-
-def audio_chunk_plan(media: DataFrame, chunk_ms: int = 10_000, overlap_ms: int = 1_000) -> DataFrame:
-    """Audio chunking *plan*: expand (media_id, duration_ms) into
-    overlapping chunk boundaries with ``sequence`` -- pure Catalyst,
-    mirrors ``frame_sample_plan``. The per-chunk decode/feature step
-    then routes through mapInPandas like ``decode_images``; only chunk
-    boundaries and fixed-size features ever shuffle, never waveforms.
-    """
-    step = chunk_ms - overlap_ms
-    duration = F.coalesce(F.col("duration_ms"), F.lit(0))
-    return (
-        media.filter(F.col("kind") == "audio")
-        .select(
-            "media_id",
-            duration.alias("_dur"),
-            F.explode(F.sequence(F.lit(0), duration, F.lit(step))).alias("chunk_start_ms"),
-        )
-        .filter(F.col("chunk_start_ms") < F.col("_dur"))
-        .withColumn("chunk_end_ms", F.least(F.col("chunk_start_ms") + chunk_ms, F.col("_dur")))
-        .drop("_dur")
     )

@@ -67,20 +67,3 @@ def pack_documents(
         .cast("int")
         .alias("pack_id"),
     )
-
-
-def pack_stats(packed: DataFrame, budget_tokens: int = 2048) -> DataFrame:
-    """Per-(bucket, pack) fill statistics -- the packing-efficiency
-    report a batching pipeline monitors (docs per pack, fill ratio of
-    the token budget from in-pack starts)."""
-    return (
-        packed.groupBy("bucket", "pack_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("sum_tokens"),
-        )
-        .withColumn(
-            "fill_ratio",
-            F.round(F.col("sum_tokens") / F.lit(float(budget_tokens)), 6),
-        )
-    )

@@ -16,10 +16,6 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(F.lower(F.trim(text)), r"\s+"), lambda t: t != F.lit(""))
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text))
-
-
 def shingles_of(toks: Column, k: int = 3) -> Column:
     """Distinct k-token shingles over an ALREADY-PROJECTED token array
     column (transform over positions + slice + array_join -- one pass,

@@ -448,26 +448,3 @@ def run_month(
     outputs["metrics"] = {"dq_exception_rows": dq_counts["dq_exception_rows"], **fact_metrics}
     outputs["stage_seconds"] = _stages
     return outputs
-
-
-def kpi_from_lake(
-    spark: SparkSession,
-    lake_dir: str | Path,
-    reference_dir: str | Path,
-    months: list[str] | None = None,
-) -> DataFrame:
-    """All-months KPI table straight from the partitioned lake.
-
-    The per-month closes build the lake; this reads it back (partition
-    pruning when ``months`` is given), joins the chart of accounts and
-    reuses the same pivot -- one call summarizes every closed month
-    without re-running any close.
-    """
-    from ..sources.readers import read_parquet
-
-    coa = read_csv(spark, str(Path(reference_dir) / "chart_of_accounts.csv"), COA_SCHEMA)
-    dim_accounts = build_dim_accounts(coa)
-    fact = read_parquet(spark, str(Path(lake_dir) / "fact_transactions"))
-    if months:
-        fact = fact.filter(F.col("month").isin(months))
-    return kpi_monthly(fact.drop("month"), dim_accounts)

@@ -148,38 +148,24 @@ class SynthDocsDataSource(DataSource):
         return JsonlCommitWriter(self.options, schema)
 
 
-def synth_vec(vec_id: int, dim: int = 64, n_clusters: int = 64) -> list[float]:
-    """The deterministic embedding closed form (scalar reference for
-    tests/oracles; the reader computes it vectorized): vectors live on
-    ``n_clusters`` integer cluster centers with a per-(id, dim)
-    GRADED jitter (Knuth multiplicative hash over a prime modulus, so
-    no two corpus vectors are byte-identical -- exact duplicates would
-    make top-k ties arbitrary and recall@k meaningless):
+class SynthVecsReader(DataSourceReader):
+    """Partitioned deterministic embedding generator (the corpus the
+    1M x 64d ANN bench reads -- ``bench.py`` ``ann_1m``).  ``read``
+    yields pyarrow RecordBatches built from vectorized numpy, so a
+    1M-row scan is a few array ops per partition instead of 64M Python
+    float constructions.
+
+    Vectors live on ``n_clusters`` integer cluster centers with a
+    per-(id, dim) graded jitter (Knuth multiplicative hash over a prime
+    modulus, so no two vectors are byte-identical -- exact duplicates
+    would make top-k ties arbitrary and recall@k meaningless):
 
         c = vec_id % n_clusters
         base(c, d)   = ((c*37 + d*11) % 17) - 8
         jit(id, d)   = (((id*2654435761 + d*40503) % 1009) - 504) / 1680
         v(id, d)     = base + jit     (stored float32, |jit| <= 0.3)
 
-    so ANN structures (IVF cells, LSH buckets) have real cluster
-    geometry to exploit, nearest-neighbor ranks are unique generically,
-    and any engine reproduces every vector by integer arithmetic."""
-    c = vec_id % n_clusters
-    return [
-        float(
-            ((c * 37 + d * 11) % 17) - 8
-            + (((vec_id * 2654435761 + d * 40503) % 1009) - 504) / 1680
-        )
-        for d in range(dim)
-    ]
-
-
-class SynthVecsReader(DataSourceReader):
-    """Partitioned deterministic embedding generator (the corpus the
-    1M x 64d ANN bench reads -- ``bench.py`` ``ann_1m``).  ``read``
-    yields pyarrow RecordBatches built from vectorized numpy, so a
-    1M-row scan is a few array ops per partition instead of 64M Python
-    float constructions."""
+    so any engine reproduces every vector by integer arithmetic."""
 
     def __init__(self, options):
         self.n_vecs = int(options.get("n_vecs", 100_000))

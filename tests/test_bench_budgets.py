@@ -640,3 +640,16 @@ def test_artifact_path_refuses_the_pinned_captures():
         with pytest.raises(SystemExit, match="pinned capture"):
             bench._artifact_path(tag)
     assert bench._artifact_path("17").endswith("BENCH_LOCAL_r17.json")
+
+
+def test_default_artifact_is_not_a_tracked_file():
+    # a plain ``python bench.py`` must not rewrite a committed capture
+    import os
+    import subprocess
+
+    path = bench._artifact_path("local")
+    listed = subprocess.run(["git", "ls-files", "--", os.path.basename(path)], cwd=os.path.dirname(path),
+                            capture_output=True, text=True)
+    if listed.returncode:
+        pytest.skip("not a git checkout")
+    assert listed.stdout == ""

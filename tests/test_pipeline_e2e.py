@@ -376,33 +376,6 @@ def test_two_month_lifecycle_with_lake(spark, tmp_path):
     assert files and all("month=2025-12" in f for f in files)
 
 
-def test_kpi_from_lake_covers_all_months(spark, tmp_path):
-    from finance_etl_pipeline_monthly_close_dataset_spark.plans.pipeline import kpi_from_lake
-
-    lake = tmp_path / "lake2"
-    ref = tmp_path / "ref2"
-    write_chart_of_accounts(ref)
-    for month in ("2025-11", "2025-12"):
-        raw = tmp_path / f"raw2_{month}"
-        generate_synthetic_raw(raw, month=month, seed=42)
-        run_month(
-            spark, Settings(), month=month, raw_dir=raw,
-            curated_dir=tmp_path / f"curated2_{month}", reference_dir=ref,
-            fail_on="ERROR", lake_dir=lake,
-        )
-    kpi = kpi_from_lake(spark, lake, ref)
-    rows = {(r["entity"], r["month"]): r for r in kpi.collect()}
-    assert set(m for _, m in rows) == {"2025-11", "2025-12"}
-    # December matches the single-month golden
-    assert rows[("TLM", "2025-12")]["Revenue"] == pytest.approx(48129.36, abs=0.01)
-    # ordered by (entity, month) across months
-    keys = [(r["entity"], r["month"]) for r in kpi.collect()]
-    assert keys == sorted(keys) and len(keys) == 4
-    # month filter prunes
-    one = kpi_from_lake(spark, lake, ref, months=["2025-12"])
-    assert {r["month"] for r in one.collect()} == {"2025-12"}
-
-
 def test_scd2_merge(spark):
     import datetime as dt
 

@@ -193,12 +193,12 @@ def test_hll_partials_merge_equals_direct_sketch(spark):
 
 
 def test_z_value_interleaves_bits(spark):
-    from finance_etl_pipeline_monthly_close_dataset_spark.operators.layout import z_value
+    from finance_etl_pipeline_monthly_close_dataset_spark.operators.layout import z_value_n
 
     df = spark.createDataFrame(
         [(0b11, 0b00), (0b00, 0b11), (0b11, 0b11), (0b10, 0b01)], "a long, b long"
     )
-    got = [r[0] for r in df.select(z_value(F.col("a"), F.col("b"), bits=2)).collect()]
+    got = [r[0] for r in df.select(z_value_n([F.col("a"), F.col("b")], bits=2)).collect()]
     # bit 2i <- a's bit i, bit 2i+1 <- b's bit i
     assert got == [0b0101, 0b1010, 0b1111, 0b0110]
 
