@@ -58,7 +58,7 @@ def salted_join(
 # routing is only worth it for a HANDFUL of pathological keys; past
 # this many "hot" keys the data is not skewed, it is merely dense, and
 # a giant literal isin would bloat codegen on every routed filter
-# (the COA_FUSION_CAP lesson applied here, r13)
+# (why the close caps its chart of accounts at COA_MAX_ACCOUNTS, r13)
 MAX_HOT_KEYS = 1_000
 
 

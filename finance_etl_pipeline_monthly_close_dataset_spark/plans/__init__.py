@@ -1,7 +1,6 @@
 from .transforms import (
     MissingFxRatesError,
     add_fx_amount_base,
-    build_dim_accounts,
     fx_to_base,
     kpi_monthly,
     to_fact_transactions,
@@ -10,7 +9,6 @@ from .transforms import (
 __all__ = [
     "MissingFxRatesError",
     "add_fx_amount_base",
-    "build_dim_accounts",
     "fx_to_base",
     "kpi_monthly",
     "to_fact_transactions",

@@ -47,6 +47,8 @@ from ..sources.writers import promote_dir, recover_dir, write_csv_single_file, w
 from .quality import (
     add_severity,
     build_dataset_specs,
+    checked_slice,
+    coa_membership_check,
     collect_exceptions,
     dq_count_metrics,
     dq_gate_status,
@@ -55,7 +57,6 @@ from .quality import (
 )
 from .transforms import (
     MissingFxRatesError,
-    build_dim_accounts,
     fx_to_base,
     kpi_monthly,
     to_fact_transactions,
@@ -78,12 +79,30 @@ def plan_has_month_partition_filter(plan: str) -> bool:
     return bool(re.search(r"PartitionFilters: \[[^\]]*month", plan))
 
 
-# Q12 fusion guard (ADVICE r11): the chart of accounts is collected to
-# the driver and inlined as a literal isin ONLY below this row count;
-# over the cap the close falls back to the broadcast anti-join so an
-# unexpectedly large chart can't bloat codegen or OOM the driver.
-# Module-level so tests can monkeypatch it to force the fallback path.
-COA_FUSION_CAP = 10_000
+# the membership check inlines the chart's codes as a literal set, so a
+# larger chart is refused: an oversized literal bloats codegen and the
+# driver (module-level so tests can monkeypatch it)
+COA_MAX_ACCOUNTS = 10_000
+
+
+class ChartOfAccountsTooLargeError(ValueError):
+    """The chart of accounts has more than ``COA_MAX_ACCOUNTS`` rows."""
+
+
+def read_chart_of_accounts(spark: SparkSession, path: str | Path) -> tuple[list[str], DataFrame]:
+    """The chart of accounts, parsed and collected once: its account
+    codes for ``coa_membership_check``, and ``dim_accounts`` built from
+    the same rows as a one-partition local relation, which feeds both
+    the dim parquet write and the KPI join without re-parsing the CSV.
+    Raises ``ChartOfAccountsTooLargeError`` over ``COA_MAX_ACCOUNTS``
+    rows."""
+    rows = read_csv(spark, str(path), COA_SCHEMA).limit(COA_MAX_ACCOUNTS + 1).collect()
+    if len(rows) > COA_MAX_ACCOUNTS:
+        raise ChartOfAccountsTooLargeError(
+            f"{path} has more than {COA_MAX_ACCOUNTS} accounts, the most the membership check inlines"
+        )
+    dim_accounts = local_frame(spark, [tuple(r) for r in rows], COA_SCHEMA).coalesce(1)
+    return [r["account_code"] for r in rows], dim_accounts
 
 
 def _observed(obs: Observation, metrics: list[Column], read_back) -> dict:
@@ -156,6 +175,9 @@ def run_month(
 
     raw_dir = Path(raw_dir) if raw_dir is not None else None
     curated_dir, reference_dir = Path(curated_dir), Path(reference_dir)
+    # read before anything is written: a refused chart leaves the
+    # curated directory as it was
+    coa_codes, dim_accounts = read_chart_of_accounts(spark, reference_dir / "chart_of_accounts.csv")
     os.makedirs(curated_dir, exist_ok=True)
     out_fact = curated_dir / "fact_transactions.parquet"
     out_dim = curated_dir / "dim_accounts.parquet"
@@ -165,10 +187,7 @@ def run_month(
     # even a close that stops at the gate leaves the previous fact whole
     recover_dir(str(out_fact), tmp_fact)
 
-    # -- reference + raw scans (typed, no inference) -------------------------
-    coa = read_csv(spark, str(reference_dir / "chart_of_accounts.csv"), COA_SCHEMA)
-    dim_accounts = build_dim_accounts(coa)
-
+    # -- raw scans (typed, no inference) -------------------------------------
     # Parse-once for the BIG inputs (r12, judge ask #1, MEASURED
     # design): sales+expenses are parsed once, persisted as the DQ
     # slices, and every later consumer -- both DQ families AND the
@@ -225,25 +244,10 @@ def run_month(
     # one with two consumers (row checks + uniqueness), is days x
     # currencies rows, cheaper to scan twice than to cache and release.
     specs = build_dataset_specs(settings.allowed_currencies, settings.base_currency)
-    from .quality import account_in_coa_exceptions, checked_slice, coa_membership_check
-
-    # the chart of accounts is driver-sized (reference fixture, dozens
-    # of rows): one tiny collect turns Q12 into a row-level literal
-    # membership check instead of a per-dataset anti-join pass.  The
-    # driver-sized assumption is ENFORCED, not assumed (ADVICE r11):
-    # collect at most cap+1 rows; if the chart exceeds the cap, skip
-    # the fusion and fall back to the broadcast anti-join form below --
-    # an oversized literal isin would bloat codegen / OOM the driver.
-    coa_rows = (
-        dim_accounts.select(F.col("account_code").cast("string"))
-        .limit(COA_FUSION_CAP + 1)
-        .collect()
-    )
-    coa_fused = len(coa_rows) <= COA_FUSION_CAP
-    if coa_fused:
-        coa_check = coa_membership_check([r[0] for r in coa_rows])
-        for name in ("sales", "expenses"):
-            specs[name].checks.append(coa_check)
+    # Q12: chart membership is one more row-level check, in the same scan
+    coa_check = coa_membership_check(coa_codes)
+    for name in ("sales", "expenses"):
+        specs[name].checks.append(coa_check)
 
     # Cache ONLY sales+expenses (80% of close rows), and ONLY in CSV
     # mode.  Extending the persist to payroll/inventory was measured at
@@ -289,10 +293,6 @@ def run_month(
                 precomputed_unique=pre_unique,
             )
         )
-        if not coa_fused and name in ("sales", "expenses"):
-            # over-cap chart of accounts: Q12 via the retained broadcast
-            # anti-join (reads the persisted slice, so no extra CSV scan)
-            parts.append(account_in_coa_exceptions(checked, name, dim_accounts))
     exceptions = reduce(DataFrame.unionByName, parts)
 
     # The sweep's one action is the audit write itself: the
@@ -347,20 +347,15 @@ def run_month(
     v_fx = fx_rates.drop(ROW_ID_COL)
 
     # -- fact + KPI (one lazy plan until the writes) --------------------------
-    # check_missing_rates=False: the eager in-plan missing-FX check is
-    # a full extra pass over the inputs (on clean data its isNull
-    # filter matches nothing, so the limit(20) never short-circuits and
-    # every partition is scanned).  The close instead observes
-    # sum(rate IS NULL) on the write action itself -- zero extra scans
-    # -- writes to a scratch name, and only PROMOTES (rename) the fact
-    # when the count is zero, so the reference's hard-error contract
-    # ("no curated fact on missing FX") still holds exactly; the
-    # offending (date, currency) pairs for the error message come from
-    # a pruned scan of the scratch output, paid only in the error path.
+    # Missing FX is enforced here and only here: the fact write
+    # observes sum(rate IS NULL) -- zero extra scans -- writes to a
+    # scratch name, and only PROMOTES (rename) the fact when the count
+    # is zero, so the reference's hard-error contract ("no curated fact
+    # on missing FX") holds exactly; the offending (date, currency)
+    # pairs for the error message come from a pruned scan of the
+    # scratch output, paid only in the error path.
     fx = fx_to_base(v_fx, settings.base_currency)
-    fact = to_fact_transactions(
-        v_sales, v_exp, v_pay, v_inv, fx, settings.base_currency, check_missing_rates=False
-    )
+    fact = to_fact_transactions(v_sales, v_exp, v_pay, v_inv, fx, settings.base_currency)
 
     # close-run metrics ride the write action itself (Observation API):
     # row count, base-amount total, source breadth and the missing-FX

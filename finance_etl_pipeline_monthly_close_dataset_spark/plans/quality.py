@@ -12,9 +12,9 @@ Scale design: all row-level checks for a dataset evaluate in ONE scan.
 Each check is a SQL predicate; it becomes an ``IF(fail, named_struct(...),
 NULL)`` slot of an array that is filtered and exploded -- no per-check
 re-scan, no driver-side row iteration. Key-uniqueness checks are a
-groupBy (one shuffle on a small projection); COA membership is a
-literal-set check (broadcast left-anti join over the cap).  The gate
-and the summary need only per-(dataset, severity) counts, which an
+groupBy (one shuffle on a small projection); COA membership is one
+more row-level check, with the chart's codes as a literal set.  The
+gate and the summary need only per-(dataset, severity) counts, which an
 Observation collects on the audit write itself (``dq_count_metrics``).
 """
 
@@ -80,17 +80,19 @@ def _isin_check(column: str, allowed: list[str]) -> ColumnCheck:
 
 
 def coa_membership_check(account_codes: list[str]) -> ColumnCheck:
-    """Q12 fused into the row-level family (r11): account_code ∈ chart
-    of accounts as a literal-set membership check evaluated in the SAME
-    single scan as the other row-level checks, instead of a separate
-    broadcast anti-join pass over the cached slice.  Valid because the
-    chart of accounts is driver-sized by construction (reference
-    chart_of_accounts.csv, dozens of rows), so the membership set is a
-    literal -- the 100 TB story is unchanged (an isin literal is
-    cheaper to ship than a broadcast table).  Emits rows identical to
-    ``account_in_coa_exceptions``: NULL codes fail too (a left-anti
-    join keeps null keys), hence the explicit IS NULL arm."""
-    codes = ", ".join(_sql_str(c) for c in account_codes)
+    """Q12 in the row-level family: account_code ∈ chart of accounts as
+    a literal-set membership check evaluated in the SAME single scan as
+    the other row-level checks.  Valid because the chart of accounts is
+    driver-sized (reference chart_of_accounts.csv, dozens of rows;
+    ``pipeline.read_chart_of_accounts`` refuses a large one), so the
+    membership set is a literal -- cheaper to ship than a broadcast
+    table.  Set-membership semantics (reference pipeline.py:30-47): a
+    NULL code is in no set and fails, hence the explicit IS NULL arm; a
+    NULL in the chart matches nothing; against an empty chart every row
+    fails."""
+    codes = ", ".join(_sql_str(c) for c in account_codes if c is not None)
+    if not codes:
+        return ColumnCheck("account_code", "account_in_coa", "TRUE")
     return ColumnCheck(
         "account_code", "account_in_coa", f"account_code IS NULL OR account_code NOT IN ({codes})"
     )
@@ -171,9 +173,9 @@ def checked_slice(df: DataFrame, spec: DatasetSpec) -> DataFrame:
     """The projection every check can run against: declared columns +
     their raw-text shadows + the row id. Checks may only reference
     declared columns, so callers that fan one dataset into several
-    check families (row-level, uniqueness, COA membership) can build
+    consumers (row-level checks, uniqueness, the fact build) can build
     this once, persist it, and hand it to each -- the source is then
-    scanned exactly once however many families consume it."""
+    scanned exactly once however many consumers read it."""
     declared = set(spec.columns)
     proj = [
         c
@@ -358,30 +360,6 @@ def schema_shape_rows(df: DataFrame, spec: DatasetSpec) -> list[tuple]:
         if c not in declared:
             rows.append((spec.dataset, None, c, "column_not_in_schema", c, "DataFrameSchema", None, None))
     return rows
-
-
-def account_in_coa_exceptions(df: DataFrame, dataset: str, dim_accounts: DataFrame) -> DataFrame:
-    """Rows whose account_code is not in the chart of accounts (Q12) --
-    a broadcast left-anti join instead of the reference's driver-side
-    set-membership scan (pipeline.py:30-47)."""
-    if "account_code" not in df.columns:
-        return df.sparkSession.createDataFrame([], DQ_EXCEPTIONS_SCHEMA)
-    idx = F.col(ROW_ID_COL) if ROW_ID_COL in df.columns else F.lit(None).cast("long")
-    bad = df.join(
-        F.broadcast(dim_accounts.select(F.col("account_code").cast("string").alias("account_code"))),
-        on="account_code",
-        how="left_anti",
-    )
-    return bad.select(
-        F.lit(dataset).alias("dataset"),
-        idx.cast("long").alias("index"),
-        F.lit("account_code").alias("column"),
-        F.lit("account_in_coa").alias("check"),
-        F.col("account_code").cast("string").alias("failure_case"),
-        F.lit("Column").alias("schema_context"),
-        F.lit(None).cast("int").alias("check_number"),
-        F.lit(None).cast("string").alias("severity"),
-    )
 
 
 def add_severity(dq_exceptions: DataFrame) -> DataFrame:

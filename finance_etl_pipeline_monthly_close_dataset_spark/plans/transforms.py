@@ -7,7 +7,8 @@ Catalyst plans them):
 
 * FX lookup is an EXACT-DATE left equi-join on (date, from_currency),
   not an as-of join; a missing rate for any non-base-currency row is a
-  hard error (transform.py:19-46).
+  hard error (transform.py:19-46), raised by ``run_month`` from the
+  fact write's Observation.
 * Sign conventions are load-bearing (SURVEY.md §7.4 item 12): expenses
   and payroll negative, inventory issues negative; KPI profits use
   ``+`` because signs are already flipped.
@@ -17,9 +18,8 @@ Scale notes (100 TB design):
 * fx and chart-of-accounts are tiny dims -> ``broadcast()`` hints, so
   the fact never shuffles for enrichment.
 * The 4-source union is shuffle-free (Union is a no-exchange node).
-* The missing-rate guard is one count aggregate over a filter --
-  Catalyst pushes the ``rate IS NULL AND currency != base`` predicate
-  below the projection; no collect of fact data.
+* A missing rate is a NULL ``rate``; the close counts them on the fact
+  write itself, so enforcing the rule costs no extra pass.
 * The KPI pivot runs on the driver over the collected, dimension-
   bounded (entity, month, account_type) pre-aggregate.
 """
@@ -61,12 +61,6 @@ class MissingFxRatesError(ValueError):
     its (date, currency) -- reference transform.py:40-42."""
 
 
-def build_dim_accounts(chart_of_accounts: DataFrame) -> DataFrame:
-    """Chart of accounts -> dim_accounts with string account codes
-    (transform.py:6-9)."""
-    return chart_of_accounts.withColumn("account_code", F.col("account_code").cast("string"))
-
-
 def fx_to_base(fx_rates: DataFrame, base_currency: str) -> DataFrame:
     """Normalize FX dates to DateType and keep only rates quoted into
     the base currency (transform.py:12-16)."""
@@ -75,28 +69,18 @@ def fx_to_base(fx_rates: DataFrame, base_currency: str) -> DataFrame:
     )
 
 
-def add_fx_amount_base(
-    df: DataFrame, fx: DataFrame, base_currency: str, check_missing_rates: bool = True
-) -> DataFrame:
+def add_fx_amount_base(df: DataFrame, fx: DataFrame, base_currency: str) -> DataFrame:
     """Left-join FX rates on exact (date, currency) and derive
     ``amount_base = bround(amount * rate, 2)`` (transform.py:19-46).
 
-    Base-currency rows always get rate 1.0; non-base rows must match an
-    FX row or ``MissingFxRatesError`` is raised with the distinct
-    offending (date_key, currency) pairs.
+    Base-currency rows always get rate 1.0.  A non-base row with no FX
+    row for its (date, currency) keeps a NULL ``rate`` and
+    ``amount_base``: that NULL marks the missing rate, and ``run_month``
+    enforces it (``MissingFxRatesError``, no curated fact) from an
+    Observation on the fact write, so the rule costs no extra pass.
 
     The FX side is currencies x days -- broadcast hash join; the fact
     side never shuffles.
-
-    ``check_missing_rates=False`` defers the missing-rate enforcement
-    to the caller (r12): the eager check here is a FULL extra pass over
-    the input (on clean data the isNull filter matches nothing, so the
-    limit never short-circuits), and the close instead rides the check
-    on the fact write itself via the Observation API -- a
-    sum(rate IS NULL) metric costs zero extra scans -- then promotes or
-    deletes the written output. Callers that opt out MUST enforce the
-    missing-rate contract themselves; rows with a missing rate carry a
-    NULL ``rate``/``amount_base``.
     """
     fx_lookup = (
         fx.select(
@@ -126,18 +110,6 @@ def add_fx_amount_base(
             ),
         )
     )
-
-    if check_missing_rates:
-        missing = (
-            out.filter(F.col("rate").isNull())
-            .select(F.col("_date_key").alias("date_key"), "currency")
-            .distinct()
-            .limit(20)
-            .collect()
-        )
-        if missing:
-            pairs = [(str(r["date_key"]), r["currency"]) for r in missing]
-            raise MissingFxRatesError(f"Missing FX rates for: {pairs}")
 
     return out.withColumn("amount_base", money_round(F.col("amount") * F.col("rate"))).drop(
         "_date_key", "_fx_date", "_fx_currency", "_fx_rate"
@@ -215,7 +187,6 @@ def to_fact_transactions(
     inventory: DataFrame,
     fx: DataFrame,
     base_currency: str,
-    check_missing_rates: bool = True,
 ) -> DataFrame:
     """Union the four normalized sources, enrich with FX, assemble the
     curated fact table (transform.py:49-110).
@@ -233,7 +204,7 @@ def to_fact_transactions(
         .withColumn("currency", F.col("currency").cast("string"))
     )
 
-    fact = add_fx_amount_base(fact, fx, base_currency, check_missing_rates=check_missing_rates)
+    fact = add_fx_amount_base(fact, fx, base_currency)
 
     fact = fact.withColumn(
         "txn_id",

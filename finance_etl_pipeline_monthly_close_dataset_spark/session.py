@@ -49,26 +49,34 @@ def graft_cpus() -> int | None:
 
 
 def _cds_archive_key(spark_home: str, driver_memory: str) -> str | None:
-    """A digest of what makes the JVM refuse an archive: the ``java``
-    binary and its JDK release, the Spark jars (names, sizes, mtimes)
-    and the driver heap.  None when no ``java`` is found."""
+    """``<install>-<heap>``, digests of what makes the JVM refuse an
+    archive: the install is the ``java`` binary, its JDK release and
+    the Spark jars (names, sizes, mtimes); the heap is the driver's.
+    None when no ``java`` is found."""
     java_home = os.environ.get("JAVA_HOME")
     java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
     if not java or not os.path.isfile(java):
         return None
     java = os.path.realpath(java)
     release = Path(java).parents[1] / "release"
-    parts = [java, os.stat(java).st_mtime_ns, driver_memory, release.read_bytes() if release.is_file() else b""]
+    parts = [java, os.stat(java).st_mtime_ns, release.read_bytes() if release.is_file() else b""]
     jars = Path(spark_home) / "jars"
     if jars.is_dir():
         parts += sorted((j.name, j.stat().st_size, j.stat().st_mtime_ns) for j in jars.iterdir())
-    return hashlib.sha256(repr(parts).encode()).hexdigest()[:16]
+
+    def digest(value) -> str:
+        return hashlib.sha256(repr(value).encode()).hexdigest()
+
+    return f"{digest(parts)[:16]}-{digest(driver_memory)[:8]}"
 
 
 def _prune(cache: Path, key: str) -> None:
-    """Remove archives of other keys and temp files whose process is gone."""
+    """Remove archives of another install and temp files whose process
+    is gone; archives of the same install with another heap stay, so
+    configurations that alternate in one cache keep theirs."""
+    install = key.split("-")[0]
     for f in cache.iterdir():
-        if f.suffix == ".jsa" and f.stem != key:
+        if f.suffix == ".jsa" and f.stem.split("-")[0] != install:
             f.unlink(missing_ok=True)
         elif f.suffix == ".tmp":
             pid = f.name.split(".")[1]
@@ -89,8 +97,10 @@ def _cds_options(user_java_opts: str, driver_memory: str) -> tuple[str, Path, tu
     archive of its own in its options), ``SPARK_CONF_DIR`` is set, the
     conf directory holds more than ``*.template`` files (CDS refuses a
     non-empty directory on the class path, and only then does pointing
-    Spark at an empty one change nothing it reads), or the cache cannot
-    be written."""
+    Spark at an empty one change nothing it reads), the cache cannot
+    be written, or another live process is recording this key's archive
+    (it is promoted when that process exits; a second recording would
+    only pay the dump again)."""
     opts = f"{user_java_opts} {os.environ.get('JAVA_TOOL_OPTIONS', '')}"
     if any(flag in opts for flag in ("-Xshare", "SharedArchiveFile", "ArchiveClassesAtExit")):
         return None
@@ -115,6 +125,8 @@ def _cds_options(user_java_opts: str, driver_memory: str) -> tuple[str, Path, tu
     if archive.is_file():
         return f"-XX:SharedArchiveFile={archive} {_CDS_QUIET}", cache / "conf", None
     tmp = cache / f"{key}.{os.getpid()}.tmp"
+    if any(f != tmp for f in cache.glob(f"{key}.*.tmp")):  # _prune left only live recorders
+        return None
     return f"-XX:ArchiveClassesAtExit={tmp} {_CDS_QUIET}", cache / "conf", (tmp, archive)
 
 

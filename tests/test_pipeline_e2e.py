@@ -5,11 +5,13 @@ tolerance, plus DQ gate behavior (SURVEY.md §5)."""
 
 from __future__ import annotations
 
+import shutil
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+import finance_etl_pipeline_monthly_close_dataset_spark.plans.pipeline as pl
 from finance_etl_pipeline_monthly_close_dataset_spark.config import Settings
 from finance_etl_pipeline_monthly_close_dataset_spark.plans.pipeline import (
     DataQualityGateError,
@@ -531,30 +533,74 @@ def test_gate_flags_unknown_account_code(outputs, tmp_path):
     assert coa_rows[0]["severity"] == "ERROR"
 
 
-def test_gate_over_cap_chart_falls_back_to_anti_join(outputs, tmp_path, monkeypatch):
-    """COA fusion guard (ADVICE r11): when the chart of accounts
-    exceeds COA_FUSION_CAP, run_month must skip the literal-isin
-    fusion and emit the same account_in_coa ERROR through the
-    retained broadcast anti-join path."""
-    import finance_etl_pipeline_monthly_close_dataset_spark.plans.pipeline as pl
+def _tree_bytes(root: Path) -> dict[str, bytes]:
+    return {str(p.relative_to(root)): p.read_bytes() for p in sorted(root.rglob("*")) if p.is_file()}
 
+
+def test_over_cap_chart_raises_and_keeps_the_previous_close(outputs, tmp_path, monkeypatch):
+    """A chart of accounts over COA_MAX_ACCOUNTS is refused with a named
+    error before the close writes anything: the previous complete
+    close in the curated directory stays byte-identical."""
+    spark, paths, root = outputs
+    curated = tmp_path / "curated"
+    shutil.copytree(paths["fact"].parent, curated)
+    before = _tree_bytes(curated)
+    monkeypatch.setattr(pl, "COA_MAX_ACCOUNTS", 1)  # the 12-row chart is over it
+    with pytest.raises(pl.ChartOfAccountsTooLargeError):
+        run_month(
+            spark, Settings(), month="2025-12", raw_dir=root / "raw", curated_dir=curated,
+            reference_dir=root / "ref", fail_on="NEVER",
+        )
+    assert _tree_bytes(curated) == before
+
+
+def test_header_only_chart_fails_every_coded_row(outputs, tmp_path):
+    """An empty chart of accounts holds no code, so every sales and
+    expenses row fails account_in_coa (set-membership semantics) and
+    the gate fails."""
     spark, _, root = outputs
-    raw = root / "raw"
-    bad = tmp_path / "raw_badcoa_fallback"
-    bad.mkdir()
-    for f in raw.iterdir():
-        bad.joinpath(f.name).write_text(f.read_text())
-    with bad.joinpath("sales.csv").open("a") as fh:
-        fh.write("2025-12-11,TLM,INV-COA,99999999,USD,5.0,unknown code\n")
-    curated = tmp_path / "curated_badcoa_fallback"
-    monkeypatch.setattr(pl, "COA_FUSION_CAP", 1)  # 12-row chart > cap
+    ref = tmp_path / "ref"
+    ref.mkdir()
+    header = (root / "ref" / "chart_of_accounts.csv").read_text().splitlines()[0]
+    (ref / "chart_of_accounts.csv").write_text(header + "\n")
+    curated = tmp_path / "curated"
     with pytest.raises(DataQualityGateError):
         run_month(
-            spark, Settings(), month="2025-12", raw_dir=bad, curated_dir=curated,
-            reference_dir=root / "ref", fail_on="ERROR",
+            spark, Settings(), month="2025-12", raw_dir=root / "raw", curated_dir=curated,
+            reference_dir=ref, fail_on="ERROR",
         )
     exc = spark.read.csv(str(curated / "dq_exceptions.csv"), header=True).collect()
-    coa_rows = [r for r in exc if r["check"] == "account_in_coa"]
-    assert len(coa_rows) == 1
-    assert coa_rows[0]["failure_case"] == "99999999"
-    assert coa_rows[0]["severity"] == "ERROR"
+    coa = [r for r in exc if r["check"] == "account_in_coa"]
+    assert {r["severity"] for r in coa} == {"ERROR"}
+    for dataset in ("sales", "expenses"):
+        n_rows = len((root / "raw" / f"{dataset}.csv").read_text().splitlines()) - 1
+        assert len({r["index"] for r in coa if r["dataset"] == dataset}) == n_rows > 0
+    assert len(coa) == sum(1 for r in coa if r["dataset"] in ("sales", "expenses"))
+    assert not (curated / "fact_transactions.parquet").exists()
+
+
+def test_chart_is_scanned_once_per_close(outputs, tmp_path, monkeypatch):
+    """The close reads the chart of accounts CSV once: the spy deletes
+    the file right after that read, so a later scan by the membership
+    check, the dim write or the KPI join would fail the close."""
+    spark, _, root = outputs
+    ref = tmp_path / "ref"
+    shutil.copytree(root / "ref", ref)
+    reads, read_chart = [], pl.read_chart_of_accounts
+
+    def read_then_delete(spark_, path):
+        reads.append(path)
+        try:
+            return read_chart(spark_, path)
+        finally:
+            Path(path).unlink()
+
+    monkeypatch.setattr(pl, "read_chart_of_accounts", read_then_delete)
+    out = run_month(
+        spark, Settings(), month="2025-12", raw_dir=root / "raw", curated_dir=tmp_path / "curated",
+        reference_dir=ref, fail_on="ERROR",
+    )
+    assert len(reads) == 1
+    assert spark.read.parquet(str(out["dim_accounts"])).count() == 12
+    kpi = {r["entity"]: r["Revenue"] for r in spark.read.parquet(str(out["kpi"])).collect()}
+    assert kpi["TLM"] == pytest.approx(GOLDEN_KPI["TLM"][0], abs=0.01)

@@ -7,9 +7,9 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from finance_etl_pipeline_monthly_close_dataset_spark.plans.quality import (
-    account_in_coa_exceptions,
     add_severity,
     build_dataset_specs,
+    coa_membership_check,
     collect_exceptions,
     dq_count_metrics,
     dq_gate_status,
@@ -86,15 +86,6 @@ def test_schema_shape_strict(spark, specs):
     kinds = {r[3] for r in exc}
     assert "required_column_missing" in kinds and "column_not_in_schema" in kinds
     assert len(exc) == 5  # 4 missing + 1 extra
-
-
-def test_coa_membership_anti_join(spark):
-    df = _sales(spark, [(TS, "TLM", "I1", "99999999", "USD", 5.0, "")])
-    dim = spark.createDataFrame([("40000001",)], "account_code string")
-    exc = account_in_coa_exceptions(df, "sales", dim).collect()
-    assert len(exc) == 1
-    assert exc[0]["failure_case"] == "99999999"
-    assert exc[0]["check"] == "account_in_coa"
 
 
 def test_severity_rules(spark):
@@ -217,47 +208,40 @@ def test_dtype_coercion_check(spark, specs, tmp_path):
     assert df.filter(F.col("amount") == 7.5).count() == 1
 
 
-def test_coa_membership_fused_matches_anti_join(spark, specs):
-    """r11: the pipeline evaluates Q12 as a fused row-level literal-set
-    check (coa_membership_check) instead of a separate anti-join pass;
-    the two forms must emit the SAME exception row-set -- including a
-    NULL account_code, which a left-anti join keeps (null key never
-    matches) and the fused predicate must keep via its isNull() arm."""
-    from finance_etl_pipeline_monthly_close_dataset_spark.plans.quality import (
-        coa_membership_check,
-        collect_exceptions,
-    )
-
-    df = _sales(
-        spark,
+@pytest.mark.parametrize(
+    "codes, expected",
+    [
+        # an unknown code fails; so does a NULL one, which is in no set
+        (["40000001"], {(0, "99999999"), (2, None)}),
+        # a blank code in the chart matches nothing
+        (["40000001", None], {(0, "99999999"), (2, None)}),
+        # against an empty chart every row fails
+        ([], {(0, "99999999"), (1, "40000001"), (2, None)}),
+    ],
+    ids=["unknown_and_null", "null_in_chart", "empty_chart"],
+)
+def test_coa_membership_check_rows(spark, specs, codes, expected):
+    """Q12 as a row-level literal-set check: one account_in_coa
+    exception per (row index, account code) outside the chart."""
+    df = spark.createDataFrame(
         [
-            (TS, "TLM", "I1", "99999999", "USD", 5.0, ""),   # unknown code
-            (TS, "TLM", "I2", "40000001", "USD", 5.0, ""),   # known code
-            (TS, "TLM", "I3", None, "USD", 5.0, ""),          # NULL code
+            (TS, "TLM", "I1", "99999999", "USD", 5.0, "", 0),  # unknown code
+            (TS, "TLM", "I2", "40000001", "USD", 5.0, "", 1),  # known code
+            (TS, "TLM", "I3", None, "USD", 5.0, "", 2),  # NULL code
         ],
+        "date timestamp, entity string, invoice_id string, account_code string,"
+        " currency string, amount double, description string, _row_id long",
     )
-    dim = spark.createDataFrame([("40000001",)], "account_code string")
-
-    anti = {
-        (r["index"], r["failure_case"])
-        for r in account_in_coa_exceptions(df, "sales", dim).collect()
-    }
-
-    codes = [r[0] for r in dim.collect()]
     spec = specs["sales"]
-    fused_spec = type(spec)(
+    coa_spec = type(spec)(
         dataset=spec.dataset,
         columns=spec.columns,
         not_null=[],
         checks=[coa_membership_check(codes)],
         unique_keys=[],
     )
-    fused = {
-        (r["index"], r["failure_case"])
-        for r in collect_exceptions(df, fused_spec).collect()
-    }
-    assert fused == anti and len(fused) == 2
+    exc = collect_exceptions(df, coa_spec).collect()
+    assert {(r["index"], r["failure_case"]) for r in exc} == expected and len(exc) == len(expected)
     assert all(
-        r["check"] == "account_in_coa" and r["column"] == "account_code"
-        for r in collect_exceptions(df, fused_spec).collect()
+        (r["dataset"], r["column"], r["check"]) == ("sales", "account_code", "account_in_coa") for r in exc
     )

@@ -51,18 +51,49 @@ def test_archive_with_the_right_key_is_read(install):
     assert opts.startswith(f"-XX:SharedArchiveFile={archive} ")
 
 
-@pytest.mark.parametrize("change", ["jar", "driver_memory"])
+@pytest.mark.parametrize("change", ["jar", "new_jar"])
 def test_stale_key_records_afresh_and_prunes_the_old_archive(install, change):
     _, _, (_, old) = session._cds_options("", "8g")
     old.write_bytes(session._CDS_MAGIC)
-    memory = "8g"
     if change == "jar":
         (install / "jars" / "spark-core.jar").write_bytes(b"a rebuilt jar")
     else:
-        memory = "4g"
-    opts, _, (tmp, new) = session._cds_options("", memory)
+        (install / "jars" / "spark-sql.jar").write_bytes(b"jar")
+    opts, _, (tmp, new) = session._cds_options("", "8g")
     assert new != old and not old.exists()
     assert opts.startswith(f"-XX:ArchiveClassesAtExit={tmp} ")
+
+
+def test_archives_of_two_heaps_coexist(install):
+    """Two driver heaps alternating in one cache each keep their archive."""
+    archives = {}
+    for memory in ("8g", "4g"):
+        _, _, (_, archives[memory]) = session._cds_options("", memory)
+        archives[memory].write_bytes(session._CDS_MAGIC)
+    assert archives["8g"] != archives["4g"]
+    for memory in ("8g", "4g", "8g"):
+        opts, _, recording = session._cds_options("", memory)
+        assert recording is None
+        assert opts.startswith(f"-XX:SharedArchiveFile={archives[memory]} ")
+    assert all(a.exists() for a in archives.values())
+
+
+def test_no_second_recording_while_another_process_records(install):
+    _, _, (tmp, archive) = session._cds_options("", "8g")
+    recorder = subprocess.Popen([sys.executable, "-c", "import sys; sys.stdin.read()"], stdin=subprocess.PIPE)
+    theirs = tmp.with_name(f"{tmp.name.split('.')[0]}.{recorder.pid}.tmp")
+    theirs.write_bytes(b"\0")
+    try:
+        assert session._cds_options("", "8g") is None  # a plain start
+        # another heap's archive is not the one being recorded
+        assert session._cds_options("", "4g")[2] is not None
+    finally:
+        recorder.stdin.close()
+        recorder.wait()
+    # once the recorder is gone its temp file is an orphan: record afresh
+    opts, _, (mine, _) = session._cds_options("", "8g")
+    assert not theirs.exists() and not archive.exists()
+    assert opts.startswith(f"-XX:ArchiveClassesAtExit={mine} ")
 
 
 def test_orphaned_temp_files_are_pruned(install):

@@ -9,9 +9,7 @@ from pyspark.sql import functions as F
 
 from finance_etl_pipeline_monthly_close_dataset_spark.functions.money import money_round
 from finance_etl_pipeline_monthly_close_dataset_spark.plans.transforms import (
-    MissingFxRatesError,
     add_fx_amount_base,
-    build_dim_accounts,
     fx_to_base,
     kpi_monthly,
     to_fact_transactions,
@@ -76,13 +74,16 @@ def test_fx_exact_date_join_converts(spark):
     assert rows["TZS"]["amount_base"] == 0.4
 
 
-def test_fx_missing_rate_raises(spark):
+def test_fx_missing_rate_is_null(spark):
+    """A missing rate stays a NULL ``rate``/``amount_base`` here; the
+    close raises on it (test_pipeline_parse_once::test_missing_fx_leaves_no_curated_fact)."""
     df = spark.createDataFrame(
-        [(dt.datetime(2025, 12, 11), "EUR", 10.0)],  # no rate on the 11th
+        [(dt.datetime(2025, 12, 11), "EUR", 10.0), (dt.datetime(2025, 12, 11), "USD", 10.0)],  # no EUR rate on the 11th
         "date timestamp, currency string, amount double",
     )
-    with pytest.raises(MissingFxRatesError):
-        add_fx_amount_base(df, _fx(spark), "USD")
+    rows = {r["currency"]: r for r in add_fx_amount_base(df, _fx(spark), "USD").collect()}
+    assert (rows["EUR"]["rate"], rows["EUR"]["amount_base"]) == (None, None)
+    assert (rows["USD"]["rate"], rows["USD"]["amount_base"]) == (1.0, 10.0)
 
 
 def test_money_round_is_half_even(spark):
@@ -141,15 +142,13 @@ def test_fact_txn_id_shape(spark):
 
 
 def _coa(spark):
-    return build_dim_accounts(
-        spark.createDataFrame(
-            [
-                ("40000001", "Sales", "Revenue"),
-                ("50000001", "COGS", "COGS"),
-                ("61000001", "Salaries", "Expense"),
-            ],
-            "account_code string, account_name string, account_type string",
-        )
+    return spark.createDataFrame(
+        [
+            ("40000001", "Sales", "Revenue"),
+            ("50000001", "COGS", "COGS"),
+            ("61000001", "Salaries", "Expense"),
+        ],
+        "account_code string, account_name string, account_type string",
     )
 
 

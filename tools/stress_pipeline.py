@@ -42,6 +42,7 @@ from finance_etl_pipeline_monthly_close_dataset_spark.config import Settings  # 
 from finance_etl_pipeline_monthly_close_dataset_spark.plans import quality  # noqa: E402
 from finance_etl_pipeline_monthly_close_dataset_spark.plans.pipeline import (  # noqa: E402
     plan_has_month_partition_filter,
+    read_chart_of_accounts,
     run_month,
 )
 from finance_etl_pipeline_monthly_close_dataset_spark.session import get_spark  # noqa: E402
@@ -181,20 +182,16 @@ def assert_plan_shapes(spark, settings, raw_dir: str, ref_dir: str) -> dict:
     """Mechanical plan checks on the DQ exception path and the fact
     build, using the same builders run_month composes."""
     from finance_etl_pipeline_monthly_close_dataset_spark.schemas import (
-        COA_SCHEMA, EXPENSES_SCHEMA, INVENTORY_SCHEMA, PAYROLL_SCHEMA,
-        SALES_SCHEMA,
+        EXPENSES_SCHEMA, INVENTORY_SCHEMA, PAYROLL_SCHEMA, SALES_SCHEMA,
     )
-    from finance_etl_pipeline_monthly_close_dataset_spark.sources.readers import (
-        read_csv, read_csv_typed,
-    )
+    from finance_etl_pipeline_monthly_close_dataset_spark.sources.readers import read_csv_typed
     from finance_etl_pipeline_monthly_close_dataset_spark.plans.transforms import (
-        build_dim_accounts, fx_to_base, to_fact_transactions,
+        fx_to_base, to_fact_transactions,
     )
     from finance_etl_pipeline_monthly_close_dataset_spark.schemas import FX_SCHEMA
     from finance_etl_pipeline_monthly_close_dataset_spark.sources.readers import ROW_ID_COL
 
-    coa = read_csv(spark, os.path.join(ref_dir, "chart_of_accounts.csv"), COA_SCHEMA)
-    dim = build_dim_accounts(coa)
+    coa_codes, _ = read_chart_of_accounts(spark, os.path.join(ref_dir, "chart_of_accounts.csv"))
     frames = {
         "sales": read_csv_typed(spark, os.path.join(raw_dir, "sales.csv"), SALES_SCHEMA, with_row_id=True),
         "expenses": read_csv_typed(spark, os.path.join(raw_dir, "expenses.csv"), EXPENSES_SCHEMA, with_row_id=True),
@@ -205,9 +202,8 @@ def assert_plan_shapes(spark, settings, raw_dir: str, ref_dir: str) -> dict:
         "fx_rates": read_csv_typed(spark, os.path.join(raw_dir, "fx_rates.csv"), FX_SCHEMA, with_row_id=True),
     }
     specs = quality.build_dataset_specs(("USD", "TZS", "EUR"), "USD")
-    # mirror run_month (r11): COA membership is FUSED into the
-    # row-level family as a literal-set check, not a separate anti-join
-    coa_codes = [r[0] for r in dim.select(F.col("account_code").cast("string")).collect()]
+    # mirror run_month: COA membership is a literal-set check in the
+    # row-level family
     for name in ("sales", "expenses"):
         specs[name].checks.append(quality.coa_membership_check(coa_codes))
 
@@ -229,10 +225,9 @@ def assert_plan_shapes(spark, settings, raw_dir: str, ref_dir: str) -> dict:
     checks["dq_one_scan_rowlevel"] = n_sales_scans <= 2
 
     # mirror run_month (r12): the fact builds from the checked slices
-    # with the eager missing-FX pass deferred to the write's
-    # Observation, so its plan must be SINGLE-PASS -- exactly one scan
-    # of each source -- plus the r10 invariants (broadcast FX, no
-    # shuffle exchange)
+    # and missing FX is counted by the write's Observation, so its plan
+    # must be SINGLE-PASS -- exactly one scan of each source -- plus
+    # the r10 invariants (broadcast FX, no shuffle exchange)
     fx = fx_to_base(frames["fx_rates"].drop(ROW_ID_COL), "USD")
     fact = to_fact_transactions(
         quality.checked_slice(frames["sales"], specs["sales"]).drop(ROW_ID_COL),
@@ -243,7 +238,6 @@ def assert_plan_shapes(spark, settings, raw_dir: str, ref_dir: str) -> dict:
         ).drop(ROW_ID_COL),
         fx,
         "USD",
-        check_missing_rates=False,
     )
     fact_plan = _plan(fact)
     checks["fx_join_broadcast"] = "BroadcastHashJoin" in fact_plan
