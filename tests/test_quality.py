@@ -208,21 +208,25 @@ def test_dtype_coercion_check(spark, specs, tmp_path):
     assert df.filter(F.col("amount") == 7.5).count() == 1
 
 
-@pytest.mark.parametrize(
-    "codes, expected",
-    [
-        # an unknown code fails; so does a NULL one, which is in no set
-        (["40000001"], {(0, "99999999"), (2, None)}),
-        # a blank code in the chart matches nothing
-        (["40000001", None], {(0, "99999999"), (2, None)}),
-        # against an empty chart every row fails
-        ([], {(0, "99999999"), (1, "40000001"), (2, None)}),
-    ],
-    ids=["unknown_and_null", "null_in_chart", "empty_chart"],
-)
-def test_coa_membership_check_rows(spark, specs, codes, expected):
-    """Q12 as a row-level literal-set check: one account_in_coa
-    exception per (row index, account code) outside the chart."""
+def _coa_spec(specs, codes):
+    spec = specs["sales"]
+    return type(spec)(spec.dataset, spec.columns, not_null=[], checks=[coa_membership_check(codes)])
+
+
+def test_coa_membership_anti_join(spark, specs):
+    """Q12: a code outside the chart is one account_in_coa exception
+    row carrying that code, as the reference's left-anti join gives."""
+    df = _sales(spark, [(TS, "TLM", "I1", "99999999", "USD", 5.0, "")])
+    exc = collect_exceptions(df, _coa_spec(specs, ["40000001"])).collect()
+    assert len(exc) == 1
+    assert exc[0]["failure_case"] == "99999999"
+    assert exc[0]["check"] == "account_in_coa"
+
+
+def test_coa_membership_fused_matches_anti_join(spark, specs):
+    """The fused literal-set check emits the (index, code) row-set of a
+    left-anti join against the chart: a NULL code fails (IS NULL arm), a
+    blank chart code matches nothing, an empty chart fails every row."""
     df = spark.createDataFrame(
         [
             (TS, "TLM", "I1", "99999999", "USD", 5.0, "", 0),  # unknown code
@@ -232,16 +236,16 @@ def test_coa_membership_check_rows(spark, specs, codes, expected):
         "date timestamp, entity string, invoice_id string, account_code string,"
         " currency string, amount double, description string, _row_id long",
     )
-    spec = specs["sales"]
-    coa_spec = type(spec)(
-        dataset=spec.dataset,
-        columns=spec.columns,
-        not_null=[],
-        checks=[coa_membership_check(codes)],
-        unique_keys=[],
-    )
-    exc = collect_exceptions(df, coa_spec).collect()
-    assert {(r["index"], r["failure_case"]) for r in exc} == expected and len(exc) == len(expected)
-    assert all(
-        (r["dataset"], r["column"], r["check"]) == ("sales", "account_code", "account_in_coa") for r in exc
-    )
+    for codes, expected in [
+        (["40000001"], {(0, "99999999"), (2, None)}),
+        (["40000001", None], {(0, "99999999"), (2, None)}),
+        ([], {(0, "99999999"), (1, "40000001"), (2, None)}),
+    ]:
+        dim = spark.createDataFrame([(c,) for c in codes], "account_code string")
+        anti = {(r["_row_id"], r["account_code"]) for r in df.join(dim, "account_code", "left_anti").collect()}
+        exc = collect_exceptions(df, _coa_spec(specs, codes)).collect()
+        assert {(r["index"], r["failure_case"]) for r in exc} == anti == expected and len(exc) == len(expected)
+        assert all(
+            (r["dataset"], r["column"], r["check"]) == ("sales", "account_code", "account_in_coa") for r in exc
+        )
+
