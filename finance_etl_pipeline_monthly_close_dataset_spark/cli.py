@@ -13,7 +13,7 @@ import sys
 
 from . import __version__
 from .config import Settings
-from .plans.pipeline import DataQualityGateError, run_month
+from .plans.pipeline import ChartOfAccountsTooLargeError, DataQualityGateError, MissingFxRatesError, run_month
 from .sample_data import generate_synthetic_raw, write_chart_of_accounts
 from .session import get_spark
 
@@ -343,6 +343,10 @@ def main(argv: list[str] | None = None) -> int:
         # with the one-line message that names both audit files
         print(f"run: {exc}", file=sys.stderr)
         return 2
+    except (MissingFxRatesError, ChartOfAccountsTooLargeError, FileNotFoundError) as exc:
+        # the close's named input errors: one line, not a traceback
+        print(f"run: {type(exc).__name__}: {exc}", file=sys.stderr)
+        return 1
     for name, path in outputs.items():
         print(f"{name}: {path}")
     return 0

@@ -1060,16 +1060,3 @@ def deterministic_y4m_media(spark, n: int = 16) -> DataFrame:
             )
 
     return _asset_range(spark, n).mapInPandas(_gen, schema=MEDIA_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: expands (media_id, duration_ms)
-    into frame timestamps with ``sequence`` -- pure Catalyst; the
-    per-frame decode would then route through mapInPandas like
-    decode_images."""
-    return media.filter(F.col("kind") == "video").select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.coalesce(F.col("duration_ms"), F.lit(0)), F.lit(every_ms))
-        ).alias("frame_ts_ms"),
-    )

@@ -7,10 +7,9 @@ tables, rendered to one self-contained HTML file.
 
 Engine boundary: every chart input is a SMALL aggregate (top-k after
 group-sum) computed by Spark and then collected -- the collect is
-bounded by k, never by fact size. Rendering is driver-side: Plotly if
-importable, otherwise dependency-free inline-SVG bars and HTML tables
-(this container has no plotly; the fallback keeps output
-self-contained).
+bounded by k, never by fact size. Rendering is driver-side and
+dependency-free: inline-SVG charts and HTML tables, plus the charts as
+plain-dict Plotly figure JSON for any Plotly runtime to render.
 """
 
 from __future__ import annotations
@@ -25,11 +24,6 @@ from pyspark.sql import functions as F
 from ..sources.readers import read_parquet_or_empty
 from .exports import KPI_COLS, add_margin_cols
 from .star import DATE_COL_CANDIDATES, filter_to_month, infer_month, pick_col
-
-try:  # plotly is optional; not present in this container
-    import plotly.express as px  # type: ignore
-except Exception:  # pragma: no cover - exercised implicitly
-    px = None
 
 
 def top_entities_by_revenue(kpi: DataFrame, k: int = 8) -> list[str]:
@@ -239,19 +233,8 @@ def build_dashboard(
                 op_series.setdefault(r["entity"], []).append(
                     (r["month"], float(r["operating_profit"]))
                 )
-        if px is not None:  # pragma: no cover - plotly not installed here
-            import pandas as pd
-
-            pdf = pd.DataFrame(
-                [(e, m, v) for e, pts_ in rev_series.items() for m, v in pts_],
-                columns=["entity", "month", "Revenue"],
-            ).sort_values(["month", "entity"])
-            fig = px.line(pdf, x="month", y="Revenue", color="entity", markers=True,
-                          title="Revenue Trend (Top Entities)")
-            trend_html = fig.to_html(full_html=False, include_plotlyjs="cdn")
-        else:
-            trend_html = _svg_lines(rev_series, "Revenue Trend (Top Entities)")
-            trend2_html = _svg_lines(op_series, "Operating Profit Trend (Top Entities)")
+        trend_html = _svg_lines(rev_series, "Revenue Trend (Top Entities)")
+        trend2_html = _svg_lines(op_series, "Operating Profit Trend (Top Entities)")
 
     # KPI table for the month
     keep = (

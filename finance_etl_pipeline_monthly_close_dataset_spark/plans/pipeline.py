@@ -17,14 +17,15 @@ proceeds from the ORIGINAL typed inputs (validation is a side-channel,
 not a transform -- Q17; since r12 the big inputs flow through the
 persisted slice projections of those same typed frames, so the one DQ
 parse also feeds the fact).  The fact write is single-pass (r12): the
-missing-FX hard error rides the write's Observation with scratch-dir +
-rename promotion instead of an eager pre-pass.  The KPI is one
-collected pre-aggregate of the written fact, pivoted on the driver.
+missing-FX hard error rides the write's Observation instead of an
+eager pre-pass.  The KPI is one collected pre-aggregate of the written
+fact, pivoted on the driver.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 from functools import reduce
 from pathlib import Path
 
@@ -43,7 +44,7 @@ from ..schemas import (
     SALES_SCHEMA,
 )
 from ..sources.readers import ROW_ID_COL, local_frame, read_csv, read_csv_typed
-from ..sources.writers import promote_dir, recover_dir, write_csv_single_file, write_parquet
+from ..sources.writers import STAGING, commit_dir, recover_commit, write_csv_single_file, write_parquet
 from .quality import (
     add_severity,
     build_dataset_specs,
@@ -144,7 +145,13 @@ def run_month(
     lake stores sparse ``_raw_`` shadows), gate, fact, KPI -- runs the
     IDENTICAL plan code, so the two modes are output-equal by
     construction (pinned by tests/test_raw_lake.py); what changes is
-    the dq_sweep's floor, which was the CSV parse (PLANS.md r12)."""
+    the dq_sweep's floor, which was the CSV parse (PLANS.md r12).
+
+    Every output is staged under ``curated/_staging/`` and published
+    by ``commit_dir`` twice: the audit pair before the gate can raise,
+    then fact, ``dim_accounts`` and ``kpi_monthly`` together, so an
+    error after the gate leaves the previous three tables (PLANS.md
+    "One commit path")."""
     fail_on = (fail_on or "ERROR").upper().strip()
     if fail_on not in {"ERROR", "WARN", "NEVER"}:
         raise ValueError("fail_on must be one of: ERROR, WARN, NEVER")
@@ -179,13 +186,14 @@ def run_month(
     # curated directory as it was
     coa_codes, dim_accounts = read_chart_of_accounts(spark, reference_dir / "chart_of_accounts.csv")
     os.makedirs(curated_dir, exist_ok=True)
+    # finish or discard an interrupted close's commit first, so even a
+    # close that stops at the gate leaves one complete previous close
+    recover_commit(str(curated_dir))
+    stage = curated_dir / STAGING
     out_fact = curated_dir / "fact_transactions.parquet"
     out_dim = curated_dir / "dim_accounts.parquet"
     out_kpi = curated_dir / "kpi_monthly.parquet"
-    tmp_fact = str(out_fact) + "._building"
-    # repair a crash inside an earlier close's fact promotion first, so
-    # even a close that stops at the gate leaves the previous fact whole
-    recover_dir(str(out_fact), tmp_fact)
+    staged_fact = str(stage / out_fact.name)
 
     # -- raw scans (typed, no inference) -------------------------------------
     # Parse-once for the BIG inputs (r12, judge ask #1, MEASURED
@@ -268,117 +276,113 @@ def run_month(
     }
     if not lake_mode:
         slices = {name: df.persist() for name, df in slices.items()}
-    # driver-side shape checks: one local relation, and none at all on
-    # a well-formed month
-    shape_rows = [r for name, df in frames.items() for r in schema_shape_rows(df, specs[name])]
-    parts = [local_frame(spark, shape_rows, DQ_EXCEPTIONS_SCHEMA)] if shape_rows else []
-    for name, df in frames.items():
-        checked = slices.get(name, df)
-        # lake mode reads the ingest-materialized uniqueness exceptions
-        # (r14): the month partition is immutable, so its duplicate-key
-        # set was computed once at ingest -- the close-side group-by
-        # shuffle on the two biggest datasets' string keys disappears.
-        # A pre-r14 lake returns None here and the group-by fallback
-        # inside collect_exceptions runs as before.
-        pre_unique = None
-        if lake_mode and specs[name].unique_keys:
-            from ..sources.raw_lake import read_lake_unique_exceptions
-
-            pre_unique = read_lake_unique_exceptions(spark, raw_lake_dir, name, month)
-        parts.append(
-            collect_exceptions(
-                checked,
-                specs[name],
-                persist_intermediates=False,
-                precomputed_unique=pre_unique,
-            )
-        )
-    exceptions = reduce(DataFrame.unionByName, parts)
-
-    # The sweep's one action is the audit write itself: the
-    # exceptions stream once into dq_exceptions.csv while an
-    # Observation counts them per (dataset, severity) -- all the gate
-    # and the summary need.  repartition(1), not coalesce(1): the
-    # shuffle keeps the scan and the checks parallel and only the
-    # (exception-sized) file write runs as one task; coalesce(1) would
-    # pull the whole sweep into a single task.
-    dq_exceptions_path = curated_dir / "dq_exceptions.csv"
-    dq_summary_path = curated_dir / "dq_summary.csv"
-    dq_obs, dq_metrics = Observation("dq_counts"), dq_count_metrics()
-    write_csv_single_file(
-        add_severity(exceptions).observe(dq_obs, *dq_metrics).repartition(1), str(dq_exceptions_path)
-    )
-    dq_counts = _observed(
-        dq_obs, dq_metrics, lambda: read_csv(spark, str(dq_exceptions_path), DQ_EXCEPTIONS_SCHEMA)
-    )
-    _mark("dq_sweep")
-
-    # audit trail is written BEFORE the gate can raise (pipeline.py:141-146)
-    summary = dq_summary_table(spark, dq_counts, fail_on=fail_on)
-    write_csv_single_file(summary, str(dq_summary_path))
-    _mark("dq_audit_write")
-
-    if dq_gate_status(dq_counts, fail_on=fail_on) == "FAIL":
-        for s in slices.values():
-            s.unpersist()
-        raise DataQualityGateError(
-            f"Data quality checks failed. See {dq_exceptions_path} and {dq_summary_path}"
-        )
-
-    # -- month window (half-open [start, next-month-start)) ------------------
-    start_ts, end_ts = month_window(month)
-    in_window = (F.col("date") >= F.lit(start_ts)) & (F.col("date") < F.lit(end_ts))
-
-    # The fact builds its BIG inputs from the persisted slices (r12):
-    # the slices hold every column the normalizers project
-    # (spec.columns covers them), so sales/expenses enter the fact from
-    # the one CSV parse the DQ sweep already materialized, not a
-    # re-parse.  r10 measured this swap as a no-op at 10M (fact was
-    # FX+encode bound there), but at 100M the balance is parse-bound
-    # (r11 decomposition) and the swap plus the single-pass write below
-    # is what retires the re-parse.  payroll/inventory stay on their
-    # original scans -- see the cache-sizing note above.  Q17's
-    # adaptation is unchanged semantically: the slice projection is the
-    # ORIGINAL typed input, validation stays a side-channel.
-    v_sales = slices["sales"].filter(in_window).drop(ROW_ID_COL)
-    v_exp = slices["expenses"].filter(in_window).drop(ROW_ID_COL)
-    v_inv = inventory.filter(in_window).drop(ROW_ID_COL)
-    v_pay = payroll.filter(F.col("month") == F.lit(month)).drop(ROW_ID_COL)
-    v_fx = fx_rates.drop(ROW_ID_COL)
-
-    # -- fact + KPI (one lazy plan until the writes) --------------------------
-    # Missing FX is enforced here and only here: the fact write
-    # observes sum(rate IS NULL) -- zero extra scans -- writes to a
-    # scratch name, and only PROMOTES (rename) the fact when the count
-    # is zero, so the reference's hard-error contract ("no curated fact
-    # on missing FX") holds exactly; the offending (date, currency)
-    # pairs for the error message come from a pruned scan of the
-    # scratch output, paid only in the error path.
-    fx = fx_to_base(v_fx, settings.base_currency)
-    fact = to_fact_transactions(v_sales, v_exp, v_pay, v_inv, fx, settings.base_currency)
-
-    # close-run metrics ride the write action itself (Observation API):
-    # row count, base-amount total, source breadth and the missing-FX
-    # count cost no extra scan
-    fact_stats = [
-        F.count(F.lit(1)).alias("fact_rows"),
-        F.sum(F.col("amount_base").cast("decimal(28,2)")).cast("double").alias("total_amount_base"),
-        F.approx_count_distinct("source").alias("n_sources"),
-        F.sum(F.col("rate").isNull().cast("long")).alias("_missing_fx_rows"),
-    ]
-    obs = Observation("fact_stats")
-    fact = fact.observe(obs, *fact_stats)
-
-    import shutil
-
-    promoted = False
+    # whatever stops the close, it leaves no slice cache and no stage
     try:
-        write_parquet(fact, tmp_fact)
-        fact_metrics = _observed(obs, fact_stats, lambda: spark.read.parquet(tmp_fact))
+        # driver-side shape checks: one local relation, and none at all on
+        # a well-formed month
+        shape_rows = [r for name, df in frames.items() for r in schema_shape_rows(df, specs[name])]
+        parts = [local_frame(spark, shape_rows, DQ_EXCEPTIONS_SCHEMA)] if shape_rows else []
+        for name, df in frames.items():
+            checked = slices.get(name, df)
+            # lake mode reads the ingest-materialized uniqueness exceptions
+            # (r14): the month partition is immutable, so its duplicate-key
+            # set was computed once at ingest -- the close-side group-by
+            # shuffle on the two biggest datasets' string keys disappears.
+            # A pre-r14 lake returns None here and the group-by fallback
+            # inside collect_exceptions runs as before.
+            pre_unique = None
+            if lake_mode and specs[name].unique_keys:
+                from ..sources.raw_lake import read_lake_unique_exceptions
+
+                pre_unique = read_lake_unique_exceptions(spark, raw_lake_dir, name, month)
+            parts.append(
+                collect_exceptions(
+                    checked,
+                    specs[name],
+                    persist_intermediates=False,
+                    precomputed_unique=pre_unique,
+                )
+            )
+        exceptions = reduce(DataFrame.unionByName, parts)
+
+        # The sweep's one action is the audit write itself: the
+        # exceptions stream once into dq_exceptions.csv while an
+        # Observation counts them per (dataset, severity) -- all the gate
+        # and the summary need.  repartition(1), not coalesce(1): the
+        # shuffle keeps the scan and the checks parallel and only the
+        # (exception-sized) file write runs as one task; coalesce(1) would
+        # pull the whole sweep into a single task.
+        dq_exceptions_path = curated_dir / "dq_exceptions.csv"
+        dq_summary_path = curated_dir / "dq_summary.csv"
+        staged_exceptions = str(stage / dq_exceptions_path.name)
+        dq_obs, dq_metrics = Observation("dq_counts"), dq_count_metrics()
+        write_csv_single_file(
+            add_severity(exceptions).observe(dq_obs, *dq_metrics).repartition(1), staged_exceptions
+        )
+        dq_counts = _observed(
+            dq_obs, dq_metrics, lambda: read_csv(spark, staged_exceptions, DQ_EXCEPTIONS_SCHEMA)
+        )
+        _mark("dq_sweep")
+
+        # audit trail is committed BEFORE the gate can raise (pipeline.py:141-146)
+        summary = dq_summary_table(spark, dq_counts, fail_on=fail_on)
+        write_csv_single_file(summary, str(stage / dq_summary_path.name))
+        commit_dir(str(stage), str(curated_dir))
+        _mark("dq_audit_write")
+
+        if dq_gate_status(dq_counts, fail_on=fail_on) == "FAIL":
+            raise DataQualityGateError(
+                f"Data quality checks failed. See {dq_exceptions_path} and {dq_summary_path}"
+            )
+
+        # -- month window (half-open [start, next-month-start)) --------------
+        start_ts, end_ts = month_window(month)
+        in_window = (F.col("date") >= F.lit(start_ts)) & (F.col("date") < F.lit(end_ts))
+
+        # The fact builds its BIG inputs from the persisted slices (r12):
+        # the slices hold every column the normalizers project
+        # (spec.columns covers them), so sales/expenses enter the fact from
+        # the one CSV parse the DQ sweep already materialized, not a
+        # re-parse.  r10 measured this swap as a no-op at 10M (fact was
+        # FX+encode bound there), but at 100M the balance is parse-bound
+        # (r11 decomposition) and the swap plus the single-pass write below
+        # is what retires the re-parse.  payroll/inventory stay on their
+        # original scans -- see the cache-sizing note above.  Q17's
+        # adaptation is unchanged semantically: the slice projection is the
+        # ORIGINAL typed input, validation stays a side-channel.
+        v_sales = slices["sales"].filter(in_window).drop(ROW_ID_COL)
+        v_exp = slices["expenses"].filter(in_window).drop(ROW_ID_COL)
+        v_inv = inventory.filter(in_window).drop(ROW_ID_COL)
+        v_pay = payroll.filter(F.col("month") == F.lit(month)).drop(ROW_ID_COL)
+        v_fx = fx_rates.drop(ROW_ID_COL)
+
+        # -- fact + KPI (one lazy plan until the writes) ----------------------
+        # Missing FX is enforced here and only here: the fact write
+        # observes sum(rate IS NULL) -- zero extra scans -- into the stage,
+        # and a non-zero count raises before the table commit, so the
+        # reference's hard-error contract ("no curated fact on missing
+        # FX") holds exactly; the offending (date, currency) pairs for the
+        # error message come from a pruned scan of the staged fact, paid
+        # only in the error path.
+        fx = fx_to_base(v_fx, settings.base_currency)
+        fact = to_fact_transactions(v_sales, v_exp, v_pay, v_inv, fx, settings.base_currency)
+
+        # close-run metrics ride the write action itself (Observation API):
+        # row count, base-amount total, source breadth and the missing-FX
+        # count cost no extra scan
+        fact_stats = [
+            F.count(F.lit(1)).alias("fact_rows"),
+            F.sum(F.col("amount_base").cast("decimal(28,2)")).cast("double").alias("total_amount_base"),
+            F.approx_count_distinct("source").alias("n_sources"),
+            F.sum(F.col("rate").isNull().cast("long")).alias("_missing_fx_rows"),
+        ]
+        obs = Observation("fact_stats")
+        write_parquet(fact.observe(obs, *fact_stats), staged_fact)
+        fact_metrics = _observed(obs, fact_stats, lambda: spark.read.parquet(staged_fact))
         if fact_metrics.pop("_missing_fx_rows", 0):
             pairs = [
                 (str(r["date_key"]), r["currency"])
-                for r in spark.read.parquet(tmp_fact)
+                for r in spark.read.parquet(staged_fact)
                 .filter(F.col("rate").isNull())
                 .select(F.to_date("date").alias("date_key"), "currency")
                 .distinct()
@@ -386,48 +390,36 @@ def run_month(
                 .collect()
             ]
             raise MissingFxRatesError(f"Missing FX rates for: {pairs}")
-        promote_dir(tmp_fact, str(out_fact))
-        promoted = True
+        _mark("fact_write")
+
+        # Build the KPI from the fact we just WROTE, not from the fact's
+        # logical plan (r10): re-executing the plan form would re-parse
+        # every raw CSV and redo the FX join, while the written fact is
+        # columnar and already enriched, so the KPI pre-aggregate is a
+        # column-pruned parquet scan of exactly the 4 KPI columns.
+        # Row-set identical by construction (parquet round-trips doubles
+        # exactly); measured 41.8 s -> 35.2 s on the 10M close, on top of
+        # the sort removal's 64.2 -> 41.8.  kpi_monthly runs one query: the
+        # dimension-bounded pre-aggregate, collected; the pivot happens on
+        # the driver.  That scan lands in "kpi_agg"; "kpi_dim_write" is
+        # the two parquet sinks and the table commit.
+        kpi = kpi_monthly(spark.read.parquet(staged_fact), dim_accounts)
+        _mark("kpi_agg")
+
+        write_parquet(dim_accounts, str(stage / out_dim.name))
+        write_parquet(kpi, str(stage / out_kpi.name))
+        commit_dir(str(stage), str(curated_dir))
+        _mark("kpi_dim_write")
     finally:
-        # any non-promotion exit (missing FX, write failure, obs
-        # fallback failure) must not leave the scratch dir on disk or
-        # the slice caches persisted for the SparkSession lifetime
-        if not promoted:
-            shutil.rmtree(tmp_fact, ignore_errors=True)
-            for s in slices.values():
-                s.unpersist()
-    _mark("fact_write")
-
-    # the slice caches have no consumers past this point (KPI and the
-    # lake copy read the WRITTEN fact, the DQ exceptions are already
-    # written) -- release them now, before the cheap tail stages, so
-    # the 100M close doesn't hold the cache and the written fact at once
-    for s in slices.values():
-        s.unpersist()
-
-    # Build the KPI (and the lake partition copy) from the fact we
-    # just WROTE, not from the fact's logical plan (r10): re-executing
-    # the plan form would re-parse every raw CSV and redo the FX join,
-    # while the written fact is columnar and already enriched, so the
-    # KPI pre-aggregate is a column-pruned parquet scan of exactly the
-    # 4 KPI columns.  Row-set identical by construction (parquet
-    # round-trips doubles exactly); measured 41.8 s -> 35.2 s on the
-    # 10M close, on top of the sort removal's 64.2 -> 41.8.
-    fact_r = fact.sparkSession.read.parquet(str(out_fact))
-    # kpi_monthly runs one query: the dimension-bounded pre-aggregate,
-    # collected; the pivot happens on the driver.  That scan lands in
-    # "kpi_agg"; "kpi_dim_write" is the two parquet sinks.
-    kpi = kpi_monthly(fact_r, dim_accounts)
-    _mark("kpi_agg")
-
-    write_parquet(dim_accounts, str(out_dim))
-    write_parquet(kpi, str(out_kpi))
-    _mark("kpi_dim_write")
+        for s in slices.values():
+            s.unpersist()
+        shutil.rmtree(stage, ignore_errors=True)
 
     if lake_dir is not None:
+        # the commit renamed the staged fact away: read the committed one
         lake_fact = Path(lake_dir) / "fact_transactions"
         write_parquet(
-            fact_r.withColumn("month", F.date_format("date", "yyyy-MM")),
+            spark.read.parquet(str(out_fact)).withColumn("month", F.date_format("date", "yyyy-MM")),
             str(lake_fact),
             partition_by=["month"],
         )

@@ -52,10 +52,6 @@ def read_csv(
     return df
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def read_parquet_or_empty(
     spark: SparkSession, path: str, schema: T.StructType | None = None
 ) -> DataFrame:

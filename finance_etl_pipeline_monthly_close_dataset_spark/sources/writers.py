@@ -1,4 +1,4 @@
-"""Sinks (SURVEY.md §2.1 S3-S4).
+"""Sinks (SURVEY.md §2.1 S3-S4) and the one commit of a set of outputs.
 
 Parquet is the curated-layer format (distributed, multi-file,
 optionally partitioned). CSV sinks exist only for BI-tool
@@ -74,6 +74,43 @@ def promote_dir(built: str, path: str) -> None:
     os.rename(built, path)
     if os.path.exists(old):
         shutil.rmtree(old)
+
+
+STAGING = "_staging"
+COMMIT = "_commit"
+
+
+def commit_dir(staged: str, target: str) -> None:
+    """Publish every entry of the directory ``staged`` into ``target``
+    as one set (PLANS.md "One commit path").
+
+    Renaming ``staged`` to ``target/_commit`` is the commit point:
+    before it ``target`` keeps the previous set, after it
+    ``recover_commit`` rolls the new one forward, here and after a
+    crash alike.
+    """
+    os.rename(staged, os.path.join(target, COMMIT))
+    recover_commit(target)
+
+
+def recover_commit(target: str) -> None:
+    """Leave ``target`` holding one complete set after a crash anywhere
+    in a staged write: repair each ``__old`` entry, move each entry
+    left in ``_commit`` into place (a directory by ``promote_dir``, a
+    file by ``os.replace``) and delete a leftover ``_staging``."""
+    for name in sorted(os.listdir(target)):
+        if name.endswith("__old"):
+            recover_dir(os.path.join(target, name[: -len("__old")]))
+    commit = os.path.join(target, COMMIT)
+    if os.path.isdir(commit):
+        for name in sorted(os.listdir(commit)):
+            src, dst = os.path.join(commit, name), os.path.join(target, name)
+            if os.path.isdir(src):
+                promote_dir(src, dst)
+            else:
+                os.replace(src, dst)
+        os.rmdir(commit)
+    shutil.rmtree(os.path.join(target, STAGING), ignore_errors=True)
 
 
 def write_csv_single_file(df: DataFrame, path: str) -> None:

@@ -133,11 +133,7 @@ def test_gate_blocks_bad_rows_but_writes_audit(outputs, tmp_path, capsys):
     from finance_etl_pipeline_monthly_close_dataset_spark import cli
 
     spark, _, root = outputs
-    raw = root / "raw"
-    bad = tmp_path / "raw_bad"
-    bad.mkdir()
-    for f in raw.iterdir():
-        bad.joinpath(f.name).write_text(f.read_text())
+    bad = shutil.copytree(root / "raw", tmp_path / "raw_bad")
     with bad.joinpath("sales.csv").open("a") as fh:
         fh.write("2025-12-10,TLM,INV-XX,40000001,XXX,-5.0,bad row\n")
     curated = tmp_path / "curated_bad"
@@ -148,9 +144,8 @@ def test_gate_blocks_bad_rows_but_writes_audit(outputs, tmp_path, capsys):
     assert rc == 2
     err = capsys.readouterr().err
     assert "dq_exceptions.csv" in err and "dq_summary.csv" in err
-    # audit trail written before the raise, and no fact promoted
-    assert (curated / "dq_exceptions.csv").exists()
-    assert not (curated / "fact_transactions.parquet").exists()
+    # the audit pair committed before the raise, and nothing else
+    assert sorted(p.name for p in curated.iterdir()) == ["dq_exceptions.csv", "dq_summary.csv"]
     exc = spark.read.csv(str(curated / "dq_exceptions.csv"), header=True).collect()
     assert sorted((r["column"], r["check"], r["failure_case"], r["severity"]) for r in exc) == [
         ("amount", "greater_than(0)", "-5.0", "WARN"),
@@ -297,30 +292,33 @@ def test_infer_month_from_kpi(outputs, spark):
     assert infer_month(spark.read.parquet(str(paths["kpi"]))) == "2025-12"
 
 
-def test_fail_on_never_proceeds_to_fx_error(outputs, tmp_path, spark):
+def test_fail_on_never_proceeds_to_fx_error(outputs, tmp_path, capsys):
     """With the gate disabled, dirty data proceeds until the FX join's
     hard missing-rate error (reference parity: FX errors are not
-    gated)."""
-    from finance_etl_pipeline_monthly_close_dataset_spark.plans.transforms import (
-        MissingFxRatesError,
-    )
+    gated).  ``cli run`` reports it, like a missing extract, as one
+    stderr line naming the error, with exit status 1."""
+    from finance_etl_pipeline_monthly_close_dataset_spark import cli
 
     _, _, root = outputs
     raw = root / "raw"
-    bad = tmp_path / "raw_never"
-    bad.mkdir()
-    for f in raw.iterdir():
-        bad.joinpath(f.name).write_text(f.read_text())
+    bad, no_sales = shutil.copytree(raw, tmp_path / "raw_never"), shutil.copytree(raw, tmp_path / "raw_no_sales")
     with bad.joinpath("sales.csv").open("a") as fh:
         # XXX currency has no FX rate: DQ flags it (ERROR), but
         # fail_on=NEVER lets the pipeline continue to the FX join
         fh.write("2025-12-10,TLM,INV-NEVER,40000001,XXX,5.0,no rate\n")
-    with pytest.raises(MissingFxRatesError):
-        run_month(
-            spark, Settings(), month="2025-12", raw_dir=bad,
-            curated_dir=tmp_path / "curated_never", reference_dir=root / "ref",
-            fail_on="NEVER",
-        )
+    (no_sales / "sales.csv").unlink()
+    cases = [
+        (bad, "MissingFxRatesError: Missing FX rates for: [('2025-12-10', 'XXX')]"),
+        (no_sales, f"FileNotFoundError: Missing input file: {no_sales / 'sales.csv'}"),
+    ]
+    for raw_dir, message in cases:
+        rc = cli.main([
+            "run", "--month", "2025-12", "--raw-dir", str(raw_dir),
+            "--curated-dir", str(tmp_path / f"curated_{raw_dir.name}"),
+            "--reference-dir", str(root / "ref"), "--fail-on", "NEVER",
+        ])
+        assert rc == 1
+        assert capsys.readouterr().err.splitlines() == [f"run: {message}"]
 
 
 def test_two_month_lifecycle_with_lake(spark, tmp_path):

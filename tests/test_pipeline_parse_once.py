@@ -1,28 +1,35 @@
 """Parse-once close (r12): the fact builds from the persisted DQ
 slices with the missing-FX check riding the write's Observation, and
-the written fact is promoted by rename only when clean.  These tests
-pin the contracts that redesign leans on:
+the staged fact is committed only when clean.  These tests pin the
+contracts that redesign leans on:
 
 * ``collect_exceptions`` must treat raw shadows correctly whether they
   are DENSE (``read_csv_typed``: raw text for every row) or SPARSE
   (raw text only where the typed value is null -- the layout a staged
   or cached materialization may use), because the not_nullable check
   distinguishes "absent" from "coercion failure" through them;
-* ``run_month`` must leave no scratch behind (the ``._building`` fact
-  dir) on success;
+* ``run_month`` must leave no stage or commit scratch behind, and a
+  fault anywhere after the gate must leave the previous close's
+  tables (a gate failure: ``test_pipeline_e2e.py``);
 * on missing FX rates, ``run_month`` must raise AND leave no curated
-  fact at all (the reference's hard-error contract, now enforced by
-  rename-promotion instead of an eager pre-pass).
+  fact at all (the reference's hard-error contract, enforced by the
+  staged commit instead of an eager pre-pass).
 """
 
 from __future__ import annotations
 
+import shutil
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
+import finance_etl_pipeline_monthly_close_dataset_spark.plans.pipeline as pl
 from finance_etl_pipeline_monthly_close_dataset_spark.config import Settings
 from finance_etl_pipeline_monthly_close_dataset_spark.plans import quality
+from finance_etl_pipeline_monthly_close_dataset_spark.sample_data import generate_synthetic_raw, write_chart_of_accounts
 from finance_etl_pipeline_monthly_close_dataset_spark.schemas import SALES_SCHEMA
+from finance_etl_pipeline_monthly_close_dataset_spark.sources import writers
 from finance_etl_pipeline_monthly_close_dataset_spark.sources.readers import (
     RAW_PREFIX,
     read_csv_typed,
@@ -31,11 +38,6 @@ from finance_etl_pipeline_monthly_close_dataset_spark.sources.readers import (
 
 @pytest.fixture(scope="module")
 def reference_month(tmp_path_factory):
-    from finance_etl_pipeline_monthly_close_dataset_spark.sample_data import (
-        generate_synthetic_raw,
-        write_chart_of_accounts,
-    )
-
     root = tmp_path_factory.mktemp("parse_once")
     generate_synthetic_raw(root / "raw", month="2025-12", seed=42)
     write_chart_of_accounts(root / "ref")
@@ -50,6 +52,21 @@ not-a-date,TLM,INV-2,40000001,USD,5.00,coercion failure on date
 2025-12-05,TLM,INV-5,40000001,USD,3.00,dup A
 2025-12-05,TLM,INV-5,40000001,USD,4.00,dup B
 """
+
+
+AUDIT = ["dq_exceptions.csv", "dq_summary.csv"]
+TABLES = ["dim_accounts.parquet", "fact_transactions.parquet", "kpi_monthly.parquet"]
+
+
+def _names(curated) -> list[str]:
+    """Everything in the curated dir: no stage or commit scratch may
+    be left beside the outputs."""
+    return sorted(p.name for p in curated.iterdir())
+
+
+def _close(spark, raw, curated, ref, fail_on="ERROR") -> dict:
+    return pl.run_month(spark, Settings(), month="2025-12", raw_dir=raw, curated_dir=curated,
+                        reference_dir=ref, fail_on=fail_on)
 
 
 def _exception_set(df):
@@ -91,89 +108,34 @@ def test_sparse_raw_shadows_match_dense(spark, tmp_path):
 
 
 def test_run_month_promotes_fact_and_cleans_scratch(spark, tmp_path, reference_month):
-    from finance_etl_pipeline_monthly_close_dataset_spark.plans.pipeline import run_month
-
     root = reference_month
     curated = tmp_path / "curated"
-    out = run_month(
-        spark,
-        Settings(),
-        month="2025-12",
-        raw_dir=root / "raw",
-        curated_dir=curated,
-        reference_dir=root / "ref",
-        fail_on="ERROR",
-    )
-    assert not (curated / "fact_transactions.parquet._building").exists()
-    assert (curated / "fact_transactions.parquet").exists()
+    out = _close(spark, root / "raw", curated, root / "ref")
+    assert _names(curated) == sorted(AUDIT + TABLES)
     # the observed metrics came from the write action itself
     assert out["metrics"]["fact_rows"] == 236
     assert "_missing_fx_rows" not in out["metrics"]
 
 
 def test_missing_fx_leaves_no_curated_fact(spark, tmp_path, reference_month):
-    """Single-pass write + rename-promotion: a missing FX rate must
-    still be a hard error AND must not leave a curated fact behind
-    (reference transform.py:40-42 raises before any output exists; we
-    write to scratch and only promote when the observed missing count
-    is zero)."""
-    from finance_etl_pipeline_monthly_close_dataset_spark.plans.pipeline import run_month
+    """Single-pass write + staged commit: a missing FX rate must still
+    be a hard error AND must not leave a curated fact behind (reference
+    transform.py:40-42 raises before any output exists; we write to the
+    stage and only commit when the observed missing count is zero)."""
     from finance_etl_pipeline_monthly_close_dataset_spark.plans.transforms import (
         MissingFxRatesError,
     )
 
     root = reference_month
-    bad = tmp_path / "raw_fx"
-    bad.mkdir()
-    for f in (root / "raw").iterdir():
-        (bad / f.name).write_text(f.read_text())
-    with (bad / "sales.csv").open("a") as fh:
-        fh.write("2025-12-10,TLM,INV-XXX,40000001,XXX,5.0,no rate\n")
+    bad = _copy_raw(root / "raw", tmp_path / "raw_fx", "2025-12-10,TLM,INV-XXX,40000001,XXX,5.0,no rate")
     curated = tmp_path / "curated_fx"
     with pytest.raises(MissingFxRatesError) as exc_info:
-        run_month(
-            spark,
-            Settings(),
-            month="2025-12",
-            raw_dir=bad,
-            curated_dir=curated,
-            reference_dir=root / "ref",
-            fail_on="NEVER",
-        )
+        _close(spark, bad, curated, root / "ref", fail_on="NEVER")
     # error message carries the offending (date, currency) pairs
     assert "XXX" in str(exc_info.value) and "2025-12-10" in str(exc_info.value)
-    assert not (curated / "fact_transactions.parquet").exists()
-    assert not (curated / "fact_transactions.parquet._building").exists()
-    # audit trail was still written before the failure
-    assert (curated / "dq_exceptions.csv").exists()
-
-
-def test_gate_failure_still_writes_audit(spark, tmp_path, reference_month):
-    from finance_etl_pipeline_monthly_close_dataset_spark.plans.pipeline import (
-        DataQualityGateError,
-        run_month,
-    )
-
-    root = reference_month
-    bad = tmp_path / "raw_bad"
-    bad.mkdir()
-    for f in (root / "raw").iterdir():
-        (bad / f.name).write_text(f.read_text())
-    with (bad / "sales.csv").open("a") as fh:
-        fh.write("2025-12-10,TLM,INV-BAD,99999999,USD,5.0,unknown account\n")
-    curated = tmp_path / "curated_bad"
-    with pytest.raises(DataQualityGateError):
-        run_month(
-            spark,
-            Settings(),
-            month="2025-12",
-            raw_dir=bad,
-            curated_dir=curated,
-            reference_dir=root / "ref",
-            fail_on="ERROR",
-        )
-    assert (curated / "dq_exceptions.csv").exists()
-    assert not (curated / "fact_transactions.parquet").exists()
+    # the audit trail was still committed before the failure, and
+    # nothing else
+    assert _names(curated) == AUDIT
 
 
 def _cache_is_empty(spark) -> bool:
@@ -181,9 +143,7 @@ def _cache_is_empty(spark) -> bool:
 
 
 def _copy_raw(src, dest, extra_sales_row=None):
-    dest.mkdir()
-    for f in src.iterdir():
-        (dest / f.name).write_text(f.read_text())
+    shutil.copytree(src, dest)
     if extra_sales_row is not None:
         with (dest / "sales.csv").open("a") as fh:
             fh.write(extra_sales_row + "\n")
@@ -194,60 +154,113 @@ def test_close_leaves_no_cached_plan(spark, tmp_path, reference_month):
     """run_month owns its caches: neither a PASS close nor a gate-FAIL
     close leaves a plan in the session's cache manager (the fx_rates
     check slice, with two DQ consumers, used to stay cached)."""
-    from finance_etl_pipeline_monthly_close_dataset_spark.plans.pipeline import (
-        DataQualityGateError,
-        run_month,
-    )
-
     root = reference_month
     spark.catalog.clearCache()
-    run_month(
-        spark, Settings(), month="2025-12", raw_dir=root / "raw",
-        curated_dir=tmp_path / "curated_pass", reference_dir=root / "ref",
-    )
+    _close(spark, root / "raw", tmp_path / "curated_pass", root / "ref")
     assert _cache_is_empty(spark)
 
     bad = _copy_raw(root / "raw", tmp_path / "raw_bad",
                     "2025-12-10,TLM,INV-X,40000001,XXX,-5.0,bad")
-    with pytest.raises(DataQualityGateError):
-        run_month(
-            spark, Settings(), month="2025-12", raw_dir=bad,
-            curated_dir=tmp_path / "curated_fail", reference_dir=root / "ref",
-        )
+    with pytest.raises(pl.DataQualityGateError):
+        _close(spark, bad, tmp_path / "curated_fail", root / "ref")
     assert _cache_is_empty(spark)
 
 
-def test_close_recovers_fact_left_aside_by_a_crash(spark, tmp_path, reference_month):
-    """A crash between the two renames of the fact promotion leaves
-    only ``fact_transactions.parquet__old``.  The next close restores
-    it before anything else -- so even a close stopped by the gate
-    leaves the previous fact whole -- and a passing close then
-    replaces it and removes the aside copy."""
-    from finance_etl_pipeline_monthly_close_dataset_spark.plans.pipeline import (
-        DataQualityGateError,
-        run_month,
-    )
+# -- one staged commit: fault injection ---------------------------------------
 
-    root = reference_month
-    curated = tmp_path / "curated"
-    fact = curated / "fact_transactions.parquet"
-    aside = curated / "fact_transactions.parquet__old"
-    run_month(spark, Settings(), month="2025-12", raw_dir=root / "raw",
-              curated_dir=curated, reference_dir=root / "ref")
-    (fact / "previous-close.marker").write_text("")
-    fact.rename(aside)
 
-    bad = _copy_raw(root / "raw", tmp_path / "raw_bad",
-                    "2025-12-10,TLM,INV-X,40000001,XXX,-5.0,bad")
-    with pytest.raises(DataQualityGateError):
-        run_month(spark, Settings(), month="2025-12", raw_dir=bad,
-                  curated_dir=curated, reference_dir=root / "ref")
-    assert (fact / "previous-close.marker").exists()
-    assert not aside.exists()
+def _tree_bytes(root: Path) -> dict[str, bytes]:
+    return {str(p.relative_to(root)): p.read_bytes() for p in sorted(root.rglob("*")) if p.is_file()}
 
-    fact.rename(aside)
-    out = run_month(spark, Settings(), month="2025-12", raw_dir=root / "raw",
-                    curated_dir=curated, reference_dir=root / "ref")
-    assert not aside.exists()
-    assert not (fact / "previous-close.marker").exists()
-    assert spark.read.parquet(str(fact)).count() == out["metrics"]["fact_rows"] == 236
+
+def _table_rows(spark, curated: Path) -> dict[str, list]:
+    return {t: sorted(map(tuple, spark.read.parquet(str(curated / t)).collect())) for t in TABLES}
+
+
+@pytest.fixture(scope="module")
+def closes(spark, reference_month, tmp_path_factory):
+    """A previous close of other data (seed 7), to close over, and a
+    clean close of the new month: seed 42 plus a duplicate sales row, a
+    WARN, so that its audit pair differs from the previous one too."""
+    root = tmp_path_factory.mktemp("commit")
+    generate_synthetic_raw(root / "raw_prev", month="2025-12", seed=7)
+    raw = reference_month / "raw"
+    _copy_raw(raw, root / "raw", (raw / "sales.csv").read_text().splitlines()[1])
+    _close(spark, root / "raw_prev", root / "previous", reference_month / "ref")
+    _close(spark, root / "raw", root / "clean", reference_month / "ref")
+    return root, reference_month / "ref"
+
+
+def _raise_after_writing(table: str):
+    write = pl.write_parquet
+
+    def wrapper(df, path, *args, **kwargs):
+        write(df, path, *args, **kwargs)
+        if Path(path).name == table:
+            raise RuntimeError(f"injected after the {table} write")
+
+    return wrapper
+
+
+def _raise(*args, **kwargs):
+    raise RuntimeError("injected")
+
+
+@pytest.mark.parametrize(
+    "name, fault",
+    [
+        ("write_parquet", _raise_after_writing("fact_transactions.parquet")),
+        ("kpi_monthly", _raise),
+        ("write_parquet", _raise_after_writing("dim_accounts.parquet")),
+        ("write_parquet", _raise_after_writing("kpi_monthly.parquet")),
+    ],
+    ids=["after_fact_write", "inside_kpi_monthly", "after_dim_write", "after_kpi_write"],
+)
+def test_fault_after_the_gate_keeps_the_previous_tables(spark, closes, tmp_path, monkeypatch, name, fault):
+    """The curated dir holds exactly the previous close's tables and
+    the new audit pair, which was committed before the gate."""
+    (root, ref), curated = closes, tmp_path / "curated"
+    shutil.copytree(root / "previous", curated)
+    want = {**_tree_bytes(curated), **{f: (root / "clean" / f).read_bytes() for f in AUDIT}}
+    assert want != _tree_bytes(curated)
+    monkeypatch.setattr(pl, name, fault)
+    with pytest.raises(RuntimeError, match="injected"):
+        _close(spark, root / "raw", curated, ref)
+    assert _tree_bytes(curated) == want
+    assert _names(curated) == sorted(AUDIT + TABLES)
+
+
+def test_crash_inside_the_commit_is_finished_by_the_next_close(spark, closes, tmp_path, monkeypatch):
+    """A crash after the table commit's first entry has moved leaves a
+    mixed directory plus ``_commit``; the next close's start rolls the
+    commit forward before anything else (here that close then stops on
+    a missing extract), and a passing close afterwards equals a clean
+    close."""
+    (root, ref), curated = closes, tmp_path / "curated"
+    shutil.copytree(root / "previous", curated)
+    promote, moved = writers.promote_dir, []
+
+    def promote_then_crash(built, path):
+        promote(built, path)
+        moved.append(Path(path).name)
+        raise RuntimeError("injected")
+
+    monkeypatch.setattr(writers, "promote_dir", promote_then_crash)
+    with pytest.raises(RuntimeError, match="injected"):
+        _close(spark, root / "raw", curated, ref)
+    monkeypatch.undo()
+    assert moved == TABLES[:1] and _names(curated / "_commit") == TABLES[1:]
+    # the committed set: what has moved, plus what _commit still holds
+    want = {k.removeprefix("_commit/"): v for k, v in _tree_bytes(curated).items()
+            if k.split("/")[0] not in TABLES[1:]}
+
+    no_sales = _copy_raw(root / "raw", tmp_path / "raw_no_sales")
+    (no_sales / "sales.csv").unlink()
+    with pytest.raises(FileNotFoundError):
+        _close(spark, no_sales, curated, ref)
+    assert _tree_bytes(curated) == want and _names(curated) == sorted(AUDIT + TABLES)
+
+    _close(spark, root / "raw", curated, ref)
+    assert _names(curated) == sorted(AUDIT + TABLES)
+    assert _table_rows(spark, curated) == _table_rows(spark, root / "clean")
+    assert {f: (curated / f).read_bytes() for f in AUDIT} == {f: (root / "clean" / f).read_bytes() for f in AUDIT}

@@ -1,9 +1,11 @@
 """The single-file CSV sink's atomic swap, the rename-aside directory
-promotion and the one parser of ``SPARK_GRAFT_CPUS``."""
+promotion and the staged commit's recovery, and the one parser of
+``SPARK_GRAFT_CPUS``."""
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,6 +13,7 @@ from pyspark.sql import functions as F
 from finance_etl_pipeline_monthly_close_dataset_spark.session import graft_cpus
 from finance_etl_pipeline_monthly_close_dataset_spark.sources.writers import (
     promote_dir,
+    recover_commit,
     recover_dir,
     write_csv_single_file,
 )
@@ -68,6 +71,51 @@ def test_promote_dir_recovers_every_crash_point(tmp_path):
     _mkdir(old, "v0")
     promote_dir(_mkdir(scratch, "v2"), path)
     assert os.listdir(tmp_path) == ["t"] and os.listdir(path) == ["v2"]
+
+    # commit_dir over the same rule: at each crash point the next
+    # start's recover_commit leaves the old set before the commit
+    # rename and the whole new set after it
+    def commit(t):
+        os.rename(os.path.join(t, "_staging"), os.path.join(t, "_commit"))
+
+    def move(name, how=promote_dir):
+        return lambda t: how(os.path.join(t, "_commit", name), os.path.join(t, name))
+
+    def aside(name):
+        return lambda t: os.rename(os.path.join(t, name), os.path.join(t, name + "__old"))
+
+    crash_points = {  # crash point: (the steps done before it, the set recovered)
+        "staged": ([], "old"),
+        "staged_with_an_aside_copy": ([aside("a")], "old"),
+        "renamed": ([commit], "new"),
+        "first_moved": ([commit, move("a")], "new"),
+        "aside_copy_left": ([commit, move("a"), lambda t: _mkdir(os.path.join(t, "a__old"), "old")], "new"),
+        "between_renames": ([commit, move("a"), aside("b")], "new"),
+        "all_moved": ([commit, move("a"), move("b"), move("f", os.replace)], "new"),
+    }
+    for crash, (steps, want) in crash_points.items():
+        target = _version_set(tmp_path / crash, "old")
+        _version_set(tmp_path / crash / "_staging", "new")
+        for step in steps:
+            step(target)
+        recover_commit(target)
+        assert _versions(target) == want, crash
+
+
+def _version_set(root, version):
+    """Directories ``a`` and ``b`` and a file ``f``, each holding ``version``."""
+    for d in ("a", "b"):
+        _mkdir(root / d, version)
+    (root / "f").write_text(version)
+    return str(root)
+
+
+def _versions(root):
+    """The one version a ``_version_set`` holds, with nothing else left in ``root``."""
+    assert sorted(os.listdir(root)) == ["a", "b", "f"]
+    (version,) = {*os.listdir(os.path.join(root, "a")), *os.listdir(os.path.join(root, "b")),
+                  Path(root, "f").read_text()}
+    return version
 
 
 @pytest.mark.parametrize(
