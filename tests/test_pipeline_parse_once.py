@@ -166,6 +166,45 @@ def test_close_leaves_no_cached_plan(spark, tmp_path, reference_month):
     assert _cache_is_empty(spark)
 
 
+def test_gate_failure_still_writes_audit(spark, tmp_path, reference_month):
+    root = reference_month
+    bad = _copy_raw(root / "raw", tmp_path / "raw_bad",
+                    "2025-12-10,TLM,INV-BAD,99999999,USD,5.0,unknown account")
+    curated = tmp_path / "curated_bad"
+    with pytest.raises(pl.DataQualityGateError):
+        _close(spark, bad, curated, root / "ref")
+    assert (curated / "dq_exceptions.csv").exists()
+    assert not (curated / "fact_transactions.parquet").exists()
+
+
+def test_close_recovers_fact_left_aside_by_a_crash(spark, tmp_path, reference_month):
+    """A crash between the two renames of a directory promotion leaves
+    only ``fact_transactions.parquet__old``.  The next close restores
+    it before anything else -- so even a close stopped by the gate
+    leaves the previous fact whole -- and a passing close then
+    replaces it and removes the aside copy."""
+    root = reference_month
+    curated = tmp_path / "curated"
+    fact = curated / "fact_transactions.parquet"
+    aside = curated / "fact_transactions.parquet__old"
+    _close(spark, root / "raw", curated, root / "ref")
+    (fact / "previous-close.marker").write_text("")
+    fact.rename(aside)
+
+    bad = _copy_raw(root / "raw", tmp_path / "raw_bad",
+                    "2025-12-10,TLM,INV-X,40000001,XXX,-5.0,bad")
+    with pytest.raises(pl.DataQualityGateError):
+        _close(spark, bad, curated, root / "ref")
+    assert (fact / "previous-close.marker").exists()
+    assert not aside.exists()
+
+    fact.rename(aside)
+    out = _close(spark, root / "raw", curated, root / "ref")
+    assert not aside.exists()
+    assert not (fact / "previous-close.marker").exists()
+    assert spark.read.parquet(str(fact)).count() == out["metrics"]["fact_rows"] == 236
+
+
 # -- one staged commit: fault injection ---------------------------------------
 
 
