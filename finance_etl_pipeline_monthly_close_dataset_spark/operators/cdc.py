@@ -66,28 +66,3 @@ def snapshot_diff(
     if not include_unchanged:
         out = out.filter(F.col(CHANGE_COL) != "unchanged")
     return out
-
-
-def apply_diff(
-    old: DataFrame,
-    diff: DataFrame,
-    keys: Sequence[str],
-    compare_cols: Sequence[str],
-) -> DataFrame:
-    """Replay a ``snapshot_diff`` onto the old snapshot:
-    ``apply_diff(old, snapshot_diff(old, new, ...)) == new`` projected
-    to keys + compare columns (the roundtrip property is
-    hypothesis-tested). This is the incremental-restore path: ship the
-    (small) diff instead of the (huge) snapshot and reconstruct.
-
-    Shape: one left-anti join on the key (drop touched rows) + one
-    union of the diff's upserts -- no window, no second full join.
-    """
-    touched = diff.select(*keys)
-    untouched = old.select(*keys, *compare_cols).join(
-        touched, on=list(keys), how="left_anti"
-    )
-    upserts = diff.filter(
-        F.col(CHANGE_COL).isin("insert", "update")
-    ).select(*keys, *[F.col(f"new_{c}").alias(c) for c in compare_cols])
-    return untouched.unionByName(upserts)

@@ -214,41 +214,6 @@ def quantile_rollup(partials: DataFrame, rollup_cols: list[str]) -> DataFrame:
     )
 
 
-def hll_intersect_estimate(
-    partials: DataFrame,
-    side_col: str,
-    estimate_col: str = "n_common_est",
-) -> DataFrame:
-    """Estimated |A ∩ B| from two groups of HLL partials via
-    inclusion-exclusion: est(A) + est(B) - est(A ∪ B), where the union
-    estimate comes from merging BOTH groups' sketches -- the one set
-    operation HLL can't answer directly (sketch union is lossless,
-    intersection isn't a sketch operation).  ``partials`` is
-    ``hll_partials`` output with a two-valued ``side_col``; the result
-    is one row.  Error compounds (three ±rse estimates difference), so
-    this is a profiling figure -- est can go slightly negative for
-    near-disjoint sets, clamped to 0.  At 100 TB this answers
-    "how many customers appear in BOTH years" from persisted monthly
-    sketches without any raw re-scan or exact-distinct join."""
-    per_side = partials.groupBy(side_col).agg(
-        F.hll_sketch_estimate(F.hll_union_agg("hll_sketch")).alias("_est")
-    )
-    union_all = partials.groupBy().agg(
-        F.hll_sketch_estimate(F.hll_union_agg("hll_sketch")).alias("_u")
-    )
-    return (
-        per_side.groupBy()
-        .agg(F.sum("_est").alias("_sum_sides"), F.count(F.lit(1)).alias("_n_sides"))
-        .crossJoin(F.broadcast(union_all))
-        .select(
-            F.greatest(
-                F.col("_sum_sides") - F.col("_u"), F.lit(0).cast("bigint")
-            ).alias(estimate_col),
-            "_n_sides",
-        )
-    )
-
-
 # -- mergeable count-min sketch ---------------------------------------------
 #
 # Third member of the mergeable-summaries family: HLL answers DISTINCT
@@ -419,10 +384,10 @@ def quantiles_from_state(
 # Fourth member of the mergeable-summaries family: HLL answers
 # DISTINCT rollups, the histogram QUANTILES, CMS per-key FREQUENCIES
 # -- KMV answers SET OPERATIONS on distincts, the one thing HLL can
-# only approach by error-compounding inclusion-exclusion
-# (`hll_intersect_estimate`).  The sketch is simply the k smallest
-# DISTINCT 60-bit md5-prefix hashes of the value: a uniform sample of
-# the value space, so the k-th smallest hash theta estimates density
+# only approach by error-compounding inclusion-exclusion.  The sketch
+# is simply the k smallest DISTINCT 60-bit md5-prefix hashes of the
+# value: a uniform sample of the value space, so the k-th smallest
+# hash theta estimates density
 # ((k-1) / (theta / 2^60) distincts), merge is "k smallest of the
 # union of members" (lossless: bottom-k of a union equals bottom-k of
 # the members' bottom-k's), and an INTERSECTION estimate falls out of

@@ -365,14 +365,19 @@ def schema_shape_rows(df: DataFrame, spec: DatasetSpec) -> list[tuple]:
 def add_severity(dq_exceptions: DataFrame) -> DataFrame:
     """Severity rules (Q14, reference quality.py:123-183): default WARN;
     ERROR for key columns, anything in fx_rates, required/dtype checks,
-    and COA membership violations."""
-    check_l = F.lower(F.coalesce(F.col("check"), F.lit("")))
+    and COA membership violations.
+
+    The check name matches case-insensitively through a ``(?i)`` regex,
+    not ``lower(check)``: a ``lower()`` folded at plan time costs a
+    fresh JVM its ICU case-table build (over a second).  Same result:
+    Java's ``(?i)`` folds ASCII only, and the only non-ASCII characters
+    whose lowercase holds an ASCII letter are U+0130, U+212A and U+212B.
+    U+0130 lowercases to i + U+0307, which breaks every needle; U+212A
+    lowercases to k and U+212B to å, and no needle holds either."""
     severity = (
         F.when(F.col("column").isin(list(ERROR_COLUMNS)), F.lit("ERROR"))
         .when(F.col("dataset") == "fx_rates", F.lit("ERROR"))
-        .when(check_l.contains("required"), F.lit("ERROR"))
-        .when(check_l.contains("dtype"), F.lit("ERROR"))
-        .when(check_l.contains("account_in_coa"), F.lit("ERROR"))
+        .when(F.col("check").rlike("(?i)required|dtype|account_in_coa"), F.lit("ERROR"))
         .otherwise(F.lit("WARN"))
     )
     return dq_exceptions.withColumn("severity", severity)

@@ -24,6 +24,12 @@ from pyspark.sql import types as T
 
 ROW_ID_COL = "_row_id"
 
+# Date-only and date-time cells in one pattern: the optional section
+# parses ``2025-12-05`` without first failing (and throwing) on the
+# time part, which a coalesce of two patterns does for every date-only
+# cell (~3x the parse cost).
+TIMESTAMP_FORMAT = "yyyy-MM-dd[ HH:mm:ss]"
+
 
 def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
     """Driver-held ``rows`` (a summary, a pivot) as a DataFrame, shipped
@@ -46,7 +52,7 @@ def read_csv(
     to match the reference's ``pd.read_csv`` behavior."""
     if not os.path.exists(path):
         raise FileNotFoundError(f"Missing input file: {path}")
-    df = spark.read.csv(path, header=True, schema=schema, timestampFormat="yyyy-MM-dd[ HH:mm:ss]")
+    df = spark.read.csv(path, header=True, schema=schema, timestampFormat=TIMESTAMP_FORMAT)
     if with_row_id:
         df = df.withColumn(ROW_ID_COL, F.monotonically_increasing_id())
     return df
@@ -100,10 +106,7 @@ def typed_view(df: DataFrame, schema: T.StructType) -> DataFrame:
             cols.append(raw.alias(f.name))
         else:
             if isinstance(f.dataType, T.TimestampType):
-                typed = F.coalesce(
-                    F.try_to_timestamp(raw, F.lit("yyyy-MM-dd HH:mm:ss")),
-                    F.try_to_timestamp(raw, F.lit("yyyy-MM-dd")),
-                )
+                typed = F.try_to_timestamp(raw, F.lit(TIMESTAMP_FORMAT))
             else:
                 typed = raw.try_cast(f.dataType)
             cols.append(typed.alias(f.name))

@@ -13,11 +13,14 @@ contracts that redesign leans on:
   tables (a gate failure: ``test_pipeline_e2e.py``);
 * on missing FX rates, ``run_month`` must raise AND leave no curated
   fact at all (the reference's hard-error contract, enforced by the
-  staged commit instead of an eager pre-pass).
+  staged commit instead of an eager pre-pass);
+* the one-pattern date coercion must flag exactly the cells the
+  former two-pattern coercion flagged.
 """
 
 from __future__ import annotations
 
+import csv
 import shutil
 from pathlib import Path
 
@@ -28,10 +31,12 @@ import finance_etl_pipeline_monthly_close_dataset_spark.plans.pipeline as pl
 from finance_etl_pipeline_monthly_close_dataset_spark.config import Settings
 from finance_etl_pipeline_monthly_close_dataset_spark.plans import quality
 from finance_etl_pipeline_monthly_close_dataset_spark.sample_data import generate_synthetic_raw, write_chart_of_accounts
-from finance_etl_pipeline_monthly_close_dataset_spark.schemas import SALES_SCHEMA
+from finance_etl_pipeline_monthly_close_dataset_spark.schemas import RAW_SCHEMAS, SALES_SCHEMA
 from finance_etl_pipeline_monthly_close_dataset_spark.sources import writers
 from finance_etl_pipeline_monthly_close_dataset_spark.sources.readers import (
     RAW_PREFIX,
+    TIMESTAMP_FORMAT,
+    read_csv_raw,
     read_csv_typed,
 )
 
@@ -303,3 +308,58 @@ def test_crash_inside_the_commit_is_finished_by_the_next_close(spark, closes, tm
     assert _names(curated) == sorted(AUDIT + TABLES)
     assert _table_rows(spark, curated) == _table_rows(spark, root / "clean")
     assert {f: (curated / f).read_bytes() for f in AUDIT} == {f: (root / "clean" / f).read_bytes() for f in AUDIT}
+
+
+# Date strings on both sides of the parse: dates and date-times, then
+# near misses (short fields, other separators, padding, out-of-range
+# fields, a partial or fractional time).
+WELL_FORMED_DATES = ["2025-12-05", "2025-12-05 10:11:12", "2024-02-29", "2025-12-05 23:59:59"]
+MALFORMED_DATES = [
+    "2025-12-5", "2025-1-05", "2025-12-05T10:11:12", " 2025-12-05", "2025-12-05 ", "2025-12-05  10:11:12",
+    "2025-13-01", "2025-02-30", "2025-12-05 24:00:00", "2025-12-05 10:11:60", "2025-12-05 10:11",
+    "2025-12-05 1:2:3", "2025-12-05 10:11:12.5", "2025-12-05 10:11:12.123456", "25-12-05", "+2025-12-05",
+]
+
+
+def _two_pattern(raw):
+    """The close's date coercion before the one optional-section pattern."""
+    return F.coalesce(F.try_to_timestamp(raw, F.lit("yyyy-MM-dd HH:mm:ss")), F.try_to_timestamp(raw, F.lit("yyyy-MM-dd")))
+
+
+def test_one_pattern_date_coercion_matches_two_patterns(spark):
+    df = spark.createDataFrame([(s,) for s in WELL_FORMED_DATES + MALFORMED_DATES + ["", None]], "raw string")
+    one = F.try_to_timestamp(F.col("raw"), F.lit(TIMESTAMP_FORMAT))
+    rows = df.select("raw", one.alias("one"), _two_pattern(F.col("raw")).alias("two")).collect()
+    assert [r for r in rows if r["one"] != r["two"]] == []
+    assert [r["raw"] for r in rows if r["one"] is not None] == WELL_FORMED_DATES
+
+
+def test_malformed_dates_raise_the_same_coercion_exceptions(spark, tmp_path, reference_month):
+    """A month with malformed dates in every dated extract reports, as
+    ``coerce_dtype(timestamp)`` exceptions, exactly the cells the
+    two-pattern coercion left null."""
+    root = reference_month
+    raw = _copy_raw(root / "raw", tmp_path / "raw_dates")
+    extras = {
+        "sales": "{},TLM,INV-D{},40000001,USD,5.0,dated",
+        "expenses": "{},TLM,BILL-D{},50000001,USD,5.0,dated",
+        "inventory_movements": "{},TLM,SKU-D{},IN,1.0,2.0,USD",
+        "fx_rates": "{},USD,TZS{},2500.0",
+    }
+    expected = set()
+    for name, row in extras.items():
+        with (raw / f"{name}.csv").open("a") as fh:
+            fh.writelines(row.format(d, i) + "\n" for i, d in enumerate(MALFORMED_DATES + WELL_FORMED_DATES))
+        df = read_csv_raw(spark, str(raw / f"{name}.csv"), RAW_SCHEMAS[name], with_row_id=True)
+        # the audit CSV writer trims the padded cells
+        expected |= {(name, str(r["_row_id"]), r["date"].strip())
+                     for r in df.filter(_two_pattern(F.col("date")).isNull() & F.col("date").isNotNull()).collect()}
+    assert len(expected) == len(extras) * len(MALFORMED_DATES)
+
+    curated = tmp_path / "curated"
+    with pytest.raises(pl.DataQualityGateError):
+        _close(spark, raw, curated, root / "ref")
+    with (curated / "dq_exceptions.csv").open(newline="") as fh:
+        got = {(r["dataset"], r["index"], r["failure_case"])
+               for r in csv.DictReader(fh) if r["check"] == "coerce_dtype(timestamp)"}
+    assert got == expected

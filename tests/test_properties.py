@@ -272,40 +272,6 @@ def test_exact_power_sum_moments_match_numpy(spark, cents):
                     assert abs(r.corr_qty_price - expected) < 1e-4
 
 
-# --- CDC diff/apply roundtrip ----------------------------------------------
-
-snapshot_strategy = st.lists(
-    st.tuples(
-        st.integers(min_value=0, max_value=30),            # key
-        st.one_of(st.none(), st.integers(0, 5)),           # value (nullable)
-        st.sampled_from(["A", "B", "C"]),
-    ),
-    max_size=30,
-)
-
-
-@settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(old_rows=snapshot_strategy, new_rows=snapshot_strategy)
-def test_cdc_diff_apply_roundtrip(spark, old_rows, new_rows):
-    from finance_etl_pipeline_monthly_close_dataset_spark.operators.cdc import (
-        apply_diff,
-        snapshot_diff,
-    )
-
-    # one row per key (snapshots are keyed)
-    old_rows = list({k: (k, v, s) for k, v, s in old_rows}.values())
-    new_rows = list({k: (k, v, s) for k, v, s in new_rows}.values())
-    schema = "k bigint, v bigint, s string"
-    old = spark.createDataFrame(old_rows, schema) if old_rows else spark.createDataFrame([], schema)
-    new = spark.createDataFrame(new_rows, schema) if new_rows else spark.createDataFrame([], schema)
-
-    diff = snapshot_diff(old, new, ["k"], ["v", "s"])
-    rebuilt = apply_diff(old, diff, ["k"], ["v", "s"])
-    assert sorted(map(tuple, rebuilt.collect())) == sorted(
-        map(tuple, new.select("k", "v", "s").collect())
-    )
-
-
 # --- chunking invariants ----------------------------------------------------
 
 from finance_etl_pipeline_monthly_close_dataset_spark.operators.chunking import (  # noqa: E402

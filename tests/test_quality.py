@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 from pyspark.sql import functions as F
 
@@ -115,6 +116,49 @@ def _exc(spark, rows):
         "dataset string, index long, column string, check string, failure_case string,"
         " schema_context string, check_number int, severity string",
     )
+
+
+# Check names the close emits beyond the declared checks, then
+# case-mapping edge cases: U+0130 lowercases to i + U+0307, U+212A
+# (Kelvin) to k, U+212B (Angstrom) to a-ring; fullwidth letters and
+# U+017F (long s) fold to no ASCII letter.
+EMITTED_CHECKS = ["not_nullable", "required_column_missing", "column_not_in_schema", "account_in_coa"]
+ADVERSARIAL_CHECKS = [
+    "REQUIRED", "Required_Column_Missing", "coerce_DTYPE(timestamp)", "DType", "ACCOUNT_IN_COA", "xrequiredx",
+    "REQU\u0130RED", "account_\u0130n_coa", "\u0130", "\u212Arequired", "\u212A", "\u212Bccount_in_coa",
+    "\uff44\uff54\uff59\uff50\uff45", "\u017Ftype", "dty pe", "account in coa", "", None,
+]
+
+
+def test_severity_rule_matches_lowercase_contains(spark, specs):
+    """add_severity's case-insensitive regex grades every check name the
+    close emits, and names whose lowercase differs from an ASCII fold,
+    as the former ``lower(coalesce(check, '')).contains`` rule did."""
+    from finance_etl_pipeline_monthly_close_dataset_spark.schemas import RAW_SCHEMAS
+
+    checks = EMITTED_CHECKS + ADVERSARIAL_CHECKS
+    for name, spec in specs.items():
+        checks += [c.name for c in spec.checks] + [f"unique_keys{list(keys)}" for keys in spec.unique_keys]
+        checks += [f"coerce_dtype({f.dataType.simpleString()})" for f in RAW_SCHEMAS[name].fields]
+    check_l = F.lower(F.coalesce(F.col("check"), F.lit("")))
+    needles = check_l.contains("required") | check_l.contains("dtype") | check_l.contains("account_in_coa")
+    former = F.when(needles, F.lit("ERROR")).otherwise(F.lit("WARN"))
+    rows = [("sales", None, "amount", c, "x", "Column", None, None) for c in checks]
+    got = {r["check"]: (r["severity"], r["former"]) for r in add_severity(_exc(spark, rows)).select(
+        "check", "severity", former.alias("former")).collect()}
+    assert {c: sf for c, sf in got.items() if sf[0] != sf[1]} == {}
+    assert got["\u212Arequired"][0] == "ERROR" and got["REQU\u0130RED"][0] == got[None][0] == "WARN"
+
+
+def test_severity_plan_holds_no_case_mapping(spark):
+    """A case-mapping expression in add_severity makes the first close
+    in a JVM build Spark's ICU case table (over a second) when constant
+    folding evaluates it on a literal check.  The analyzed plan shows it
+    before folding; the optimized plan shows it over a column-fed check."""
+    exc = _exc(spark, [("sales", None, "amount", "coerce_dtype(double)", "x", "Column", None, None)])
+    qe = add_severity(exc.repartition(1))._jdf.queryExecution()
+    for plan in (qe.analyzed().toString(), qe.optimizedPlan().toString()):
+        assert re.search(r"\b(lower|upper|initcap|ilike)\(", plan, re.IGNORECASE) is None, plan
 
 
 def _counts(df):

@@ -540,25 +540,6 @@ def test_cms_contract_flag_holds(spark):
     assert rows and all(r["never_undercounts"] for r in rows), rows
 
 
-def test_hll_intersect_estimate_tracks_true_overlap(spark):
-    """Inclusion-exclusion over HLL partials must track the true
-    |A ∩ B| within the compounded sketch error (three ±~1.6% rse
-    estimates at lg_k=12 -- allow 5% of the union size), answering
-    "customers in BOTH years" from persisted sketches alone."""
-    from finance_etl_pipeline_monthly_close_dataset_spark.operators.sketches import (
-        hll_intersect_estimate,
-        hll_partials,
-    )
-
-    # A = 0..2999, B = 2000..4999 -> true overlap 1000, union 5000
-    rows = [("A", i) for i in range(3000)] + [("B", i) for i in range(2000, 5000)]
-    df = spark.createDataFrame(rows, "side string, user_id long")
-    partials = hll_partials(df, ["side"], "user_id")
-    got = hll_intersect_estimate(partials, "side").collect()[0]
-    assert got["_n_sides"] == 2
-    assert abs(got["n_common_est"] - 1000) <= 0.05 * 5000, got
-
-
 def test_cms_state_join_is_hash_join(spark):
     """The cms_lookup state join must stay a BroadcastHashJoin on
     cms_cell. The query's plan-lint ALLOW entry permits a nested-loop
