@@ -211,6 +211,8 @@ def main(argv: list[str] | None = None) -> int:
     if args.command == "ingest-lake":
         from .sources.raw_lake import ingest_raw_to_lake
 
+        if "://" in args.lake_dir:
+            raise SystemExit(f"ingest-lake: --lake-dir must be a local directory, got {args.lake_dir}")
         spark = get_spark()
         out = ingest_raw_to_lake(spark, args.month, args.raw_dir, args.lake_dir)
         for name, path in out.items():
@@ -321,6 +323,8 @@ def main(argv: list[str] | None = None) -> int:
             "run: --raw-dir and --raw-lake-dir are mutually exclusive "
             "(a stale lake must not silently shadow fresh CSVs)"
         )
+    if args.raw_lake_dir is not None and "://" in args.raw_lake_dir:
+        raise SystemExit(f"run: --raw-lake-dir must be a local directory, got {args.raw_lake_dir}")
     raw_dir = args.raw_dir
     if raw_dir is None and args.raw_lake_dir is None:
         raw_dir = "data/raw"

@@ -40,13 +40,9 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from dataclasses import dataclass
-
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceWriter,
-    WriterCommitMessage,
     EqualTo,
     Filter,
     GreaterThan,
@@ -54,7 +50,6 @@ from pyspark.sql.datasource import (
     InputPartition,
     LessThan,
     LessThanOrEqual,
-    SimpleDataSourceStreamReader,
 )
 
 _WORDS = [
@@ -140,12 +135,6 @@ class SynthDocsDataSource(DataSource):
 
     def reader(self, schema) -> SynthDocsReader:
         return SynthDocsReader(self.options)
-
-    def simpleStreamReader(self, schema) -> "SynthDocsStreamReader":
-        return SynthDocsStreamReader(self.options)
-
-    def writer(self, schema, overwrite: bool) -> "JsonlCommitWriter":
-        return JsonlCommitWriter(self.options, schema)
 
 
 class SynthVecsReader(DataSourceReader):
@@ -248,176 +237,3 @@ def register(spark) -> None:
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(SynthDocsDataSource)
     spark.dataSource.register(SynthVecsDataSource)
-
-
-class SynthDocsStreamReader(SimpleDataSourceStreamReader):
-    """Bounded micro-batch stream over the same corpus: each batch
-    emits the next ``batch_size`` ids until ``n_docs`` is exhausted,
-    with replayable offsets ({"next": i}), so a restarted query
-    re-reads exactly the committed range (``readBetweenOffsets``).
-    The simple-reader variant reads on the driver -- right for control
-    streams and tests; the partitioned ``DataSourceStreamReader`` is
-    the high-throughput form, same offset algebra."""
-
-    def __init__(self, options):
-        self.n_docs = int(options.get("n_docs", 1000))
-        self.batch_size = int(options.get("batch_size", 100))
-        self.n_tokens = int(options.get("n_tokens", 40))
-
-    def initialOffset(self) -> dict:
-        return {"next": 0}
-
-    def _rows(self, start: int, end: int):
-        for d in range(start, end):
-            yield (d, _SOURCES[d % len(_SOURCES)], synth_text(d, self.n_tokens))
-
-    def read(self, start: dict):
-        lo = int(start["next"])
-        hi = min(lo + self.batch_size, self.n_docs)
-        # iter() over a materialized list: the runner wants an
-        # iterator, but a bare generator cannot pickle when the batch
-        # is cached driver-side for replay
-        return iter(list(self._rows(lo, hi))), {"next": hi}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        return iter(list(self._rows(int(start["next"]), int(end["next"]))))
-
-
-@dataclass
-class _JsonlCommit(WriterCommitMessage):
-    """One staged part file: (staged path, rows written)."""
-    staged: str
-    n_rows: int
-
-
-class JsonlCommitWriter(DataSourceWriter):
-    """JSONL writer with real two-phase commit: every task streams its
-    partition into a per-JOB staging subdirectory
-    (``_staging_<job>/<task>.jsonl``) and returns a commit message;
-    the driver's ``commit`` renames the staged files into place as
-    ``part_<job>_<task>.jsonl``, writes a per-job
-    ``_manifest_<job>.json``, and rebuilds ``_SUCCESS`` as the UNION
-    of all per-job manifests (so appended jobs accumulate instead of
-    overwriting each other's part lists), while ``abort`` removes the
-    whole staging directory -- so a failed job leaves NO visible
-    output (the atomicity contract DataFrameWriter gives parquet,
-    reproduced for a hand-rolled format). Rows stream through; O(1)
-    memory per task.
-
-    Concurrency + straggler safety (round-6 design, replacing the
-    flat ``_tmp_`` sweep): the staging namespace is the job id, so
-    concurrent append jobs into one directory cannot touch each
-    other's in-flight files; underscore-prefixed names keep staging
-    invisible to Spark/glob readers of the output. A straggler task
-    that is still writing when the driver aborts either writes into
-    the already-unlinked directory (orphaned inode, freed on close)
-    or trips over the TOMBSTONE file commit/abort leave at the
-    staging path -- its ``makedirs`` raises, so no stray file can
-    materialize after teardown (the round-5 flat-sweep race)."""
-
-    def __init__(self, options, schema):
-        import uuid
-
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("jsonlcommit writer needs a path")
-        self.fields = [f.name for f in schema.fields]
-        self.job_id = uuid.uuid4().hex[:12]
-
-    @property
-    def _staging(self) -> str:
-        import os
-
-        return os.path.join(self.path, f"_staging_{self.job_id}")
-
-    def write(self, iterator):
-        import json as _json
-        import os
-        import uuid
-
-        # raises if the tombstone file occupies the staging path --
-        # exactly what a post-abort straggler should do
-        os.makedirs(self._staging, exist_ok=True)
-        staged = os.path.join(self._staging, f"{uuid.uuid4().hex}.jsonl")
-        n = 0
-        with open(staged, "w") as fh:
-            for row in iterator:
-                fh.write(_json.dumps({k: row[k] for k in self.fields}) + "\n")
-                n += 1
-        return _JsonlCommit(staged=staged, n_rows=n)
-
-    def _teardown_staging(self) -> None:
-        """Remove the staging dir and leave a tombstone FILE at its
-        path so a straggler task's makedirs fails instead of
-        recreating it.
-
-        Retry loop, not one retry: on a 32-thread local master an
-        aborted job can have SEVERAL stragglers entering ``write``'s
-        ``makedirs`` while teardown runs, and each one that wins the
-        rmtree->tombstone gap resurrects the directory (measured 7/20
-        aborted jobs with a single retry).  Loop until the tombstone
-        is durably a FILE -- after that, every later ``makedirs``
-        raises FileExistsError and no stray staging dir can outlive
-        the job.  Bounded at 50 x 10 ms; if it still cannot land the
-        leftovers are underscore-hidden from readers."""
-        import os
-        import shutil
-        import time
-
-        for _ in range(50):
-            shutil.rmtree(self._staging, ignore_errors=True)
-            try:
-                with open(self._staging, "x"):
-                    pass
-                return
-            except FileExistsError:
-                if os.path.isfile(self._staging):
-                    return  # tombstone already in place
-                # a straggler's makedirs won the gap: clear and retry
-            except (IsADirectoryError, NotADirectoryError, OSError):
-                pass
-            time.sleep(0.01)
-
-    def commit(self, messages):
-        import json as _json
-        import os
-
-        manifest = []
-        for m in messages:
-            if m is None:
-                continue
-            # job_id stays in the final name (part_<job>_<task>),
-            # keeping concurrent jobs' parts collision-free
-            final = os.path.join(
-                self.path, f"part_{self.job_id}_" + os.path.basename(m.staged)
-            )
-            os.rename(m.staged, final)
-            manifest.append({"file": os.path.basename(final), "n_rows": m.n_rows})
-        self._teardown_staging()
-        # Per-JOB manifest + aggregated _SUCCESS (ADVICE r6): the old
-        # code overwrote _SUCCESS with only THIS job's parts, so after
-        # a second append job the manifest undercounted the directory.
-        # Each job now writes its own _manifest_<job>.json atomically
-        # (tmp + rename), and _SUCCESS is rebuilt as the union of all
-        # per-job manifests present. Two jobs racing the rebuild each
-        # write a _SUCCESS that is a superset of their own parts, and
-        # the per-job manifests stay the authoritative record either
-        # way; both names are underscore-prefixed, so Spark/glob
-        # readers of the data never see them.
-        own = os.path.join(self.path, f"_manifest_{self.job_id}.json")
-        tmp = own + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump({"job_id": self.job_id, "parts": manifest}, fh)
-        os.replace(tmp, own)
-        parts = []
-        for name in sorted(os.listdir(self.path)):
-            if name.startswith("_manifest_") and name.endswith(".json"):
-                with open(os.path.join(self.path, name)) as fh:
-                    parts.extend(_json.load(fh)["parts"])
-        tmp = os.path.join(self.path, "_SUCCESS.tmp")
-        with open(tmp, "w") as fh:
-            _json.dump({"parts": parts}, fh)
-        os.replace(tmp, os.path.join(self.path, "_SUCCESS"))
-
-    def abort(self, messages):
-        self._teardown_staging()

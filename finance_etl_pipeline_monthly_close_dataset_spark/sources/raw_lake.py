@@ -29,28 +29,38 @@ parse once, validate and close from columnar storage forever after.
 Layout::
 
     <lake_dir>/raw/<dataset>/close_month=<YYYY-MM>/part-*.parquet
-    <lake_dir>/raw/_dq_unique/<dataset>/close_month=<YYYY-MM>/part-*.parquet
+    <lake_dir>/raw/<dataset>/close_month=<YYYY-MM>/_dq_unique/part-*.parquet
+    <lake_dir>/raw/<dataset>/close_month=<YYYY-MM>/_manifest.json
+
+One directory per ingested (dataset, month) holds the data files, the
+uniqueness side table and the manifest that pins the side table to
+those data files.  The ingest builds it under ``raw/<dataset>/_staging/``
+and publishes it with the close's own ``writers.commit_dir``, so a
+crash anywhere leaves either the previous month directory or the new
+one, each whole, and re-ingesting a month replaces only that month.
+Spark's file listing skips every ``_``-prefixed name, so a scan of
+``raw/<dataset>`` reads the data files alone.  The lake is local-only,
+as ``curated/`` is: the commit is a set of local renames, so a ``://``
+lake raises ``RemoteLakeError``.
 
 ``close_month`` (not ``month``) because payroll already carries a
 ``month`` DATA column; the partition key is the ingest batch, the data
 column is the payroll period -- they coincide on clean data but must
-not collide in the schema.  Dynamic partition overwrite (session
-default) makes re-ingesting a month replace only that month.
+not collide in the schema.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import RAW_SCHEMAS
-from .readers import RAW_PREFIX, ROW_ID_COL, read_csv_raw, typed_view
-from .writers import write_parquet
+from .readers import RAW_PREFIX, read_csv_raw, typed_view
+from .writers import STAGING, commit_dir, recover_commit, write_parquet
 
 CLOSE_MONTH_COL = "close_month"
 
@@ -79,6 +89,16 @@ DQ_UNIQUE_SUBDIR = "_dq_unique"
 #: of returning stale DQ answers (reference semantics: quality.py
 #: composite-key uniqueness must reflect the data actually closed).
 DQ_MANIFEST_NAME = "_manifest.json"
+
+
+class RemoteLakeError(ValueError):
+    """A raw lake addressed by URI (``hdfs://``, ``s3a://``, ``file://``):
+    the lake commits a month by local renames, so it must be a local
+    directory."""
+
+    def __init__(self, lake_dir: str | Path):
+        super().__init__(f"the raw lake must be a local directory, got {lake_dir}")
+
 
 #: the five per-month raw datasets (chart_of_accounts is reference
 #: data, not a monthly ingest)
@@ -120,9 +140,10 @@ def ingest_raw_to_lake(
 ) -> dict[str, Path]:
     """Parse one month's raw CSVs once and land them as typed parquet.
 
-    Returns ``{dataset: lake table path}``.  One Spark job per dataset,
-    each a single CSV scan -> typed projection -> partitioned zstd
-    write; no shuffle anywhere (the write preserves scan partitioning).
+    Returns ``{dataset: lake table path}``.  Per dataset: one CSV scan
+    -> typed projection -> zstd write of the staged month directory (no
+    shuffle; the write preserves scan partitioning), the uniqueness side
+    table and manifest beside it, then one ``commit_dir``.
     """
     # lazy import: the check inventory lives in plans.quality (which
     # imports sources.readers, never this module); the unique_keys are
@@ -136,24 +157,15 @@ def ingest_raw_to_lake(
     raw_dir = Path(raw_dir)
     out: dict[str, Path] = {}
     for name in datasets or RAW_LAKE_DATASETS:
+        part = _month_partition_dir(lake_dir, name, month)
+        table = part.parent
+        os.makedirs(table, exist_ok=True)
+        # finish or discard an interrupted ingest of this dataset first
+        recover_commit(str(table))
+        staged = table / STAGING / part.name
         schema = RAW_SCHEMAS[name]
         raw = read_csv_raw(spark, str(raw_dir / f"{name}.csv"), schema, with_row_id=True)
-        typed = _sparsify_shadows(typed_view(raw, schema))
-        table = Path(lake_dir) / "raw" / name
-        # Atomicity (ADVICE r14): drop the month's stale side table
-        # BEFORE touching the data partition.  A crash anywhere in this
-        # loop then leaves either (old data + no side table) or
-        # (new data + no/partial side table) -- both of which the
-        # manifest check resolves to the close-side group-by fallback.
-        # Fresh data silently paired with a STALE side table is now
-        # impossible.
-        _delete_path(spark, _dq_unique_path(lake_dir, name, month))
-        write_parquet(
-            typed.withColumn(CLOSE_MONTH_COL, F.lit(month)),
-            str(table),
-            partition_by=[CLOSE_MONTH_COL],
-        )
-        out[name] = table
+        write_parquet(_sparsify_shadows(typed_view(raw, schema)), str(staged))
         # write-time uniqueness materialization: the group-by scans the
         # just-written typed parquet (columnar, key columns only --
         # cheaper than re-deriving from the CSV parse plan) and lands
@@ -164,10 +176,7 @@ def ingest_raw_to_lake(
         # close-side reader needs to skip its own group-by.
         spec = specs.get(name)
         if spec is not None and spec.unique_keys:
-            lake_slice = (
-                spark.read.parquet(str(table))
-                .filter(F.col(CLOSE_MONTH_COL) == F.lit(month))
-            )
+            lake_slice = spark.read.parquet(str(staged))
             dups = None
             for keys in spec.unique_keys:
                 if not all(k in lake_slice.columns for k in keys):
@@ -175,26 +184,19 @@ def ingest_raw_to_lake(
                 d = unique_key_exceptions(lake_slice, name, keys)
                 dups = d if dups is None else dups.unionByName(d)
             if dups is not None:
-                side_path = _dq_unique_path(lake_dir, name, month)
-                dups.repartition(1).write.mode("overwrite").parquet(side_path)
-                # manifest LAST: it exists only once the side table is
-                # complete AND pinned to the exact data files it was
-                # computed from.  Readers treat a missing manifest as
-                # invalid, so every earlier crash point is safe.
-                fp = _partition_fingerprint(spark, lake_dir, name, month)
-                if fp is not None:
-                    _write_manifest(spark, side_path, fp)
+                dups.repartition(1).write.mode("overwrite").parquet(str(staged / DQ_UNIQUE_SUBDIR))
+                (staged / DQ_MANIFEST_NAME).write_text(
+                    json.dumps(_partition_fingerprint(staged), sort_keys=True), encoding="utf-8"
+                )
+        commit_dir(str(table / STAGING), str(table))
+        out[name] = table
     return out
 
 
-def _dq_unique_path(lake_dir: str | Path, dataset: str, month: str) -> str:
-    lake_str = str(lake_dir).rstrip("/")
-    return f"{lake_str}/raw/{DQ_UNIQUE_SUBDIR}/{dataset}/{CLOSE_MONTH_COL}={month}"
-
-
-def _month_partition_dir(lake_dir: str | Path, dataset: str, month: str) -> str:
-    lake_str = str(lake_dir).rstrip("/")
-    return f"{lake_str}/raw/{dataset}/{CLOSE_MONTH_COL}={month}"
+def _month_partition_dir(lake_dir: str | Path, dataset: str, month: str) -> Path:
+    if "://" in str(lake_dir):
+        raise RemoteLakeError(lake_dir)
+    return Path(lake_dir) / "raw" / dataset / f"{CLOSE_MONTH_COL}={month}"
 
 
 def _is_data_file(name: str) -> bool:
@@ -203,40 +205,16 @@ def _is_data_file(name: str) -> bool:
     return not name.startswith(("_", "."))
 
 
-def _partition_fingerprint(
-    spark: SparkSession, lake_dir: str | Path, dataset: str, month: str
-) -> dict | None:
-    """Sorted (name, size) listing + footer row count of one month's
-    data partition, or ``None`` if the partition directory is absent.
+def _partition_fingerprint(part: Path) -> dict:
+    """Sorted (name, size) listing + footer row count of one month
+    directory's data files.
 
-    Local paths list via ``os`` and sum parquet-footer ``num_rows``
-    with pyarrow (metadata-only reads -- no data pages touched, ~ms per
-    file even for a 100M-row month).  Qualified URIs (hdfs://, s3a://)
-    list via the Hadoop FileSystem API through the JVM and record
-    ``row_count: None`` (footers would need a remote range read per
-    file; the listing alone already catches any added/removed/replaced
-    file, since sizes change on rewrite and Spark part names are
-    UUID-unique)."""
-    lake_str = str(lake_dir)
-    part_dir = _month_partition_dir(lake_dir, dataset, month)
-    if "://" in lake_str:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(part_dir)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(jpath):
-            return None
-        files = sorted(
-            (s.getPath().getName(), int(s.getLen()))
-            for s in fs.listStatus(jpath)
-            if s.isFile() and _is_data_file(s.getPath().getName())
-        )
-        return {"row_count": None, "files": [list(t) for t in files]}
-    p = Path(part_dir)
-    if not p.is_dir():
-        return None
+    Lists via ``os`` and sums parquet-footer ``num_rows`` with pyarrow
+    (metadata-only reads -- no data pages touched, ~ms per file even
+    for a 100M-row month)."""
     files = sorted(
         (f.name, f.stat().st_size)
-        for f in p.iterdir()
+        for f in part.iterdir()
         if f.is_file() and _is_data_file(f.name)
     )
     row_count: int | None = 0
@@ -244,77 +222,10 @@ def _partition_fingerprint(
         import pyarrow.parquet as pq
 
         for name, _size in files:
-            row_count += pq.ParquetFile(str(p / name)).metadata.num_rows
+            row_count += pq.ParquetFile(str(part / name)).metadata.num_rows
     except Exception:
         row_count = None
     return {"row_count": row_count, "files": [list(t) for t in files]}
-
-
-def _delete_path(spark: SparkSession, path: str) -> None:
-    """Remove a lake path if present (local rmtree / Hadoop fs.delete)."""
-    if "://" in path:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(jpath):
-            fs.delete(jpath, True)
-    elif os.path.exists(path):
-        shutil.rmtree(path)
-
-
-def _write_manifest(spark: SparkSession, side_path: str, manifest: dict) -> None:
-    payload = json.dumps(manifest, sort_keys=True)
-    target = f"{side_path.rstrip('/')}/{DQ_MANIFEST_NAME}"
-    if "://" in side_path:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(target)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        out = fs.create(jpath, True)
-        try:
-            out.write(bytearray(payload.encode("utf-8")))
-        finally:
-            out.close()
-    else:
-        with open(target, "w", encoding="utf-8") as fh:
-            fh.write(payload)
-
-
-def _read_manifest(spark: SparkSession, side_path: str) -> dict | None:
-    target = f"{side_path.rstrip('/')}/{DQ_MANIFEST_NAME}"
-    if "://" in side_path:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(target)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(jpath):
-            return None
-        stream = fs.open(jpath)
-        try:
-            # IOUtils drains the FSDataInputStream fully regardless of size
-            data = bytes(
-                spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            )
-        finally:
-            stream.close()
-        return json.loads(data.decode("utf-8"))
-    if not os.path.exists(target):
-        return None
-    with open(target, encoding="utf-8") as fh:
-        return json.loads(fh.read())
-
-
-def _manifest_matches(manifest: dict | None, current: dict | None) -> bool:
-    """True only when the stored fingerprint equals the live one.
-
-    Row counts participate only when both sides recorded one (URI lakes
-    store ``None``); the file listing always participates."""
-    if manifest is None or current is None:
-        return False
-    if manifest.get("files") != current.get("files"):
-        return False
-    m_rc, c_rc = manifest.get("row_count"), current.get("row_count")
-    if m_rc is not None and c_rc is not None and m_rc != c_rc:
-        return False
-    return True
 
 
 def read_lake_unique_exceptions(
@@ -328,33 +239,26 @@ def read_lake_unique_exceptions(
     -- the caller then computes the group-by itself, so the close is
     always correct and only sometimes slower.
 
-    Validity (r15, judge r14 ask #1): the side table carries a
-    ``_manifest.json`` fingerprint (sorted data-file name/size listing
-    + footer row count) of the month data partition it was computed
-    from, written as the final ingest step.  This function recomputes
-    the live fingerprint and returns ``None`` on ANY mismatch --
-    covering out-of-band parquet copies into the month partition,
-    partial re-ingests, and pre-r15 lakes (side table without a
-    manifest).  Local paths use cheap os probes; qualified URIs
-    (hdfs://, s3a://) go through the Hadoop FileSystem API, so cluster
-    lakes get the same guard."""
-    path = _dq_unique_path(lake_dir, dataset, month)
-    manifest = _read_manifest(spark, path)
-    if manifest is None:
+    The side table lives in the month directory it was computed from,
+    as ``_dq_unique/``, beside a ``_manifest.json`` fingerprint (sorted
+    data-file name/size listing + footer row count) of that directory's
+    data files; both were committed with the data in one
+    ``commit_dir``.  This function recomputes the live fingerprint and
+    returns ``None`` when the side table or manifest is missing or the
+    fingerprint differs in any way -- covering out-of-band parquet
+    copies into the month directory and lakes written before the side
+    table moved into it (their ``raw/_dq_unique/`` tree is never
+    read)."""
+    part = _month_partition_dir(lake_dir, dataset, month)
+    manifest = part / DQ_MANIFEST_NAME
+    # the side table's files, named one by one: Spark warns about a read
+    # path whose own name starts with "_"
+    side = sorted(str(f) for f in (part / DQ_UNIQUE_SUBDIR).glob("*.parquet"))
+    if not (manifest.is_file() and side):
         return None
-    current = _partition_fingerprint(spark, lake_dir, dataset, month)
-    if not _manifest_matches(manifest, current):
+    if json.loads(manifest.read_text(encoding="utf-8")) != _partition_fingerprint(part):
         return None
-    if "://" in str(lake_dir):
-        from pyspark.errors import AnalysisException
-
-        try:
-            return spark.read.parquet(path)
-        except AnalysisException:
-            return None
-    if not os.path.exists(path):
-        return None
-    return spark.read.parquet(path)
+    return spark.read.parquet(*side)
 
 
 def read_raw_lake(
@@ -369,22 +273,14 @@ def read_raw_lake(
     PartitionFilters, so only that month's files are listed/read);
     returns the same shape ``read_csv_typed`` produces -- typed columns
     + sparse ``_raw_`` shadows + ``_row_id`` -- so the close's DQ and
-    fact stages run unchanged on it."""
-    # Existence pre-check only for plain local paths: for qualified
-    # URIs (hdfs://, s3a://) os.path cannot answer, so let the Spark
-    # read raise its own AnalysisException on a missing table
-    # (ADVICE r13 -- the check must not reject tables that exist on a
-    # cluster filesystem).
-    lake_str = str(lake_dir)
-    table = (
-        f"{lake_str.rstrip('/')}/raw/{dataset}"
-        if "://" in lake_str
-        else Path(lake_dir) / "raw" / dataset
-    )
-    if "://" not in lake_str and not os.path.exists(table):
-        raise FileNotFoundError(f"Missing raw lake table: {table}")
+    fact stages run unchanged on it.  A month that was never ingested
+    raises ``FileNotFoundError``: closing it would pass the gate with
+    no rows and commit empty tables over the previous close."""
+    part = _month_partition_dir(lake_dir, dataset, month)
+    if not part.is_dir():
+        raise FileNotFoundError(f"Missing raw lake month: {part}")
     return (
-        spark.read.parquet(str(table))
+        spark.read.parquet(str(part.parent))
         .filter(F.col(CLOSE_MONTH_COL) == F.lit(month))
         .drop(CLOSE_MONTH_COL)
     )

@@ -1749,44 +1749,6 @@ def test_synthdocs_python_datasource(spark):
     assert mixed.count() == 10
 
 
-def test_synthdocs_stream_reader(spark, tmp_path):
-    """The streaming side of the custom DataSource: a bounded
-    micro-batch stream (batch_size=40 over 100 docs -> 3 batches)
-    drains into a memory sink with every document exactly once, and
-    the aggregate equals the batch read."""
-    from finance_etl_pipeline_monthly_close_dataset_spark.sources.pydatasource import (
-        register,
-    )
-
-    register(spark)
-    stream = (
-        spark.readStream.format("synthdocs")
-        .option("n_docs", 100)
-        .option("batch_size", 40)
-        .load()
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("t_synthdocs_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.table("t_synthdocs_stream")
-    assert got.count() == 100
-    assert got.select("doc_id").distinct().count() == 100
-    batch = (
-        spark.read.format("synthdocs").option("n_docs", 100).load()
-        .groupBy("source").count().collect()
-    )
-    streamed = {r["source"]: r["count"] for r in got.groupBy("source").count().collect()}
-    assert streamed == {r["source"]: r["count"] for r in batch}
-
-
 def test_corpus_curate_recipe(spark, tmp_path):
     """One-command curation: exact dup dropped, near-dup collapsed to
     its representative, low-quality junk filtered, benchmark-
@@ -1819,148 +1781,6 @@ def test_corpus_curate_recipe(spark, tmp_path):
     assert "d1" in kept and "d4" in kept
     back = spark.read.parquet(out)
     assert set(back.select("split").distinct().toPandas()["split"]) <= {"train", "val", "test"}
-
-
-def test_synthdocs_writer_two_phase_commit(spark, tmp_path):
-    """The custom DataSource write path: staged part files promote
-    only on driver commit (with a _SUCCESS manifest carrying per-part
-    row counts), and a failing job leaves NO visible part files."""
-    import json
-    import os
-
-    from finance_etl_pipeline_monthly_close_dataset_spark.sources.pydatasource import (
-        register,
-    )
-
-    register(spark)
-    out = str(tmp_path / "jl_out")
-    df = spark.range(100).selectExpr("id AS doc_id", "CAST(id % 3 AS STRING) AS grp")
-    df.repartition(4).write.format("synthdocs").option("path", out).mode(
-        "append"
-    ).save()
-    parts = [f for f in os.listdir(out) if f.startswith("part_")]
-    # staging is gone; only the underscore-hidden tombstone remains
-    assert parts and not [
-        f for f in os.listdir(out)
-        if f.startswith("_staging_") and os.path.isdir(os.path.join(out, f))
-    ]
-    manifest = json.load(open(os.path.join(out, "_SUCCESS")))
-    assert sum(p["n_rows"] for p in manifest["parts"]) == 100
-    back = spark.read.json(out + "/part_*.jsonl")
-    assert back.count() == 100 and set(back.columns) == {"doc_id", "grp"}
-
-    # a failing write must abort: staged files removed, no _SUCCESS
-    bad_out = str(tmp_path / "jl_bad")
-    bad = spark.range(10).selectExpr(
-        "id AS doc_id",
-        "CASE WHEN id = 7 THEN raise_error('boom') ELSE CAST(id AS STRING) END AS grp",
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        bad.write.format("synthdocs").option("path", bad_out).mode("append").save()
-    leftovers = os.listdir(bad_out) if os.path.exists(bad_out) else []
-    assert not [f for f in leftovers if f.startswith("part_")]
-    assert "_SUCCESS" not in leftovers
-    # abort removes the whole staging dir (a task that died mid-write
-    # never returns a commit message; its file lived in staging) and
-    # leaves a tombstone FILE so a straggler's makedirs fails instead
-    # of resurrecting the dir -- the round-5 sweep race
-    staging = [f for f in leftovers if f.startswith("_staging_")]
-    assert all(
-        os.path.isfile(os.path.join(bad_out, f)) for f in staging
-    ), staging
-
-
-def test_synthdocs_writer_append_accumulates_manifest(spark, tmp_path):
-    """ADVICE r6: _SUCCESS must list the UNION of all committed jobs'
-    parts, not just the last job's -- a second append previously
-    overwrote the manifest and undercounted the directory. Each job
-    also leaves its own authoritative _manifest_<job>.json."""
-    import json
-    import os
-
-    from finance_etl_pipeline_monthly_close_dataset_spark.sources.pydatasource import (
-        register,
-    )
-
-    register(spark)
-    out = str(tmp_path / "jl_append")
-    df1 = spark.range(20).selectExpr("id AS doc_id", "CAST(id AS STRING) AS grp")
-    df1.repartition(2).write.format("synthdocs").option("path", out).mode("append").save()
-    df2 = spark.range(30).selectExpr("id + 100 AS doc_id", "CAST(id AS STRING) AS grp")
-    df2.repartition(3).write.format("synthdocs").option("path", out).mode("append").save()
-
-    manifest = json.load(open(os.path.join(out, "_SUCCESS")))
-    assert sum(p["n_rows"] for p in manifest["parts"]) == 50
-    # manifest part list matches the visible part files exactly
-    parts_on_disk = {f for f in os.listdir(out) if f.startswith("part_")}
-    assert {p["file"] for p in manifest["parts"]} == parts_on_disk
-    job_manifests = [f for f in os.listdir(out) if f.startswith("_manifest_")]
-    assert len(job_manifests) == 2
-    assert spark.read.json(out + "/part_*.jsonl").count() == 50
-
-
-def test_synthdocs_writer_tmp_in_dir_path(spark, tmp_path):
-    """Commit renames ONLY the basename: an output directory whose
-    path itself contains '_tmp_' must not have the directory segment
-    rewritten (regression: full-path .replace broke the rename)."""
-    import json
-    import os
-
-    from finance_etl_pipeline_monthly_close_dataset_spark.sources.pydatasource import (
-        register,
-    )
-
-    register(spark)
-    out = str(tmp_path / "stage_tmp_dir" / "out")
-    df = spark.range(20).selectExpr("id AS doc_id", "CAST(id AS STRING) AS grp")
-    df.repartition(2).write.format("synthdocs").option("path", out).mode(
-        "append"
-    ).save()
-    parts = [f for f in os.listdir(out) if f.startswith("part_")]
-    assert parts and not [
-        f for f in os.listdir(out)
-        if f.startswith("_staging_") and os.path.isdir(os.path.join(out, f))
-    ]
-    manifest = json.load(open(os.path.join(out, "_SUCCESS")))
-    assert sum(p["n_rows"] for p in manifest["parts"]) == 20
-
-
-def test_synthdocs_writer_concurrent_job_isolation(spark, tmp_path):
-    """Staging is namespaced per job (_staging_<job>/<task>.jsonl):
-    one job's commit/abort teardown must never delete ANOTHER job's
-    in-flight staged files in the same directory (round-5 advice --
-    the old flat sweep's keep-set protected nothing once committed
-    files were renamed, so concurrent appends could silently drop
-    each other's rows)."""
-    import json
-    import os
-
-    from finance_etl_pipeline_monthly_close_dataset_spark.sources.pydatasource import (
-        register,
-    )
-
-    register(spark)
-    out = str(tmp_path / "jl_concurrent")
-    os.makedirs(os.path.join(out, "_staging_otherjob0000"))
-    # another job's in-flight staged file, mid-write at commit time
-    foreign = os.path.join(out, "_staging_otherjob0000", "deadbeef.jsonl")
-    with open(foreign, "w") as fh:
-        fh.write('{"doc_id": 1, "grp": "x"}\n')
-
-    df = spark.range(30).selectExpr("id AS doc_id", "CAST(id AS STRING) AS grp")
-    df.repartition(2).write.format("synthdocs").option("path", out).mode(
-        "append"
-    ).save()
-
-    assert os.path.exists(foreign)  # survived the other job's teardown
-    files = os.listdir(out)
-    manifest = json.load(open(os.path.join(out, "_SUCCESS")))
-    assert sum(p["n_rows"] for p in manifest["parts"]) == 30
-    # this job's own staged files are gone, its parts are visible
-    own = [f for f in files if f.startswith("part_")]
-    assert len(own) == 2
 
 
 def test_jpeg_roundtrip_all_modes():

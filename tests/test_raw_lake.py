@@ -24,7 +24,10 @@ from finance_etl_pipeline_monthly_close_dataset_spark.sample_data import (
 )
 from finance_etl_pipeline_monthly_close_dataset_spark.sources.raw_lake import (
     CLOSE_MONTH_COL,
+    DQ_MANIFEST_NAME,
+    DQ_UNIQUE_SUBDIR,
     ingest_raw_to_lake,
+    read_lake_unique_exceptions,
     read_raw_lake,
 )
 
@@ -75,6 +78,10 @@ def both_closes(spark, dirty_month):
 def _sorted_lines(path: Path) -> list[str]:
     lines = path.read_text().splitlines()
     return [lines[0]] + sorted(lines[1:])  # header + order-insensitive body
+
+
+def _tree_bytes(root: Path) -> dict[str, bytes]:
+    return {str(p.relative_to(root)): p.read_bytes() for p in root.rglob("*") if p.is_file()}
 
 
 def test_dq_exceptions_identical(both_closes):
@@ -154,7 +161,8 @@ def test_reingest_replaces_only_that_month(spark, dirty_month, tmp_path):
     ingest_raw_to_lake(spark, MONTH, raw, lake)
     n_nov = read_raw_lake(spark, lake, "sales", "2025-11").count()
     assert n_nov > 0
-    # dynamic partition overwrite: re-ingesting December leaves November
+    # each month is its own committed directory: re-ingesting December
+    # leaves November
     ingest_raw_to_lake(spark, MONTH, raw, lake)
     assert read_raw_lake(spark, lake, "sales", "2025-11").count() == n_nov
 
@@ -178,10 +186,6 @@ def test_ingest_materializes_unique_exceptions(spark, dirty_month, both_closes):
     must be there, in the exact exception-record shape the close
     unions in, and a clean dataset (expenses) must still have an
     existence-marker file (empty, schema-bearing)."""
-    from finance_etl_pipeline_monthly_close_dataset_spark.sources.raw_lake import (
-        read_lake_unique_exceptions,
-    )
-
     root, raw, ref = dirty_month
     pre = read_lake_unique_exceptions(spark, root / "lake", "sales", MONTH)
     assert pre is not None
@@ -193,26 +197,22 @@ def test_ingest_materializes_unique_exceptions(spark, dirty_month, both_closes):
     assert r["dataset"] == "sales" and r["index"] is None
     clean = read_lake_unique_exceptions(spark, root / "lake", "expenses", MONTH)
     assert clean is not None and clean.count() == 0
-    # pre-r14 lake (side table absent) -> None, caller computes
+    # month absent (no side table) -> None, caller computes
     assert read_lake_unique_exceptions(spark, root / "lake", "sales", "1999-01") is None
-    # URI-addressed lakes attempt the read: present month resolves,
-    # absent month degrades to None instead of raising
-    uri = "file://" + str(root / "lake")
-    assert read_lake_unique_exceptions(spark, uri, "sales", MONTH).count() == 1
-    assert read_lake_unique_exceptions(spark, uri, "sales", "1999-01") is None
 
 
 def test_lake_close_falls_back_without_unique_side_table(spark, dirty_month, both_closes, tmp_path):
-    """Deleting the r14 side table must not change the close's output:
-    collect_exceptions falls back to the group-by (pre-r14 lakes)."""
+    """Deleting the side tables from the month directories must not
+    change the close's output: collect_exceptions falls back to the
+    group-by (lakes without a side table)."""
     import shutil as _sh
 
-    from finance_etl_pipeline_monthly_close_dataset_spark.sources.raw_lake import (
-        DQ_UNIQUE_SUBDIR,
-    )
-
     root, raw, ref = dirty_month
-    _sh.rmtree(root / "lake" / "raw" / DQ_UNIQUE_SUBDIR)
+    sides = list((root / "lake" / "raw").glob(f"*/{CLOSE_MONTH_COL}={MONTH}/{DQ_UNIQUE_SUBDIR}"))
+    assert {p.parent.parent.name for p in sides} >= {"sales", "expenses"}
+    for side in sides:
+        _sh.rmtree(side)
+    assert read_lake_unique_exceptions(spark, root / "lake", "sales", MONTH) is None
     out = run_month(
         spark, Settings(), month=MONTH, raw_dir=None, raw_lake_dir=root / "lake",
         curated_dir=tmp_path / "curated_fb", reference_dir=ref, fail_on="NEVER",
@@ -234,13 +234,35 @@ def test_run_month_refuses_both_sources(spark, tmp_path):
         )
 
 
-def test_read_raw_lake_uri_paths_skip_local_check(spark):
-    # ADVICE r13: a qualified URI must reach the Spark reader (which
-    # raises its own error), not fail the local os.path pre-check
-    from pyspark.errors import AnalysisException
+def test_uri_lakes_are_rejected(spark, dirty_month, monkeypatch):
+    """The raw lake commits by local renames: each entry point refuses a
+    URI lake with the named error, and the CLI refuses it before the
+    session starts."""
+    from finance_etl_pipeline_monthly_close_dataset_spark import cli
+    from finance_etl_pipeline_monthly_close_dataset_spark.sources.raw_lake import (
+        RemoteLakeError,
+    )
 
-    with pytest.raises(AnalysisException):
-        read_raw_lake(spark, "file:///nonexistent_lake_root", "sales", MONTH)
+    root, raw, ref = dirty_month
+    uri = "file://" + str(root / "lake")
+    with pytest.raises(RemoteLakeError, match="local directory"):
+        ingest_raw_to_lake(spark, MONTH, raw, uri)
+    with pytest.raises(RemoteLakeError, match="local directory"):
+        read_raw_lake(spark, uri, "sales", MONTH)
+    with pytest.raises(RemoteLakeError, match="local directory"):
+        read_lake_unique_exceptions(spark, uri, "sales", MONTH)
+    assert issubclass(RemoteLakeError, ValueError)
+
+    def no_session():
+        raise AssertionError("the session started before the lake path was checked")
+
+    monkeypatch.setattr(cli, "get_spark", no_session)
+    for argv in (
+        ["run", "--month", MONTH, "--raw-lake-dir", uri],
+        ["ingest-lake", "--month", MONTH, "--raw-dir", str(raw), "--lake-dir", uri],
+    ):
+        with pytest.raises(SystemExit, match="must be a local directory"):
+            cli.main(argv)
 
 
 def test_lake_mode_gate_fail_still_writes_audit(spark, dirty_month, both_closes, tmp_path):
@@ -275,11 +297,6 @@ def test_manifest_guards_out_of_band_writes(spark, dirty_month, tmp_path):
     ACTUALLY on disk, not the stale pre-tamper answer."""
     import shutil as _sh
 
-    from finance_etl_pipeline_monthly_close_dataset_spark.sources.raw_lake import (
-        DQ_UNIQUE_SUBDIR,
-        read_lake_unique_exceptions,
-    )
-
     root, raw, ref = dirty_month
     lake = tmp_path / "lake_tamper"
     ingest_raw_to_lake(spark, MONTH, raw, lake)
@@ -307,30 +324,27 @@ def test_manifest_guards_out_of_band_writes(spark, dirty_month, tmp_path):
     )
     assert n_dup_sales > 1
 
-    # pre-r15 lake shape (side table, no manifest) is also untrusted
-    man = (
-        lake / "raw" / DQ_UNIQUE_SUBDIR / "expenses"
-        / f"{CLOSE_MONTH_COL}={MONTH}" / "_manifest.json"
-    )
+    # a side table without its manifest is also untrusted
+    man = lake / "raw" / "expenses" / f"{CLOSE_MONTH_COL}={MONTH}" / DQ_MANIFEST_NAME
     assert man.exists()
     man.unlink()
     assert read_lake_unique_exceptions(spark, lake, "expenses", MONTH) is None
 
 
 def test_reingest_crash_leaves_no_stale_side_table(spark, dirty_month, tmp_path, monkeypatch):
-    """ADVICE r14: the data partition and side table are two writes; a
-    crash between them during re-ingest must not leave fresh data paired
-    with a stale side table.  The old side table is deleted BEFORE the
-    data write, so the crash point degrades to the group-by fallback."""
+    """The data files, side table and manifest of a month are staged and
+    committed as one directory: a crash while re-ingesting, here inside
+    the side table's group-by, leaves the month directory as it was,
+    and its side table still valid."""
     import finance_etl_pipeline_monthly_close_dataset_spark.plans.quality as q
-    from finance_etl_pipeline_monthly_close_dataset_spark.sources.raw_lake import (
-        read_lake_unique_exceptions,
-    )
 
     root, raw, ref = dirty_month
     lake = tmp_path / "lake_crash"
     ingest_raw_to_lake(spark, MONTH, raw, lake, datasets=["sales"])
-    assert read_lake_unique_exceptions(spark, lake, "sales", MONTH) is not None
+    part = lake / "raw" / "sales" / f"{CLOSE_MONTH_COL}={MONTH}"
+    before = _tree_bytes(part)
+    assert DQ_MANIFEST_NAME in before
+    assert any(name.startswith(DQ_UNIQUE_SUBDIR + "/") for name in before)
 
     def boom(*a, **k):
         raise RuntimeError("simulated crash between data and side writes")
@@ -338,5 +352,89 @@ def test_reingest_crash_leaves_no_stale_side_table(spark, dirty_month, tmp_path,
     monkeypatch.setattr(q, "unique_key_exceptions", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
         ingest_raw_to_lake(spark, MONTH, raw, lake, datasets=["sales"])
-    # no stale side table survives the crash; reader falls back
-    assert read_lake_unique_exceptions(spark, lake, "sales", MONTH) is None
+    assert _tree_bytes(part) == before
+    pre = read_lake_unique_exceptions(spark, lake, "sales", MONTH)
+    assert pre is not None
+    assert [r["failure_case"] for r in pre.collect()] == ["TLM|INV-DUP"]
+
+
+def test_crash_inside_the_ingest_commit_is_finished_by_the_next_ingest(
+    spark, dirty_month, both_closes, tmp_path, monkeypatch
+):
+    """A crash after the month directory reached ``_commit`` but before
+    it moved into place keeps the previous month whole; the next ingest
+    of that dataset, here of another month, moves the new one into
+    place, and the lake-fed close then equals the CSV close."""
+    from finance_etl_pipeline_monthly_close_dataset_spark.sources import writers
+
+    root, raw, ref = dirty_month
+    _, out_csv, _ = both_closes
+    lake = tmp_path / "lake_commit_crash"
+    old_raw = tmp_path / "raw_old"
+    generate_synthetic_raw(old_raw, month=MONTH, seed=7)
+    ingest_raw_to_lake(spark, MONTH, old_raw, lake)
+
+    promote = writers.promote_dir
+    calls: list[str] = []
+
+    def crash_once(built, path):
+        calls.append(path)
+        if len(calls) == 1:
+            raise RuntimeError("simulated crash inside the commit")
+        promote(built, path)
+
+    monkeypatch.setattr(writers, "promote_dir", crash_once)
+    with pytest.raises(RuntimeError, match="inside the commit"):
+        ingest_raw_to_lake(spark, MONTH, raw, lake)
+    monkeypatch.undo()
+    sales = lake / "raw" / "sales"
+    assert (sales / "_commit" / f"{CLOSE_MONTH_COL}={MONTH}").is_dir()
+    # the previous month stands, with its own (duplicate-free) side table
+    prev = read_lake_unique_exceptions(spark, lake, "sales", MONTH)
+    assert prev is not None and prev.count() == 0
+
+    ingest_raw_to_lake(spark, "2025-11", old_raw, lake, datasets=["sales"])
+    assert sorted(p.name for p in sales.iterdir()) == [
+        f"{CLOSE_MONTH_COL}=2025-11", f"{CLOSE_MONTH_COL}={MONTH}",
+    ]
+    new = read_lake_unique_exceptions(spark, lake, "sales", MONTH)
+    assert new is not None
+    assert [r["failure_case"] for r in new.collect()] == ["TLM|INV-DUP"]
+
+    # the crash stopped the ingest at sales; the other four still hold
+    # the previous data
+    ingest_raw_to_lake(spark, MONTH, raw, lake, datasets=["expenses", "payroll", "inventory_movements", "fx_rates"])
+    out = run_month(
+        spark, Settings(), month=MONTH, raw_dir=None, raw_lake_dir=lake,
+        curated_dir=tmp_path / "curated", reference_dir=ref, fail_on="NEVER",
+    )
+    for kind in ("dq_exceptions", "dq_summary"):
+        assert _sorted_lines(out[kind]) == _sorted_lines(out_csv[kind])
+    for kind in ("fact", "kpi"):
+        a, b = spark.read.parquet(str(out_csv[kind])), spark.read.parquet(str(out[kind]))
+        assert a.count() == b.count() and a.exceptAll(b).count() == b.exceptAll(a).count() == 0
+    assert out["metrics"] == out_csv["metrics"]
+
+
+def test_close_of_a_month_never_ingested_raises(spark, dirty_month, both_closes, tmp_path, capsys):
+    """A lake-fed close of a month the lake does not hold fails with one
+    line naming the missing month directory, and the previous close
+    stays byte-identical (it used to pass the gate with no rows and
+    commit empty tables)."""
+    import shutil as _sh
+
+    from finance_etl_pipeline_monthly_close_dataset_spark import cli
+
+    root, raw, ref = dirty_month
+    curated = tmp_path / "curated"
+    _sh.copytree(root / "curated_lake", curated)
+    before = _tree_bytes(curated)
+    rc = cli.main([
+        "run", "--month", "2026-01", "--raw-lake-dir", str(root / "lake"),
+        "--curated-dir", str(curated), "--reference-dir", str(ref), "--fail-on", "NEVER",
+    ])
+    err = capsys.readouterr().err
+    assert rc == 1
+    assert "run: FileNotFoundError: Missing raw lake month:" in err
+    assert f"sales/{CLOSE_MONTH_COL}=2026-01" in err
+    assert _tree_bytes(curated) == before
