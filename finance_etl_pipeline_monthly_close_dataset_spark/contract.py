@@ -8497,6 +8497,8 @@ def _synthclose_write_raw(
     the same way), matching the stress generator's 90%-one-entity
     semantics rather than correlating entity with dataset.
     """
+    from .sources.readers import CSV_DIALECT
+
     i = F.col("id")
     if skew:
         ent = F.when(i % 100 < 90, F.lit("E0")).otherwise(
@@ -8513,7 +8515,7 @@ def _synthclose_write_raw(
         # few large files, not 32 shards per dataset: the close's CSV
         # scan otherwise fragments into hundreds of tiny splits whose
         # per-task overhead dominates at this corpus size
-        df.coalesce(4).write.mode("overwrite").option("header", "true").csv(
+        df.coalesce(4).write.mode("overwrite").options(header="true", **CSV_DIALECT).csv(
             f"{raw_dir}/{name}.csv"
         )
 

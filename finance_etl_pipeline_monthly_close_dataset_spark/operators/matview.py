@@ -22,8 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-STATE_COLS = ["n_rows", "sum_val", "min_val", "max_val"]
-
 
 def aggregate_state(
     df: DataFrame,

@@ -15,15 +15,16 @@ plain-dict Plotly figure JSON for any Plotly runtime to render.
 from __future__ import annotations
 
 import html as _html
-import os
+import json
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.readers import read_parquet_or_empty
-from .exports import KPI_COLS, add_margin_cols
-from .star import DATE_COL_CANDIDATES, filter_to_month, infer_month, pick_col
+from ..sources.readers import CSV_DIALECT
+from ..sources.writers import staged_commit
+from .exports import KPI_COLS
+from .star import add_margin_cols, load_curated, pick_col
 
 
 def top_entities_by_revenue(kpi: DataFrame, k: int = 8) -> list[str]:
@@ -199,21 +200,14 @@ def build_dashboard(
     month: str | None = None,
     out_html: str | Path | None = None,
 ) -> Path:
-    """Curated layer -> one HTML dashboard (reference lines 74-225)."""
+    """Curated layer -> one HTML dashboard and its figure JSON beside
+    it, published as one set (reference lines 74-225)."""
     curated = Path(curated_dir)
-    fact = read_parquet_or_empty(spark, str(curated / "fact_transactions.parquet"))
-    dim = read_parquet_or_empty(spark, str(curated / "dim_accounts.parquet"))
-    kpi = read_parquet_or_empty(spark, str(curated / "kpi_monthly.parquet"))
-
-    if "month" in kpi.columns:
-        kpi = kpi.withColumn("month", F.substring(F.col("month").cast("string"), 1, 7))
-    month = month or infer_month(kpi)
-    if not month:
-        raise SystemExit("Could not infer month. Provide month=YYYY-MM.")
+    cur = load_curated(spark, curated, month)
+    month = cur.month
     out = Path(out_html) if out_html else Path("reports") / month / "dashboard.html"
-    os.makedirs(out.parent, exist_ok=True)
 
-    kpi2 = add_margin_cols(kpi)
+    kpi2 = add_margin_cols(cur.kpi)
 
     # trend charts over the top-8 entities
     trend_html = "<p class='muted'>No KPI chart available.</p>"
@@ -249,9 +243,8 @@ def build_dashboard(
     kpi_table = _table_html(kpi_rows, keep)
 
     # expense breakdown
-    date_col = pick_col(fact, DATE_COL_CANDIDATES)
-    fact_m = filter_to_month(fact, date_col, month)
-    exp = [(r["label"], float(r["abs_amount"])) for r in top_expense_accounts(fact_m, dim).collect()]
+    top_exp = top_expense_accounts(cur.fact, cur.dim_accounts).collect()
+    exp = [(r["label"], float(r["abs_amount"])) for r in top_exp]
     exp_html = _svg_bars(exp, "Top Expense Accounts (Abs Value)")
 
     # DQ sample tables (first 200 rows, like the reference's head(200))
@@ -259,7 +252,7 @@ def build_dashboard(
         p = curated / name
         if not p.exists():
             return [], []
-        df = spark.read.csv(str(p), header=True)
+        df = spark.read.csv(str(p), header=True, **CSV_DIALECT)
         return [r.asDict() for r in df.limit(200).collect()], df.columns
 
     sum_rows, sum_cols = _csv_rows("dq_summary.csv")
@@ -271,8 +264,6 @@ def build_dashboard(
     # hydrates them with Plotly.newPlot(el, fig.data, fig.layout),
     # closing the reference's chart-library gap without taking the
     # dependency.
-    import json as _json
-
     figures = {
         "revenue_trend": plotly_line_figure(
             rev_series, "Revenue Trend (Top Entities)", "Revenue"
@@ -284,11 +275,9 @@ def build_dashboard(
             exp, "Top Expense Accounts (Abs Value)"
         ),
     }
-    figures_path = out.parent / "dashboard_figures.json"
-    figures_path.write_text(_json.dumps(figures, indent=1), encoding="utf-8")
     figures_block = (
         "<script type=\"application/json\" id=\"plotly-figures\">"
-        + _json.dumps(figures)
+        + json.dumps(figures)
         + "</script>"
     )
 
@@ -317,5 +306,7 @@ def build_dashboard(
   {figures_block}
 </body>
 </html>"""
-    out.write_text(page, encoding="utf-8")
+    with staged_commit(str(out.parent)) as stage:
+        Path(stage, "dashboard_figures.json").write_text(json.dumps(figures, indent=1), encoding="utf-8")
+        Path(stage, out.name).write_text(page, encoding="utf-8")
     return out

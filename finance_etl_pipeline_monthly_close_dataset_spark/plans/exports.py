@@ -4,38 +4,33 @@ Behavioral parity with ``/root/reference/scripts/export_bi_datasets.py``:
 month-filtered fact (+ literal month column), KPI with margin %
 columns in a stable order, DQ passthrough, one CSV per table plus a
 ``data_dictionary.txt`` describing the emitted schemas.
-
-The margin ratio uses Spark division semantics: Revenue == 0 yields
-null where pandas would produce ±inf (SURVEY.md §7.4 item 3).
 """
 
 from __future__ import annotations
 
+import csv
 import os
+import shutil
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.readers import read_parquet_or_empty
-from ..sources.writers import write_csv_single_file
-from .star import DATE_COL_CANDIDATES, filter_to_month, infer_month, pick_col
+from ..sources.writers import staged_commit, write_csv_single_file
+from .star import add_margin_cols, load_curated
 
 KPI_COLS = ["entity", "month", "Asset", "COGS", "Expense", "Revenue", "gross_profit", "operating_profit"]
 
 
-def add_margin_cols(kpi: DataFrame) -> DataFrame:
-    """gross/operating margin % of Revenue (reference lines 45-55)."""
-    out = kpi
-    if "Revenue" in out.columns:
-        rev = F.col("Revenue").cast("double")
-        if "gross_profit" in out.columns:
-            out = out.withColumn("gross_margin_pct", F.col("gross_profit").cast("double") / rev * 100)
-        if "operating_profit" in out.columns:
-            out = out.withColumn(
-                "operating_margin_pct", F.col("operating_profit").cast("double") / rev * 100
-            )
-    return out
+def copy_audit_csv(src: Path, dst: str) -> list[str]:
+    """Pass a DQ audit file through verbatim (a missing one becomes a
+    bare ``dataset`` header) and return its column names."""
+    if not src.exists():
+        Path(dst).write_text("dataset\n", encoding="utf-8")
+        return ["dataset"]
+    shutil.copyfile(src, dst)
+    with open(src, newline="", encoding="utf-8") as fh:
+        return next(csv.reader(fh), [])
 
 
 def export_bi_datasets(
@@ -44,39 +39,18 @@ def export_bi_datasets(
     month: str | None = None,
     out_dir: str | Path | None = None,
 ) -> Path:
-    """Curated layer -> 5 flat CSVs + data dictionary (reference
-    main(), lines 58-122)."""
-    curated = Path(curated_dir)
-    fact = read_parquet_or_empty(spark, str(curated / "fact_transactions.parquet"))
-    dim_accounts = read_parquet_or_empty(spark, str(curated / "dim_accounts.parquet"))
-    kpi = read_parquet_or_empty(spark, str(curated / "kpi_monthly.parquet"))
-
-    if "month" in kpi.columns:
-        kpi = kpi.withColumn("month", F.substring(F.col("month").cast("string"), 1, 7))
-
-    month = month or infer_month(kpi)
-    if not month:
-        raise SystemExit("Could not infer month. Provide month=YYYY-MM.")
+    """Curated layer -> 5 flat CSVs + data dictionary, published as one
+    set (reference main(), lines 58-122)."""
+    cur = load_curated(spark, curated_dir, month)
+    month = cur.month
     out = Path(out_dir) if out_dir else Path("data") / "bi" / month
-    os.makedirs(out, exist_ok=True)
 
-    # DQ audit files pass through verbatim (strings: no numeric reformat)
-    def _csv_or_empty(name: str) -> DataFrame:
-        p = curated / name
-        if p.exists():
-            return spark.read.csv(str(p), header=True)
-        return spark.createDataFrame([], "dataset string")
-
-    dq_ex = _csv_or_empty("dq_exceptions.csv")
-    dq_sum = _csv_or_empty("dq_summary.csv")
-
-    date_col = pick_col(fact, DATE_COL_CANDIDATES)
-    fact_m = filter_to_month(fact, date_col, month).withColumn("month", F.lit(month))
-    if date_col:
+    fact_m = cur.fact.withColumn("month", F.lit(month))
+    if cur.date_col:
         # committed goldens render the timestamp at date grain
-        fact_m = fact_m.withColumn(date_col, F.to_date(F.col(date_col)))
+        fact_m = fact_m.withColumn(cur.date_col, F.to_date(F.col(cur.date_col)))
 
-    kpi_m = add_margin_cols(kpi)
+    kpi_m = add_margin_cols(cur.kpi)
     if "month" in kpi_m.columns:
         kpi_m = kpi_m.filter(F.col("month") == F.lit(month))
     keep = [c for c in KPI_COLS if c in kpi_m.columns] + [
@@ -85,21 +59,21 @@ def export_bi_datasets(
     if keep:
         kpi_m = kpi_m.select(*keep)
 
-    order_fact = [c for c in (date_col, "entity", "source", "document_id") if c]
+    order_fact = [c for c in (cur.date_col, "entity", "source", "document_id") if c]
     tables = {
         "fact_transactions": fact_m.orderBy(*order_fact) if order_fact else fact_m,
         # passthrough keeps the chart-of-accounts file order (the
         # reference writes the curated dim unsorted)
-        "dim_accounts": dim_accounts,
+        "dim_accounts": cur.dim_accounts,
         "kpi_monthly": kpi_m.orderBy("entity") if "entity" in kpi_m.columns else kpi_m,
-        "dq_summary": dq_sum,
-        "dq_exceptions": dq_ex,
     }
-    for name, df in tables.items():
-        write_csv_single_file(df, str(out / f"{name}.csv"))
-
-    dd = [f"month={month}"]
-    for name, df in tables.items():
-        dd.append(f"{name}.csv columns={df.columns}")
-    (out / "data_dictionary.txt").write_text("\n".join(dd), encoding="utf-8")
+    with staged_commit(str(out)) as stage:
+        columns = {}
+        for name, df in tables.items():
+            write_csv_single_file(df, os.path.join(stage, f"{name}.csv"))
+            columns[name] = df.columns
+        for name in ("dq_summary", "dq_exceptions"):
+            columns[name] = copy_audit_csv(Path(curated_dir) / f"{name}.csv", os.path.join(stage, f"{name}.csv"))
+        dd = [f"month={month}"] + [f"{name}.csv columns={cols}" for name, cols in columns.items()]
+        Path(stage, "data_dictionary.txt").write_text("\n".join(dd), encoding="utf-8")
     return out

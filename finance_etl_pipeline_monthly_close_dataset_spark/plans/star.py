@@ -15,6 +15,11 @@ re-expressed as DataFrame plans:
 * ``_pick_col`` duck-typing (lines 18-23) is reproduced against
   ``df.columns`` so the exporter tolerates curated-schema drift.
 
+The three exporters (this one, ``exports`` and ``dashboard``) read the
+curated layer through ``load_curated`` and publish their files as one
+set through ``writers.staged_commit``: a crash leaves the previous
+export or the new one, never a mix.
+
 At 100 TB the facts stay partitioned end-to-end: key attachment is
 broadcast joins against tiny dims; only the final BI-tool CSV sink
 coalesces (single-file semantics is the product contract, S4).
@@ -24,13 +29,14 @@ from __future__ import annotations
 
 import os
 from pathlib import Path
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.readers import read_parquet_or_empty
-from ..sources.writers import write_csv_single_file
+from ..sources.writers import staged_commit, write_csv_single_file
 
 DATE_COL_CANDIDATES = ["tx_date", "date", "transaction_date", "posting_date", "invoice_date"]
 
@@ -52,12 +58,51 @@ def infer_month(kpi: DataFrame) -> str | None:
     return row["m"] if row and row["m"] else None
 
 
-def filter_to_month(df: DataFrame, date_col: str | None, month: str) -> DataFrame:
-    """Keep rows whose date formats to the target month (reference
-    _filter_to_month_by_date, lines 60-68)."""
-    if date_col is None or date_col not in df.columns:
-        return df
-    return df.filter(F.date_format(F.col(date_col), "yyyy-MM") == F.lit(month))
+class Curated(NamedTuple):
+    """The curated layer as the exporters read it."""
+
+    month: str
+    fact: DataFrame  # the month's rows only
+    date_col: str | None
+    dim_accounts: DataFrame
+    kpi: DataFrame  # every month, ``month`` as YYYY-MM
+
+
+def load_curated(spark: SparkSession, curated_dir: str | Path, month: str | None = None) -> Curated:
+    """Read the three curated tables (a missing one is empty), settle
+    the month -- the one asked for, else the KPI's latest -- and cut the
+    fact to it on whichever date column it carries (reference
+    _read_parquet, _infer_month and _filter_to_month_by_date)."""
+    curated = Path(curated_dir)
+    fact, dim_accounts, kpi = (
+        read_parquet_or_empty(spark, str(curated / f"{name}.parquet"))
+        for name in ("fact_transactions", "dim_accounts", "kpi_monthly")
+    )
+    if "month" in kpi.columns:
+        kpi = kpi.withColumn("month", F.substring(F.col("month").cast("string"), 1, 7))
+    month = month or infer_month(kpi)
+    if not month:
+        raise SystemExit("Could not infer month. Provide month=YYYY-MM.")
+    date_col = pick_col(fact, DATE_COL_CANDIDATES)
+    if date_col:
+        fact = fact.filter(F.date_format(F.col(date_col), "yyyy-MM") == F.lit(month))
+    return Curated(month, fact, date_col, dim_accounts, kpi)
+
+
+def add_margin_cols(kpi: DataFrame) -> DataFrame:
+    """gross/operating margin % of Revenue (reference
+    export_bi_datasets.py lines 45-55).  Spark division: Revenue == 0
+    yields null where pandas would produce ±inf (SURVEY.md §7.4 item 3)."""
+    out = kpi
+    if "Revenue" in out.columns:
+        rev = F.col("Revenue").cast("double")
+        if "gross_profit" in out.columns:
+            out = out.withColumn("gross_margin_pct", F.col("gross_profit").cast("double") / rev * 100)
+        if "operating_profit" in out.columns:
+            out = out.withColumn(
+                "operating_margin_pct", F.col("operating_profit").cast("double") / rev * 100
+            )
+    return out
 
 
 def build_dim_entity(fact: DataFrame, kpi: DataFrame) -> DataFrame:
@@ -223,27 +268,15 @@ KPI_MEASURES = [
 
 def build_fact_kpi_monthly(kpi: DataFrame, dim_entity: DataFrame, month: str) -> DataFrame:
     """Month-filtered KPI fact with surrogate entity key and margin %
-    (reference lines 259-319). Division by zero Revenue yields null
-    (Spark semantics; pandas would give ±inf -- SURVEY.md §7.4 item 3).
-    """
+    (reference lines 259-319)."""
     out = kpi
     if "month" in out.columns:
-        out = out.withColumn(
-            "month", F.substring(F.col("month").cast("string"), 1, 7)
-        ).filter(F.col("month") == F.lit(month))
-    out = (
+        out = out.filter(F.col("month") == F.lit(month))
+    out = add_margin_cols(
         out.withColumn("entity", F.col("entity").cast("string"))
         .join(F.broadcast(dim_entity.select("entity", "entity_key")), on="entity", how="left")
         .withColumn("month_key", F.lit(int(month.replace("-", "")) if month.replace("-", "").isdigit() else 0))
     )
-    if "Revenue" in out.columns:
-        rev = F.col("Revenue").cast("double")
-        if "gross_profit" in out.columns:
-            out = out.withColumn("gross_margin_pct", F.col("gross_profit").cast("double") / rev * 100)
-        if "operating_profit" in out.columns:
-            out = out.withColumn(
-                "operating_margin_pct", F.col("operating_profit").cast("double") / rev * 100
-            )
     keep = ["month_key", "entity_key"] + [c for c in KPI_MEASURES if c in out.columns]
     return out.select(*keep).orderBy("entity_key")
 
@@ -264,106 +297,30 @@ def export_star_schema(
     month: str | None = None,
     out_dir: str | Path | None = None,
 ) -> Path:
-    """Scan curated layer -> build 6 star tables -> single-file CSVs +
-    model notes (reference main(), lines 323-416)."""
-    curated = Path(curated_dir)
-    fact = read_parquet_or_empty(spark, str(curated / "fact_transactions.parquet"))
-    dim_accounts = read_parquet_or_empty(spark, str(curated / "dim_accounts.parquet"))
-    kpi = read_parquet_or_empty(spark, str(curated / "kpi_monthly.parquet"))
+    """Curated layer -> 6 star tables as single-file CSVs + model notes,
+    published as one set (reference main(), lines 323-416)."""
+    cur = load_curated(spark, curated_dir, month)
+    out = Path(out_dir) if out_dir else Path("data") / "bi_star" / cur.month
 
-    month = month or infer_month(kpi)
-    if not month:
-        raise SystemExit("Could not infer month. Provide month=YYYY-MM.")
-    out = Path(out_dir) if out_dir else Path("data") / "bi_star" / month
-    os.makedirs(out, exist_ok=True)
-
-    date_col = pick_col(fact, DATE_COL_CANDIDATES)
-    fact_m = filter_to_month(fact, date_col, month)
-
-    dim_entity = build_dim_entity(fact_m, kpi)
-    dim_account = build_dim_account(dim_accounts)
+    dim_entity = build_dim_entity(cur.fact, cur.kpi)
+    dim_account = build_dim_account(cur.dim_accounts)
     dim_date = (
-        build_dim_date(fact_m, date_col)
-        if date_col
+        build_dim_date(cur.fact, cur.date_col)
+        if cur.date_col
         else spark.createDataFrame([], "date_key int, date date")
     )
-    dim_month = build_dim_month(dim_date)
-    fact_gl = build_fact_gl(fact_m, dim_entity, dim_account, date_col)
-    fact_kpi = build_fact_kpi_monthly(kpi, dim_entity, month)
-
     tables = {
         "dim_date": dim_date,
-        "dim_month": dim_month,
+        "dim_month": build_dim_month(dim_date),
         "dim_entity": dim_entity,
         "dim_account": dim_account,
-        "fact_gl": fact_gl,
-        "fact_kpi_monthly": fact_kpi,
+        "fact_gl": build_fact_gl(cur.fact, dim_entity, dim_account, cur.date_col),
+        "fact_kpi_monthly": build_fact_kpi_monthly(cur.kpi, dim_entity, cur.month),
     }
-    for name, df in tables.items():
-        write_csv_single_file(df, str(out / f"{name}.csv"))
-
-    notes = [f"month={month}", "", MODEL_NOTES_RELATIONSHIPS, "Files:"]
+    notes = [f"month={cur.month}", "", MODEL_NOTES_RELATIONSHIPS, "Files:"]
     notes += [f"  - {name}.csv" for name in tables]
-    (out / "POWERBI_MODEL_NOTES.txt").write_text("\n".join(notes), encoding="utf-8")
+    with staged_commit(str(out)) as stage:
+        for name, df in tables.items():
+            write_csv_single_file(df, os.path.join(stage, f"{name}.csv"))
+        Path(stage, "POWERBI_MODEL_NOTES.txt").write_text("\n".join(notes), encoding="utf-8")
     return out
-
-
-def scd2_merge(
-    current: DataFrame,
-    updates: DataFrame,
-    key: str,
-    attrs: list[str],
-    effective_date: str,
-) -> DataFrame:
-    """Slowly-changing-dimension (type 2) merge: close changed rows,
-    append new versions, keep history.
-
-    ``current`` carries (key, attrs..., valid_from, valid_to,
-    is_current); ``updates`` carries (key, attrs...). Rows whose attrs
-    changed get valid_to = effective_date and a new open row; brand-new
-    keys get an open row; unchanged rows pass through. Pure DataFrame
-    ops: one join on the dimension key (dims are small -- broadcast
-    eligible), no merge/upsert storage dependency; writers overwrite
-    the dimension snapshot, which at dimension scale is the cheap and
-    idempotent choice.
-    """
-    eff = F.lit(effective_date).cast("date")
-    cur_open = current.filter(F.col("is_current"))
-    cur_closed = current.filter(~F.col("is_current"))
-
-    changed_cond = None
-    for a in attrs:
-        neq = ~(F.col(f"cur.{a}").eqNullSafe(F.col(f"upd.{a}")))
-        changed_cond = neq if changed_cond is None else (changed_cond | neq)
-
-    joined = cur_open.alias("cur").join(
-        updates.alias("upd"), on=F.col(f"cur.{key}") == F.col(f"upd.{key}"), how="full"
-    )
-
-    unchanged = joined.filter(
-        F.col(f"upd.{key}").isNull() | (F.col(f"cur.{key}").isNotNull() & ~changed_cond)
-    ).select("cur.*")
-
-    closed = joined.filter(F.col(f"cur.{key}").isNotNull() & F.col(f"upd.{key}").isNotNull() & changed_cond).select(
-        *[F.col(f"cur.{c}") for c in [key, *attrs, "valid_from"]],
-        eff.alias("valid_to"),
-        F.lit(False).alias("is_current"),
-    )
-
-    opened = joined.filter(
-        F.col(f"upd.{key}").isNotNull()
-        & (F.col(f"cur.{key}").isNull() | changed_cond)
-    ).select(
-        *[F.col(f"upd.{c}") for c in [key, *attrs]],
-        eff.alias("valid_from"),
-        F.lit(None).cast("date").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-    )
-
-    cols = [key, *attrs, "valid_from", "valid_to", "is_current"]
-    return (
-        cur_closed.select(*cols)
-        .unionByName(unchanged.select(*cols))
-        .unionByName(closed)
-        .unionByName(opened)
-    )

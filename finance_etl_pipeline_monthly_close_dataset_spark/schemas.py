@@ -96,22 +96,6 @@ RAW_SCHEMAS: dict[str, T.StructType] = {
 
 # --- curated layer ----------------------------------------------------------
 
-FACT_TRANSACTIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("txn_id", T.StringType(), True),
-        T.StructField("date", T.TimestampType(), True),
-        T.StructField("entity", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("document_id", T.StringType(), True),
-        T.StructField("account_code", T.StringType(), True),
-        T.StructField("currency", T.StringType(), True),
-        T.StructField("amount", T.DoubleType(), True),
-        T.StructField("rate", T.DoubleType(), True),
-        T.StructField("amount_base", T.DoubleType(), True),
-        T.StructField("description", T.StringType(), True),
-    ]
-)
-
 DQ_EXCEPTIONS_SCHEMA = T.StructType(
     [
         T.StructField("dataset", T.StringType(), True),

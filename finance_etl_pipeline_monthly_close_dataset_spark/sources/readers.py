@@ -30,6 +30,12 @@ ROW_ID_COL = "_row_id"
 # cell (~3x the parse cost).
 TIMESTAMP_FORMAT = "yyyy-MM-dd[ HH:mm:ss]"
 
+# RFC 4180 quoting for every CSV the package reads or writes: a quote
+# inside a quoted field is doubled (``"quoted, ""desc"""``), as pandas
+# and the BI tools write it.  Spark's default escape is a backslash,
+# which leaves a doubled quote in the value.
+CSV_DIALECT = {"escape": '"'}
+
 
 def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
     """Driver-held ``rows`` (a summary, a pivot) as a DataFrame, shipped
@@ -52,7 +58,7 @@ def read_csv(
     to match the reference's ``pd.read_csv`` behavior."""
     if not os.path.exists(path):
         raise FileNotFoundError(f"Missing input file: {path}")
-    df = spark.read.csv(path, header=True, schema=schema, timestampFormat=TIMESTAMP_FORMAT)
+    df = spark.read.csv(path, header=True, schema=schema, timestampFormat=TIMESTAMP_FORMAT, **CSV_DIALECT)
     if with_row_id:
         df = df.withColumn(ROW_ID_COL, F.monotonically_increasing_id())
     return df
@@ -85,7 +91,7 @@ def read_csv_raw(
     if not os.path.exists(path):
         raise FileNotFoundError(f"Missing input file: {path}")
     str_schema = T.StructType([T.StructField(f.name, T.StringType(), True) for f in schema.fields])
-    df = spark.read.csv(path, header=True, schema=str_schema)
+    df = spark.read.csv(path, header=True, schema=str_schema, **CSV_DIALECT)
     if with_row_id:
         df = df.withColumn(ROW_ID_COL, F.monotonically_increasing_id())
     return df

@@ -10,11 +10,14 @@ use it for fact-scale data; it is gated to the BI export layer only.
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import os
 import shutil
 
 from pyspark.sql import DataFrame
+
+from .readers import CSV_DIALECT
 
 
 def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
@@ -113,6 +116,23 @@ def recover_commit(target: str) -> None:
     shutil.rmtree(os.path.join(target, STAGING), ignore_errors=True)
 
 
+@contextlib.contextmanager
+def staged_commit(target: str):
+    """Yield a fresh ``target/_staging`` to write a set of outputs into,
+    then publish it with ``commit_dir``.  An earlier writer's crash is
+    repaired first (``recover_commit``); an error before the commit
+    removes the stage, so ``target`` keeps the previous set."""
+    os.makedirs(target, exist_ok=True)
+    recover_commit(target)
+    stage = os.path.join(target, STAGING)
+    os.makedirs(stage)
+    try:
+        yield stage
+        commit_dir(stage, target)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
 def write_csv_single_file(df: DataFrame, path: str) -> None:
     """Write ``df`` as a single CSV file at ``path`` (with header).
 
@@ -125,7 +145,7 @@ def write_csv_single_file(df: DataFrame, path: str) -> None:
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     tmp = path + "._spark_tmp"
     try:
-        df.coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)
+        df.coalesce(1).write.mode("overwrite").options(header="true", **CSV_DIALECT).csv(tmp)
         part_files = glob.glob(os.path.join(tmp, "part-*.csv"))
         if not part_files:
             raise RuntimeError(f"No part file produced for {path}")

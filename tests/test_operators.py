@@ -765,13 +765,18 @@ def test_scd2_merge_versions_changed_keys(spark):
         scd2_merge,
     )
 
+    # a closed version of a changed key: history passes through untouched
+    history = spark.createDataFrame(
+        [(2, "BRONZE", "EU", "2019-01-01", "2020-01-01", False)],
+        "k int, tier string, zone string, effective_from string, effective_to string, is_current boolean",
+    )
     dim = scd2_initial(
         spark.createDataFrame(
             [(1, "GOLD", "EU"), (2, "SILVER", "EU"), (3, "GOLD", "US")],
             "k int, tier string, zone string",
         ),
         "2020-01-01",
-    )
+    ).unionByName(history)
     updates = spark.createDataFrame(
         [(2, "GOLD", "EU"),      # tier changed -> close + open
          (3, "GOLD", "US"),      # identical -> carried
@@ -783,6 +788,7 @@ def test_scd2_merge_versions_changed_keys(spark):
             for r in out.collect()}
     assert rows == {
         (1, "GOLD", "2020-01-01", None, True),          # untouched
+        (2, "BRONZE", "2019-01-01", "2020-01-01", False),  # history
         (2, "SILVER", "2020-01-01", "2020-06-01", False),
         (2, "GOLD", "2020-06-01", None, True),
         (3, "GOLD", "2020-01-01", None, True),          # no-op update

@@ -5,6 +5,10 @@ tolerance, plus DQ gate behavior (SURVEY.md §5)."""
 
 from __future__ import annotations
 
+import contextlib
+import csv
+import itertools
+import os
 import shutil
 from pathlib import Path
 
@@ -13,6 +17,8 @@ from pyspark.sql import functions as F
 
 import finance_etl_pipeline_monthly_close_dataset_spark.plans.pipeline as pl
 from finance_etl_pipeline_monthly_close_dataset_spark.config import Settings
+from finance_etl_pipeline_monthly_close_dataset_spark.plans import exports, star
+from finance_etl_pipeline_monthly_close_dataset_spark.plans.dashboard import build_dashboard
 from finance_etl_pipeline_monthly_close_dataset_spark.plans.pipeline import (
     DataQualityGateError,
     run_month,
@@ -21,6 +27,8 @@ from finance_etl_pipeline_monthly_close_dataset_spark.sample_data import (
     generate_synthetic_raw,
     write_chart_of_accounts,
 )
+from finance_etl_pipeline_monthly_close_dataset_spark.sources.raw_lake import ingest_raw_to_lake
+from finance_etl_pipeline_monthly_close_dataset_spark.sources.writers import COMMIT, STAGING
 
 GOLDEN_KPI = {
     # entity -> (Revenue, gross_profit, operating_profit), reference
@@ -285,6 +293,134 @@ def test_star_export_tolerates_schema_drift(outputs, tmp_path, spark):
     assert gl.filter("date_key is null").count() == 0
 
 
+GOLDEN_EXPORTS = Path(__file__).parent / "golden" / "export_seed42_2025-12"
+
+
+def _export(kind: str, spark, curated: Path, out: Path) -> Path:
+    if kind == "dashboard":
+        build_dashboard(spark, curated, "2025-12", out / "dashboard.html")
+        return out
+    return {"bi": exports.export_bi_datasets, "star": star.export_star_schema}[kind](spark, curated, "2025-12", out)
+
+
+def _tree(d: Path) -> dict[str, bytes | None]:
+    """Every file under ``d`` with its bytes, every directory as None."""
+    return {str(p.relative_to(d)): p.read_bytes() if p.is_file() else None for p in d.rglob("*")}
+
+
+def _fail_write(monkeypatch, kind: str, n: int) -> None:
+    """Make the ``n``-th file write of a ``kind`` export raise."""
+    mod = {"bi": exports, "star": star}.get(kind, Path)
+    name = "write_text" if mod is Path else "write_csv_single_file"
+    write, calls = getattr(mod, name), itertools.count(1)
+
+    def failing(*args, **kwargs):
+        if next(calls) == n:
+            raise OSError("injected fault")
+        return write(*args, **kwargs)
+
+    monkeypatch.setattr(mod, name, failing)
+
+
+@pytest.fixture(scope="module")
+def other_curated(outputs, tmp_path_factory):
+    """A curated layer each export file of which differs from the
+    seed-42 month's: TLM only, first half of the month."""
+    spark, _, root = outputs
+    other = shutil.copytree(root / "curated", tmp_path_factory.mktemp("other") / "curated")
+    tlm = F.col("entity") == "TLM"
+    for name, keep in (("fact_transactions", tlm & (F.dayofmonth("date") <= 15)), ("kpi_monthly", tlm)):
+        df = spark.read.parquet(str(root / "curated" / f"{name}.parquet")).filter(keep)
+        df.write.mode("overwrite").parquet(str(other / f"{name}.parquet"))
+    return other
+
+
+@pytest.mark.parametrize("kind", ["bi", "star"])
+def test_exports_match_committed_bytes(outputs, tmp_path, kind):
+    """``export-bi`` and ``export-star`` of the seed-42 month give the
+    files under ``tests/golden`` byte for byte, and no others."""
+    spark, _, root = outputs
+    assert _tree(_export(kind, spark, root / "curated", tmp_path)) == _tree(GOLDEN_EXPORTS / kind)
+
+
+@pytest.mark.parametrize("kind", ["bi", "star", "dashboard"])
+def test_export_fault_between_writes_keeps_the_previous_export(outputs, other_curated, tmp_path, monkeypatch, kind):
+    """An export that raises between two of its file writes leaves the
+    output directory byte-identical to the previous export."""
+    spark, _, root = outputs
+    before = _tree(_export(kind, spark, root / "curated", tmp_path))
+    _fail_write(monkeypatch, kind, 2)
+    with pytest.raises(OSError, match="injected fault"):
+        _export(kind, spark, other_curated, tmp_path)
+    assert _tree(tmp_path) == before and STAGING not in before
+
+
+@pytest.mark.parametrize("kind", ["bi", "star"])
+def test_next_export_finishes_a_commit_that_crashed(outputs, other_curated, tmp_path, monkeypatch, kind):
+    """A crash after the commit point, two files moved into place and
+    the rest still in ``_commit``, is rolled forward by the next export
+    before it writes anything: even when that export then fails at its
+    first write, the directory equals a clean export."""
+    spark, _, root = outputs
+    clean = _tree(_export(kind, spark, other_curated, tmp_path / "clean"))
+    out = _export(kind, spark, root / "curated", tmp_path / "out")
+    replace, moves = os.replace, itertools.count(1)
+
+    def crash_at_third_move(src, dst):
+        if f"{os.sep}{COMMIT}{os.sep}" in str(src) and next(moves) == 3:
+            raise OSError("injected crash")
+        return replace(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash_at_third_move)
+        with pytest.raises(OSError, match="injected crash"):
+            _export(kind, spark, other_curated, out)
+    assert (out / COMMIT).is_dir()
+    _fail_write(monkeypatch, kind, 1)
+    with pytest.raises(OSError, match="injected fault"):
+        _export(kind, spark, root / "curated", out)
+    assert _tree(out) == clean
+
+
+def test_doubled_quotes_survive_the_close_and_export_bi(spark, tmp_path):
+    """RFC 4180: a doubled quote inside a quoted field is one quote.  A
+    sales description and a currency carrying one reach the fact, the
+    DQ exceptions and the ``export-bi`` files as the text pandas reads,
+    through the CSV close and the lake-fed close alike."""
+    generate_synthetic_raw(tmp_path / "raw", month="2025-12", seed=42)
+    write_chart_of_accounts(tmp_path / "ref")
+    lines = (tmp_path / "raw" / "sales.csv").read_text().splitlines()
+    first = lines[1].split(",")
+    lines[1] = ",".join(first[:-1] + ['"quoted, ""desc"""'])
+    bad = '2025-12-10,TLM,INV-QUOTE,40000001,"X,""Y",5.0,quoted currency'
+    raws = [tmp_path / "raw_desc", tmp_path / "raw_ccy"]  # a clean close, then a gate failure over it
+    for raw, extra in zip(raws, ([], [bad])):
+        shutil.copytree(tmp_path / "raw", raw)
+        (raw / "sales.csv").write_text("\n".join(lines + extra) + "\n")
+
+    def rows(path: Path) -> list[dict]:
+        with open(path, newline="") as fh:
+            return list(csv.DictReader(fh))
+
+    for mode in ("csv", "lake"):
+        curated = tmp_path / f"curated_{mode}"
+        for raw in raws:
+            source = {"raw_dir": raw}
+            if mode == "lake":
+                ingest_raw_to_lake(spark, "2025-12", raw, tmp_path / "lake")
+                source = {"raw_dir": None, "raw_lake_dir": tmp_path / "lake"}
+            with pytest.raises(DataQualityGateError) if raw == raws[1] else contextlib.nullcontext():
+                run_month(spark, Settings(), month="2025-12", curated_dir=curated,
+                          reference_dir=tmp_path / "ref", fail_on="ERROR", **source)
+        bi = exports.export_bi_datasets(spark, curated, "2025-12", tmp_path / f"bi_{mode}")
+        fact = spark.read.parquet(str(curated / "fact_transactions.parquet")).filter(F.col("document_id") == first[2])
+        want = ['quoted, "desc"']
+        assert [r["description"] for r in fact.collect()] == want, mode
+        assert [r["description"] for r in rows(bi / "fact_transactions.csv") if r["document_id"] == first[2]] == want
+        assert ("currency", 'X,"Y') in {(r["column"], r["failure_case"]) for r in rows(curated / "dq_exceptions.csv")}
+        assert (bi / "dq_exceptions.csv").read_bytes() == (curated / "dq_exceptions.csv").read_bytes()
+
+
 def test_infer_month_from_kpi(outputs, spark):
     _, paths, _ = outputs
     from finance_etl_pipeline_monthly_close_dataset_spark.plans.star import infer_month
@@ -374,39 +510,6 @@ def test_two_month_lifecycle_with_lake(spark, tmp_path):
     assert plan_has_month_partition_filter(plan)
     files = [r[0] for r in pruned.select(F.input_file_name()).distinct().collect()]
     assert files and all("month=2025-12" in f for f in files)
-
-
-def test_scd2_merge(spark):
-    import datetime as dt
-
-    from finance_etl_pipeline_monthly_close_dataset_spark.plans.star import scd2_merge
-
-    d0 = dt.date(2025, 11, 1)
-    current = spark.createDataFrame(
-        [
-            ("TLM", "Dar", d0, None, True),
-            ("UPE", "Mwanza", d0, None, True),
-            ("OLD", "Gone", dt.date(2025, 1, 1), d0, False),  # history row
-        ],
-        "entity string, city string, valid_from date, valid_to date, is_current boolean",
-    )
-    updates = spark.createDataFrame(
-        [("TLM", "Dodoma"), ("UPE", "Mwanza"), ("NEW", "Arusha")],
-        "entity string, city string",
-    )
-    out = scd2_merge(current, updates, key="entity", attrs=["city"], effective_date="2025-12-01")
-    rows = {(r["entity"], r["is_current"]): r for r in out.collect()}
-    assert out.count() == 5
-    # changed: old TLM row closed, new open row
-    assert rows[("TLM", False)]["city"] == "Dar"
-    assert str(rows[("TLM", False)]["valid_to"]) == "2025-12-01"
-    assert rows[("TLM", True)]["city"] == "Dodoma"
-    # unchanged passes through open
-    assert rows[("UPE", True)]["city"] == "Mwanza" and rows[("UPE", True)]["valid_to"] is None
-    # new key opens
-    assert rows[("NEW", True)]["city"] == "Arusha"
-    # history untouched
-    assert rows[("OLD", False)]["city"] == "Gone"
 
 
 def test_other_seed_month_passes_dq(spark, tmp_path):

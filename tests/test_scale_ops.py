@@ -97,22 +97,6 @@ def test_month_partitioned_lake_prunes_and_upserts(spark, tmp_path):
     assert "PartitionFilters: [isnotnull(month" in plan
 
 
-def test_scd2_merge_is_idempotent(spark):
-    import datetime as dt
-
-    from finance_etl_pipeline_monthly_close_dataset_spark.plans.star import scd2_merge
-
-    current = spark.createDataFrame(
-        [("TLM", "Dar", dt.date(2025, 11, 1), None, True)],
-        "entity string, city string, valid_from date, valid_to date, is_current boolean",
-    )
-    updates = spark.createDataFrame([("TLM", "Dodoma")], "entity string, city string")
-    once = scd2_merge(current, updates, "entity", ["city"], "2025-12-01")
-    twice = scd2_merge(once, updates, "entity", ["city"], "2025-12-02")
-    # second merge with identical attrs is a no-op
-    assert sorted(map(tuple, once.collect())) == sorted(map(tuple, twice.collect()))
-
-
 def test_asof_empty_right_keeps_all_left(spark):
     import datetime as dt
 
